@@ -1,47 +1,43 @@
-"""Driver-local rows -> DataFrame without the default-parallelism fan-out.
+"""Driver-local rows -> DataFrame planned as a JVM ``LocalRelation``.
 
-``SparkSession.createDataFrame(local_rows, schema)`` parallelizes the
-rows into ``defaultParallelism`` slices — on local[32] every report
-frame, audit row and offset table becomes a 32-partition RDD of which 31
-are empty. Each downstream action then schedules 32 tasks (and a write
-commits 32 files' worth of task commits) to move a handful of rows:
-measured 0.39 s to append ONE audit row vs 0.23 s with a single slice
-(optimization guide §2.2 — near-empty partitions are pure task-launch
-overhead). ``coalesce(1)`` is NOT the fix: it evaluates all 32 pickled
-parent partitions sequentially inside one task, each paying a Python
-worker round trip (~4 s measured for the same single-row write).
+``local_frame(spark, rows, schema)`` returns a DataFrame whose values,
+schema and row order equal ``spark.createDataFrame(rows, schema)``, but
+whose plan is a ``LocalRelation`` built from an Arrow table instead of a
+``LogicalRDD`` of pickled rows. Actions on it therefore start no Python
+worker task: the rows live in the plan, and ``LocalTableScanExec`` splits
+them into ``min(len(rows), defaultParallelism)`` partitions.
 
-``local_frame`` parallelizes with an explicit slice count sized to the
-data (1 for the report/audit frames this engine builds; callers with
-genuinely large driver-side payloads pass ``rows_per_slice`` to fan out
-proportionally). Values, schema and row order are exactly those of the
-plain ``createDataFrame`` call — only the partitioning changes.
+Every value first goes through its schema field's ``toInternal`` — the
+conversion ``createDataFrame(rows, schema)`` applies — so a naive
+``datetime`` means the same instant on both paths (the driver's local
+zone), not the session time zone the Arrow reader would otherwise assume.
 """
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 
-def local_frame(
-    spark: SparkSession,
-    rows,
-    schema,
-    rows_per_slice: int | None = None,
-) -> DataFrame:
-    """``spark.createDataFrame(rows, schema)`` with data-sized slicing.
+def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
+    """``spark.createDataFrame(rows, schema)`` as a ``LocalRelation``.
 
-    ``rows`` must be a materialized sequence (list/tuple), never a lazy
-    iterator — it is driver-local by definition here. With the default
-    ``rows_per_slice=None`` everything lands in ONE slice; passing e.g.
-    ``rows_per_slice=5000`` gives ``ceil(len(rows)/5000)`` slices for
-    payloads big enough to want parallel downstream work.
+    ``rows`` is a materialized sequence of tuples (or ``Row``s / dicts);
+    ``schema`` is a ``StructType`` or a DDL string for one. Types the Arrow
+    conversion cannot take raise here, on the driver, not in a task.
     """
-    rows = list(rows)
-    if rows_per_slice:
-        n = max(1, -(-len(rows) // rows_per_slice))
-    else:
-        n = 1
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, n), schema
+    struct = (
+        schema if isinstance(schema, T.StructType) else T.DataType.fromDDL(schema)
     )
+    if not isinstance(struct, T.StructType):
+        raise TypeError(f"local_frame needs a struct schema, got {schema!r}")
+    internal = [struct.toInternal(r) for r in rows]
+    arrow_schema = to_arrow_schema(struct)
+    columns = list(zip(*internal)) if internal else [()] * len(struct.fields)
+    table = pa.Table.from_arrays(
+        [pa.array(col, f.type) for col, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, struct)

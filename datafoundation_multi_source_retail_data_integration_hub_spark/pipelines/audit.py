@@ -67,9 +67,8 @@ def log_run(
     database: str = DEFAULT_DATABASE,
 ) -> None:
     """Append one audit row (reference: per-run bookkeeping rows in
-    ``etl_run_log``). Single-slice frame: the default createDataFrame
-    fan-out made every one-row audit append a defaultParallelism-task
-    write (functions/local.py)."""
+    ``etl_run_log``). The row is a ``local_frame``, so the append starts
+    no Python worker task."""
     from ..functions.local import local_frame
 
     row = local_frame(

@@ -54,11 +54,6 @@ PART_CFG = SCD2Config(
 _DIM_CACHE: dict[tuple, DataFrame] = {}
 
 
-def clear_dim_cache() -> None:
-    """Drop memoized dims (e.g. when the underlying corpus changes)."""
-    _DIM_CACHE.clear()
-
-
 def _initial_dim(
     spark: SparkSession, sf_dir: str, table: str, cfg: SCD2Config, date: str
 ) -> DataFrame:

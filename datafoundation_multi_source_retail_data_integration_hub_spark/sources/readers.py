@@ -90,10 +90,7 @@ def from_json_records(
     ``from_json`` with an explicit schema — engine-side parsing, identical
     code path whether records arrive from HTTP, a queue, or a file."""
     payload = [(json.dumps(r),) for r in records]
-    # data-sized slicing: REST-page-sized payloads stay one slice instead
-    # of defaultParallelism near-empty partitions; a genuinely large
-    # driver-side batch still fans out (functions/local.py)
-    raw = local_frame(spark, payload, "raw string", rows_per_slice=5000)
+    raw = local_frame(spark, payload, "raw string")
     df = raw.select(F.from_json("raw", schema).alias("rec")).select("rec.*")
     if source_tag is not None:
         df = df.withColumn("source", F.lit(source_tag))

@@ -280,7 +280,11 @@ def scaled_shuffle_partitions(
     per cluster) should be used instead of a scoped override anyway.
     ``cap`` bounds a pathological bytes estimate (a mispointed dir)
     so the override can never explode into tens of thousands of
-    near-empty shuffle partitions."""
+    near-empty shuffle partitions; when it binds, a warning names the
+    count the bytes asked for, because the capped count then puts more
+    than ``target_bytes`` into each partition."""
+    import warnings
+
     try:
         total = table_bytes(sf_dir, *names)
     except OSError as exc:
@@ -289,8 +293,6 @@ def scaled_shuffle_partitions(
     else:
         reason = "zero bytes on disk"
     if total <= 0:
-        import warnings
-
         warnings.warn(
             f"scaled_shuffle_partitions: {reason} for {names} under "
             f"{sf_dir!r} — falling back to the bench-scale floor "
@@ -300,7 +302,17 @@ def scaled_shuffle_partitions(
             stacklevel=2,
         )
         return floor
-    return min(cap, max(floor, -(-total // target_bytes)))
+    n = max(floor, -(-total // target_bytes))
+    if n > cap:
+        warnings.warn(
+            f"scaled_shuffle_partitions: {total} bytes for {names} under "
+            f"{sf_dir!r} ask for {n} partitions of {target_bytes} bytes — "
+            f"capped at {cap}, so each partition holds more than the target",
+            RuntimeWarning,
+            stacklevel=2,
+        )
+        return cap
+    return n
 
 
 def register_views(spark: SparkSession, sf_dir: str, *names: str) -> None:

@@ -499,33 +499,29 @@ def stream_user_session_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         batch.write.mode("append").parquet(out_dir)
 
     def start_run() -> None:
-        # Rescope the stateful stage's partition count for THIS query:
-        # unlike the store-commit-bound replays that set the family
-        # floor of 4, the per-partition work here is a Python
-        # applyInPandasWithState fold over real event volume, which
-        # parallelizes with instances up to the commit overhead.
-        # Measured at sf0.1 (interleaved min-of-3): 4.27 s at 4, 3.79
-        # at 8, 3.13 at 16, 3.78 at 32 — floor 16, bytes-derived
-        # beyond it like every scoped count (r14 pagerank treatment).
-        n = scaled_shuffle_partitions(
-            sf_dir, ("events",), 16, target_bytes=_STREAM_TARGET_BYTES
-        )
-        with scoped_confs(
-            spark, {"spark.sql.shuffle.partitions": str(n)}
-        ):
-            q = (
-                user_session_stats(
-                    spark.readStream.schema(schema).parquet(src),
-                    SESSION_GAP_SECONDS,
-                )
-                .writeStream.foreachBatch(sink)
-                .option("checkpointLocation", ckpt)
-                .outputMode("update")
-                .trigger(availableNow=True)
-                .start()
+        q = (
+            user_session_stats(
+                spark.readStream.schema(schema).parquet(src),
+                SESSION_GAP_SECONDS,
             )
-            _drain(q, "stateful session")
+            .writeStream.foreachBatch(sink)
+            .option("checkpointLocation", ckpt)
+            .outputMode("update")
+            .trigger(availableNow=True)
+            .start()
+        )
+        _drain(q, "stateful session")
 
+    # Each state-store partition is one Python worker task per micro-batch:
+    # the floor is one wave of them (at most 16, at most the core count),
+    # growing with input bytes beyond it. Both runs and the staged write
+    # share one scope, so no conf changes while a pool action runs.
+    n = scaled_shuffle_partitions(
+        sf_dir,
+        ("events",),
+        min(16, spark.sparkContext.defaultParallelism),
+        target_bytes=_STREAM_TARGET_BYTES,
+    )
     try:
         import os
         from concurrent.futures import ThreadPoolExecutor
@@ -535,18 +531,19 @@ def stream_user_session_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         # from run 1's state — stage it during run 1, rename in after
         # (staging dir is invisible to the running stream)
         stage = f"{base}/stage"
-        with ThreadPoolExecutor(max_workers=1) as pool:
-            f_b2 = pool.submit(
-                lambda: ev.filter(F.col("ts") >= split)
-                .write.mode("append")
-                .parquet(stage)
-            )
+        with scoped_confs(spark, {"spark.sql.shuffle.partitions": str(n)}):
+            with ThreadPoolExecutor(max_workers=1) as pool:
+                f_b2 = pool.submit(
+                    lambda: ev.filter(F.col("ts") >= split)
+                    .write.mode("append")
+                    .parquet(stage)
+                )
+                start_run()
+                f_b2.result()
+            for fn in os.listdir(stage):
+                if not fn.startswith(("_", ".")):
+                    os.rename(os.path.join(stage, fn), os.path.join(src, fn))
             start_run()
-            f_b2.result()
-        for fn in os.listdir(stage):
-            if not fn.startswith(("_", ".")):
-                os.rename(os.path.join(stage, fn), os.path.join(src, fn))
-        start_run()
         # every column is monotone per user (first_us constant once set),
         # so max/min folds recover each user's LAST emission
         out = (

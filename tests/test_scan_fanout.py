@@ -13,6 +13,7 @@ import os
 
 import pyarrow as pa
 import pyarrow.parquet as pq
+import pytest
 
 from datafoundation_multi_source_retail_data_integration_hub_spark.operators import (
     storage,
@@ -103,6 +104,19 @@ def test_scaled_shuffle_partitions_cap_bounds_pathological_estimates():
         SF_SMOKE, ("documents",), 4, target_bytes=1, cap=64
     )
     assert got == 64
+
+
+def test_scaled_shuffle_partitions_warns_when_cap_binds():
+    import warnings
+
+    with pytest.warns(RuntimeWarning, match="capped at 64"):
+        scaled_shuffle_partitions(
+            SF_SMOKE, ("documents",), 4, target_bytes=1, cap=64
+        )
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        # below the cap: no warning
+        assert scaled_shuffle_partitions(SF_SMOKE, ("documents",), 4) == 4
 
 
 def test_spread_memo_shares_one_persisted_frame(spark):

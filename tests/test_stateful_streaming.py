@@ -137,6 +137,63 @@ def test_session_stats_state_crosses_checkpointed_runs(spark):
         assert out[u]["last_us"] >= split_us
 
 
+def test_session_stats_runs_one_wave_of_state_stores(spark):
+    """The stateful stage holds at most one wave of state-store instances
+    (one Python worker task each per micro-batch): min(16, cores) at
+    fixture scale, with the oracle answer unchanged."""
+    import threading
+    import time
+
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    from datafoundation_multi_source_retail_data_integration_hub_spark.streaming.pipelines import (
+        STREAM_USER_SESSION_STATS_ORACLE,
+        stream_user_session_stats,
+    )
+
+    from .oracle import compare
+
+    class StateParts(StreamingQueryListener):
+        def __init__(self):
+            self.parts = []
+            self.lock = threading.Lock()
+
+        def onQueryStarted(self, event):
+            pass
+
+        def onQueryProgress(self, event):
+            ops = event.progress.stateOperators or []
+            if ops:
+                with self.lock:
+                    self.parts.append(ops[0].numShufflePartitions)
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            pass
+
+    listener = StateParts()
+    spark.streams.addListener(listener)
+    try:
+        compare(
+            spark,
+            SF_SMOKE,
+            stream_user_session_stats,
+            STREAM_USER_SESSION_STATS_ORACLE,
+            "stream_user_session_stats",
+        )
+        # progress events reach Python asynchronously; one per run at least
+        deadline = time.monotonic() + 30
+        while len(listener.parts) < 2 and time.monotonic() < deadline:
+            time.sleep(0.1)
+    finally:
+        spark.streams.removeListener(listener)
+    want = min(16, spark.sparkContext.defaultParallelism)
+    assert len(listener.parts) >= 2
+    assert set(listener.parts) == {want}
+
+
 # ---------------------------------------------------------------------------
 # Property: the cross-batch session fold equals the batch computation for
 # ANY time-ordered batch split (the streaming determinism contract), on
