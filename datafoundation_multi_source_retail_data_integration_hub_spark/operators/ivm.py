@@ -37,6 +37,7 @@ from datetime import datetime
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.concurrent import overlap
 from ..functions.parity import fixed_units_total, round_dp
 
 _STATE_DEC = "decimal(38,0)"
@@ -137,9 +138,9 @@ def apply_batch(
     deployment vacuums them the way Delta/Iceberg expire snapshots.
 
     ``precomputed_partial`` lets a caller overlap this batch's partial
-    aggregation with an earlier version's apply (optimization guide
-    §2.6 — the partials of different batches are independent even
-    though their MERGES are ordered). It must be exactly
+    aggregation with an earlier version's apply (the partials of
+    different batches are independent even though their merges are
+    ordered). It must be exactly
     ``state_partials(batch, cfg)``, materialized (localCheckpoint) —
     the guard below still runs first, so at-least-once redelivery
     semantics are unchanged."""
@@ -155,43 +156,39 @@ def apply_batch(
         partial = precomputed_partial
     else:
         partial = state_partials(batch, cfg).localCheckpoint(eager=True)
-    # §2.6 overlap: the audit row count reads the checkpointed partial,
-    # independently of the merge/write chain that also reads it — run it
-    # beside the state publish. log_run still lands strictly AFTER the
-    # state write (the audit marker must never precede the state it
-    # records), so the at-least-once crash-window analysis is unchanged.
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=1) as pool:
-        f_n = pool.submit(
-            lambda: partial.agg(F.sum(cfg.count_col)).first()[0]
-        )
-        if version > 0:
-            prev_table = state_table(table, version - 1)
-            if not W.table_exists(spark, prev_table, database=database):
-                # surface the versioned-state contract instead of a
-                # generic missing-table error: v{N} is derived from the
-                # immutable v{N-1}, so a vacuum policy that expires old
-                # versions (or a rebuilt state database) must keep at
-                # least the latest version or redelivered batches can no
-                # longer be applied
-                raise RuntimeError(
-                    f"ivm.apply_batch: previous state version "
-                    f"{prev_table!r} not found in database {database!r} "
-                    f"— version {version} is a pure function of version "
-                    f"{version - 1}, which must exist before it can be "
-                    "derived (was it vacuumed, or the state database "
-                    "rebuilt?)"
-                )
-            prev = W.read_table(spark, prev_table, database=database)
-            merged = merge_state(prev, partial, cfg)
-        else:
-            merged = partial
-        # no checkpoint needed on merged: the write target is
-        # v{version}, which the plan never reads (it reads the immutable
-        # v{version-1})
-        W.write_table(merged, state_table(table, version), database=database)
-        n = f_n.result()
+    if version > 0:
+        prev_table = state_table(table, version - 1)
+        if not W.table_exists(spark, prev_table, database=database):
+            # surface the versioned-state contract instead of a
+            # generic missing-table error: v{N} is derived from the
+            # immutable v{N-1}, so a vacuum policy that expires old
+            # versions (or a rebuilt state database) must keep at
+            # least the latest version or redelivered batches can no
+            # longer be applied
+            raise RuntimeError(
+                f"ivm.apply_batch: previous state version "
+                f"{prev_table!r} not found in database {database!r} "
+                f"— version {version} is a pure function of version "
+                f"{version - 1}, which must exist before it can be "
+                "derived (was it vacuumed, or the state database "
+                "rebuilt?)"
+            )
+        prev = W.read_table(spark, prev_table, database=database)
+        merged = merge_state(prev, partial, cfg)
+    else:
+        merged = partial
+    # the audit count reads the partial beside the state write; log_run
+    # still lands strictly after the write (the audit marker must never
+    # precede the state it records)
+    n, _ = overlap(
+        spark,
+        lambda: partial.agg(F.sum(cfg.count_col)).first()[0],
+        # no checkpoint needed on merged: the write target is v{version},
+        # which the plan never reads (it reads the immutable v{version-1})
+        lambda: W.write_table(
+            merged, state_table(table, version), database=database
+        ),
+    )
     log_run(
         spark,
         RunLogEntry(batch_id, table, int(n or 0), "success", ts, ts),

@@ -28,9 +28,12 @@ reproducible in the DuckDB oracle (``queries/vectors.py``).
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.concurrent import overlap
 from .clustering import (
     Centroids,
     centroid_literal_sql,
@@ -57,14 +60,10 @@ def train_codebooks(
     via ``clustering._FIT_CACHE`` — the ``m`` training-job groups run
     once per session instead of once per query invocation.
 
-    The ``m`` fits are INDEPENDENT, so they are submitted as concurrent
-    Spark jobs from a thread pool: each fit is a chain of tiny
-    jobs (seed scan + ``n_iter`` aggregate-collects) whose wall time is
-    dominated by fixed per-job scheduling cost, and Spark's scheduler
-    interleaves concurrent jobs across the executor cores — wall time is
-    ~max(fit) instead of sum(fit). Determinism is untouched: each
-    subspace trains on its own slice and lands in its own list slot."""
-    from concurrent.futures import ThreadPoolExecutor
+    The ``m`` fits are independent chains of tiny jobs (seed scan +
+    ``n_iter`` aggregate-collects), so they run through ``overlap``: wall
+    time is about max(fit) instead of sum(fit). Each subspace trains on
+    its own slice and lands in its own list slot."""
 
     def fit(s: int) -> Centroids:
         sub_df = prep.select(
@@ -83,8 +82,7 @@ def train_codebooks(
             train_mod=train_mod,
         )
 
-    with ThreadPoolExecutor(max_workers=m) as pool:
-        return list(pool.map(fit, range(m)))
+    return overlap(prep.sparkSession, *(partial(fit, s) for s in range(m)))
 
 
 def _bt(name: str) -> str:

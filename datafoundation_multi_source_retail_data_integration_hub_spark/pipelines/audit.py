@@ -18,6 +18,7 @@ from datetime import datetime
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.concurrent import overlap
 from ..sources import writers as W
 from ..sources.writers import DEFAULT_DATABASE, read_table, write_table
 
@@ -150,18 +151,10 @@ def logged_stream_sink(
     """
 
     def handle(batch: DataFrame, batch_id: int) -> None:
-        from concurrent.futures import ThreadPoolExecutor
-
         spark = batch.sparkSession
-        # §2.6: the audit row count is a read-only action over the same
-        # micro-batch the (idempotent) inner sink consumes — overlap the
-        # two jobs instead of chaining their scheduling floors. The
-        # count must still come from the BATCH (logged_write semantics),
-        # not from the sink's output.
-        with ThreadPoolExecutor(max_workers=1) as pool:
-            f_n = pool.submit(batch.count)
-            inner(batch, batch_id)
-            n = f_n.result()
+        # the audit row counts the batch itself (logged_write semantics),
+        # not the sink's output
+        n, _ = overlap(spark, batch.count, lambda: inner(batch, batch_id))
         run_id = f"{stream_id}#{batch_id}"
         if run_already_logged(spark, run_id, table, database):
             return

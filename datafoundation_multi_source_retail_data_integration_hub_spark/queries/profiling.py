@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.concurrent import overlap
 from ..functions.parity import (
     fixed_sum,
     fixed_sum_raw,
@@ -727,15 +728,8 @@ def _sketch_cube_rollups(spark: SparkSession, sf_dir: str, db: str) -> DataFrame
             _kll_rank_envelope_ok("__ksk", "p50", 0.5).alias("p50_ok"),
         )
 
-    # §2.6: the three rollup grains read the stored cells + the fact
-    # independently; one fused union plan paid a ~0.8 s single-threaded
-    # planning gap before any task ran (job timeline, r15) and chained
-    # the branches' stage tails. Checkpointing the branches from a pool
-    # overlaps planning AND execution across grains; the union of the
-    # checkpointed branches preserves the exact rows (A/B-equal,
-    # interleaved min-of-4 2.05 -> 1.62 s at sf0.1).
-    from concurrent.futures import ThreadPoolExecutor
-
+    # one checkpointed branch per grain, overlapped: a single fused
+    # union plan spent ~0.8 s planning on one thread before any task ran
     def per_type() -> DataFrame:
         return _checked(
             _merged(stored.groupBy("event_type")).join(
@@ -757,13 +751,8 @@ def _sketch_cube_rollups(spark: SparkSession, sf_dir: str, db: str) -> DataFrame
             _merged(stored.groupBy()).crossJoin(_exact([])), F.lit("ALL")
         ).localCheckpoint(eager=True)
 
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        f_t, f_d, f_a = (
-            pool.submit(per_type),
-            pool.submit(per_day),
-            pool.submit(overall),
-        )
-        return f_t.result().unionByName(f_d.result()).unionByName(f_a.result())
+    t, d, a = overlap(spark, per_type, per_day, overall)
+    return t.unionByName(d).unionByName(a)
 
 
 def events_sketch_cube(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -22,6 +22,7 @@ from ..operators.similarity import (
     sql_dot,
     sql_norm,
 )
+from ..functions.concurrent import overlap
 from ..functions.local import local_frame
 from ..sources.tables import load_table_spread, load_tables
 
@@ -855,8 +856,6 @@ def ann_quality_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     on the same corpus and query set. PQ scores every pair by design
     (the m-bytes-per-vector brute-force regime): its 'candidates' equal
     the full pair count; its win is bytes moved, not pairs skipped."""
-    from concurrent.futures import ThreadPoolExecutor
-
     from ..operators.similarity import exact_topk_per_query, ivf_scored, lsh_scored
 
     emb = _emb(spark, sf_dir)
@@ -869,33 +868,20 @@ def ann_quality_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb, queries, centroid_stride=IVF_STRIDE, nprobe=IVF_NPROBE
     ).persist()
     try:
-        # The report is a chain of ~12 independent COUNT actions; run
-        # sequentially each pays the full per-job scheduling floor
-        # (optimization guide §2.6: overlap independent jobs — the
-        # scheduler back-fills idle cores from the next job's tasks).
-        # Phase 1 materializes every shared frame. Concurrency safety
-        # comes from the BlockManager's block-level locking: several
-        # phase-1 actions touch emb's persisted cache at once (emb.count,
-        # queries.count, the brute-force thread — and with the r15 spread
-        # memo they share ONE cache), and each cached partition is
-        # computed by whichever task gets its write lock first while the
-        # others block then read — never computed twice, never torn.
-        # Phase 2 then reads only caches phase 1 fully materialized.
-        # Values are counts; ordering cannot change any result (equality
-        # with the sequential form is oracle- and A/B-pinned:
-        # 3.6 -> 2.2 s at sf0.1).
-        with ThreadPoolExecutor(max_workers=5) as pool:
-            f_n = pool.submit(emb.count)
-            f_nq = pool.submit(queries.count)
-            f_truth = pool.submit(
-                lambda: embedding_topk_bruteforce(spark, sf_dir)
-                .select("query_id", "neighbor_id")
-                .localCheckpoint(eager=True)
-            )
-            f_lsh_c = pool.submit(lsh.count)
-            f_ivf_c = pool.submit(ivf.count)
-            n, nq, truth = f_n.result(), f_nq.result(), f_truth.result()
-            lsh_count, ivf_count = f_lsh_c.result(), f_ivf_c.result()
+        # ~12 independent counts, overlapped in two phases. Phase 1
+        # materializes every shared frame (concurrent first reads of one
+        # persisted frame compute each block once, under the
+        # BlockManager's block lock); phase 2 reads only those caches.
+        n, nq, truth, lsh_count, ivf_count = overlap(
+            spark,
+            emb.count,
+            queries.count,
+            lambda: embedding_topk_bruteforce(spark, sf_dir)
+            .select("query_id", "neighbor_id")
+            .localCheckpoint(eager=True),
+            lsh.count,
+            ivf.count,
+        )
         full_pairs = nq * (n - 1)
 
         def hits(topk: DataFrame) -> int:
@@ -905,17 +891,18 @@ def ann_quality_report(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .count()
             )
 
-        with ThreadPoolExecutor(max_workers=4) as pool:
-            f_n_truth = pool.submit(truth.count)
-            f_h_lsh = pool.submit(lambda: hits(exact_topk_per_query(lsh, TOP_K)))
-            f_h_ivf = pool.submit(lambda: hits(exact_topk_per_query(ivf, TOP_K)))
-            f_h_pq = pool.submit(lambda: hits(embedding_ann_pq(spark, sf_dir)))
-            n_truth = f_n_truth.result()
-            rows = [
-                ("lsh", f_h_lsh.result(), lsh_count),
-                ("ivf", f_h_ivf.result(), ivf_count),
-                ("pq", f_h_pq.result(), full_pairs),
-            ]
+        n_truth, h_lsh, h_ivf, h_pq = overlap(
+            spark,
+            truth.count,
+            lambda: hits(exact_topk_per_query(lsh, TOP_K)),
+            lambda: hits(exact_topk_per_query(ivf, TOP_K)),
+            lambda: hits(embedding_ann_pq(spark, sf_dir)),
+        )
+        rows = [
+            ("lsh", h_lsh, lsh_count),
+            ("ivf", h_ivf, ivf_count),
+            ("pq", h_pq, full_pairs),
+        ]
     finally:
         lsh.unpersist()
         ivf.unpersist()

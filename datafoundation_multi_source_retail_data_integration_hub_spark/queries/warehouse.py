@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.concurrent import overlap
 from ..functions.dates import build_calendar, date_key
 from ..functions.local import local_frame
 from ..functions.parity import fixed_sum, round_dp, sql_round_dp, sql_stable_sum
@@ -386,22 +387,10 @@ def _scd2_partition_merge(spark: SparkSession, sf_dir: str, db: str) -> DataFram
     before = stored().localCheckpoint(eager=True)
     delta2.write.insertInto(name, overwrite=True)
     after = stored()
-    # §2.6 overlap: the multiset replay check and the result
-    # materialization both read the post-rewrite table and share nothing
-    # — run them concurrently instead of chaining two job floors. The
-    # checkpoint must still happen HERE (the caller drops the database),
-    # so the lit columns land lazily on the checkpointed rows.
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        # multiset equality in ONE job: both directed differences empty
-        f_ok = pool.submit(
-            lambda: after.exceptAll(before)
-            .union(before.exceptAll(after))
-            .isEmpty()
-        )
-        f_after = pool.submit(lambda: after.localCheckpoint(eager=True))
-        replay_ok, checkpointed = f_ok.result(), f_after.result()
+    # multiset equality in ONE job: both directed differences empty
+    replay_ok = after.exceptAll(before).union(before.exceptAll(after)).isEmpty()
+    # checkpointed here: the caller drops the database
+    checkpointed = after.localCheckpoint(eager=True)
     return checkpointed.withColumn(
         "untouched_partition_stable", F.lit(bool(untouched_ok))
     ).withColumn("replay_idempotent", F.lit(bool(replay_ok)))
@@ -661,7 +650,6 @@ def mart_ivm_fact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _mart_incremental_refresh(spark: SparkSession, sf_dir: str, db: str) -> DataFrame:
-    from concurrent.futures import ThreadPoolExecutor
     from datetime import datetime
 
     from ..operators import ivm
@@ -687,19 +675,15 @@ def _mart_incremental_refresh(spark: SparkSession, sf_dir: str, db: str) -> Data
 
     try:
         delta = fact.filter(F.col("__ok") % IVM_DELTA_MOD == 0)
-        # §2.6 overlap: the delta batch's PARTIAL aggregation is
-        # independent of the base batch's apply (only the MERGE into
-        # v1 is ordered after v0), so build it while the base version
-        # publishes — the concurrent first actions materialize the
-        # shared fact cache under BlockManager block-level locking
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            f_base = pool.submit(
-                apply, "base", fact.filter(F.col("__ok") % IVM_DELTA_MOD != 0), 0
-            )
-            f_dp = pool.submit(
-                lambda: ivm.state_partials(delta, cfg).localCheckpoint(eager=True)
-            )
-            base_ok, delta_partial = f_base.result(), f_dp.result()
+        # the delta's partial aggregation does not depend on v0 (only its
+        # merge into v1 does): build it while the base version publishes
+        base_ok, delta_partial = overlap(
+            spark,
+            lambda: apply(
+                "base", fact.filter(F.col("__ok") % IVM_DELTA_MOD != 0), 0
+            ),
+            lambda: ivm.state_partials(delta, cfg).localCheckpoint(eager=True),
+        )
         delta_ok = apply("delta-1", delta, 1, partial=delta_partial)
         # at-least-once redelivery of the SAME batch: guarded no-op
         replay_skipped = not apply("delta-1", delta, 1)
@@ -839,32 +823,25 @@ def _bucketed_join(spark: SparkSession, sf_dir: str, db: str) -> DataFrame:
     # repartition to n_buckets on the bucket key: bucket hash == shuffle
     # hash, so every bucket lands in exactly one task -> one file per
     # bucket (multi-file buckets would force a per-partition re-sort).
-    # §2.6: the two bucketed builds read different source tables and
-    # write different catalog tables — run them concurrently (the
-    # ensure_database inside each write is an idempotent IF NOT EXISTS).
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_o = pool.submit(
-            W.write_bucketed_table,
+    overlap(
+        spark,
+        lambda: W.write_bucketed_table(
             orders.repartition(N_BUCKETS, "o_orderkey"),
             "orders_bkt",
             ("o_orderkey",),
             N_BUCKETS,
             sort_cols=("o_orderkey",),
             database=db,
-        )
-        f_l = pool.submit(
-            W.write_bucketed_table,
+        ),
+        lambda: W.write_bucketed_table(
             li.repartition(N_BUCKETS, "l_orderkey"),
             "lineitem_bkt",
             ("l_orderkey",),
             N_BUCKETS,
             sort_cols=("l_orderkey",),
             database=db,
-        )
-        f_o.result()
-        f_l.result()
+        ),
+    )
     o_b = W.read_table(spark, "orders_bkt", db)
     l_b = W.read_table(spark, "lineitem_bkt", db)
     return l_b.hint("merge").join(
@@ -1289,26 +1266,19 @@ def fact_late_arriving_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .localCheckpoint(eager=True)
     )
-    # §2.6: both invariant checks read the checkpointed dims (and the
-    # fact) independently — overlap their job floors
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_stable = pool.submit(
-            lambda: dim2.select("c_custkey", "sk")
-            .exceptAll(dim1.select("c_custkey", "sk"))
-            .count()
-            == 0
-        )
-        f_uncorr = pool.submit(
-            lambda: orders.join(
-                dim2.where("inferred"),
-                F.col("o_custkey") == F.col("c_custkey"),
-                "left_semi",
-            ).count()
-            == 0
-        )
-        stable, uncorrected_with_facts = f_stable.result(), f_uncorr.result()
+    stable, uncorrected_with_facts = overlap(
+        spark,
+        lambda: dim2.select("c_custkey", "sk")
+        .exceptAll(dim1.select("c_custkey", "sk"))
+        .count()
+        == 0,
+        lambda: orders.join(
+            dim2.where("inferred"),
+            F.col("o_custkey") == F.col("c_custkey"),
+            "left_semi",
+        ).count()
+        == 0,
+    )
     return (
         orders.join(dim2, F.col("o_custkey") == F.col("c_custkey"))
         .groupBy(F.col("c_mktsegment").alias("segment"))
@@ -1369,23 +1339,15 @@ def federated_segment_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     url = f"jdbc:derby:{base}/db;create=true"
     try:
         dim = t["customer"].select("c_custkey", "c_mktsegment")
-        # §2.6: the partition-bounds probe reads the parquet dim, the
-        # staging write fills Derby — independent until read_jdbc needs
-        # both
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            f_w = pool.submit(
-                write_jdbc, dim, url, "stg_customer", properties=_DERBY_DRIVER
-            )
-            f_b = pool.submit(
-                lambda: dim.agg(
-                    F.min("c_custkey").alias("lo"),
-                    F.max("c_custkey").alias("hi"),
-                ).collect()[0]
-            )
-            f_w.result()
-            b = f_b.result()
+        _, b = overlap(
+            spark,
+            lambda: write_jdbc(
+                dim, url, "stg_customer", properties=_DERBY_DRIVER
+            ),
+            lambda: dim.agg(
+                F.min("c_custkey").alias("lo"), F.max("c_custkey").alias("hi")
+            ).collect()[0],
+        )
         cust = read_jdbc(
             spark,
             url,
@@ -1496,44 +1458,28 @@ def warehouse_key_erasure(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("o_custkey")
             .distinct()
         )
-        # §2.6 overlap: the pre-state census, the touched-bucket probe
-        # and the catalog location lookup all read the just-written
-        # table and share nothing — three job floors become one
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            f_before = pool.submit(
-                lambda: {
-                    r["bucket"]: r["n"]
-                    for r in stored.groupBy("bucket")
-                    .agg(F.count(F.lit(1)).alias("n"))
-                    .collect()
-                }
-            )
-            f_touched = pool.submit(
-                lambda: sorted(
-                    r["bucket"]
-                    for r in keys.select(
-                        (F.col("o_custkey") % ERASE_BUCKETS)
-                        .cast("int")
-                        .alias("bucket")
-                    )
-                    .distinct()
-                    .collect()
+        before, touched, loc = overlap(
+            spark,
+            lambda: {
+                r["bucket"]: r["n"]
+                for r in stored.groupBy("bucket")
+                .agg(F.count(F.lit(1)).alias("n"))
+                .collect()
+            },
+            lambda: sorted(
+                r["bucket"]
+                for r in keys.select(
+                    (F.col("o_custkey") % ERASE_BUCKETS).cast("int").alias("bucket")
                 )
-            )
-            f_loc = pool.submit(
-                lambda: [
-                    r["data_type"]
-                    for r in spark.sql(f"DESCRIBE FORMATTED {name}").collect()
-                    if r["col_name"].strip() == "Location"
-                ][0].removeprefix("file:")
-            )
-            before, touched, loc = (
-                f_before.result(),
-                f_touched.result(),
-                f_loc.result(),
-            )
+                .distinct()
+                .collect()
+            ),
+            lambda: [
+                r["data_type"]
+                for r in spark.sql(f"DESCRIBE FORMATTED {name}").collect()
+                if r["col_name"].strip() == "Location"
+            ][0].removeprefix("file:"),
+        )
         untouched = sorted(set(before) - set(touched))
 
         def inventory(buckets) -> set:
@@ -1577,33 +1523,21 @@ def warehouse_key_erasure(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
 
         after = spark.table(name)
-        # §2.6 again: the leftover-keys check, the untouched-files
-        # inventory (driver-side walk), and the post-state census all
-        # read the post-rewrite state independently
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            f_left = pool.submit(
-                lambda: after.where(F.col("o_custkey") % ERASE_MOD == 0).count()
-            )
+        leftover, intact, counts = overlap(
+            spark,
+            lambda: after.where(F.col("o_custkey") % ERASE_MOD == 0).count(),
             # vacuously true when every bucket was touched (possible at
             # larger SFs where the request list covers all residues);
             # tests/test_key_erasure.py asserts non-vacuity at the
             # oracle SF
-            f_intact = pool.submit(
-                lambda: inventory(untouched) == inv_before
-            )
-            f_counts = pool.submit(
-                lambda: {
-                    int(r["bucket"]): int(r["rows_after"])
-                    for r in after.groupBy("bucket")
-                    .agg(F.count(F.lit(1)).alias("rows_after"))
-                    .collect()
-                }
-            )
-            leftover, intact, counts = (
-                f_left.result(),
-                f_intact.result(),
-                f_counts.result(),
-            )
+            lambda: inventory(untouched) == inv_before,
+            lambda: {
+                int(r["bucket"]): int(r["rows_after"])
+                for r in after.groupBy("bucket")
+                .agg(F.count(F.lit(1)).alias("rows_after"))
+                .collect()
+            },
+        )
         # emit one row per ORIGINAL bucket: a fully-erased bucket is
         # absent from the table after the drop but the oracle (and the
         # erasure report a user expects) carries it with rows_after=0
@@ -1664,18 +1598,12 @@ def fact_layout_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     excluded from the engine-vs-engine gate set like the other
     write-path demos.
 
-    Concurrency (optimization guide §2.6): after ``domains``, the linear
-    and Z-order chains are fully independent — each writes its own
-    directory and reads only it — and within a chain the skipping
-    reports/band count share nothing but the finished write. Running the
-    two chains (and each chain's reports) from thread pools overlaps
-    their job tails instead of paying each job's scheduling floor
-    sequentially: interleaved A/B at sf0.1 min-of-4 read 2.39 -> 1.43 s
-    with bit-identical output (booleans and an exact count are
-    order-independent)."""
+    After ``domains`` the linear and Z-order chains are independent (each
+    writes and reads only its own directory), and within a chain the
+    reports and the band count share only the finished write, so both
+    levels run through ``overlap``."""
     import shutil
     import tempfile
-    from concurrent.futures import ThreadPoolExecutor
 
     from ..sources import layout
 
@@ -1704,39 +1632,28 @@ def fact_layout_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
             layout.write_range_clustered(
                 li, linear, ("l_partkey",), LAYOUT_N_FILES
             )
-            with ThreadPoolExecutor(max_workers=2) as p:
-                f_lin = p.submit(
-                    layout.file_skipping_report, spark, linear, sec_box
-                )
-                f_lead = p.submit(
-                    layout.file_skipping_report, spark, linear, lead_box
-                )
-                return f_lin.result(), f_lead.result()
+            return overlap(
+                spark,
+                lambda: layout.file_skipping_report(spark, linear, sec_box),
+                lambda: layout.file_skipping_report(spark, linear, lead_box),
+            )
 
         def zorder_chain():
             layout.write_zordered(
                 li, zordered, "l_partkey", "l_suppkey", LAYOUT_N_FILES, domains
             )
             (lo_b, hi_b) = sec_box["l_suppkey"]
-            with ThreadPoolExecutor(max_workers=2) as p:
-                f_z = p.submit(
-                    layout.file_skipping_report, spark, zordered, sec_box
-                )
-                f_band = p.submit(
-                    lambda: spark.read.parquet(zordered)
-                    .where(
-                        (F.col("l_suppkey") >= lo_b)
-                        & (F.col("l_suppkey") <= hi_b)
-                    )
-                    .count()
-                )
-                return f_z.result(), f_band.result()
+            return overlap(
+                spark,
+                lambda: layout.file_skipping_report(spark, zordered, sec_box),
+                lambda: spark.read.parquet(zordered)
+                .where((F.col("l_suppkey") >= lo_b) & (F.col("l_suppkey") <= hi_b))
+                .count(),
+            )
 
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            f_l = pool.submit(linear_chain)
-            f_zc = pool.submit(zorder_chain)
-            (lin_hit, total), (lead_hit, _) = f_l.result()
-            (z_hit, _), rows_in_band = f_zc.result()
+        ((lin_hit, total), (lead_hit, _)), ((z_hit, _), rows_in_band) = overlap(
+            spark, linear_chain, zorder_chain
+        )
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
     return local_frame(

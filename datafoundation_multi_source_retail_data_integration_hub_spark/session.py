@@ -17,6 +17,8 @@ from collections.abc import Iterator
 
 from pyspark.sql import SparkSession
 
+from .functions.concurrent import overlapping
+
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
@@ -73,19 +75,23 @@ def get_spark(
 @contextlib.contextmanager
 def scoped_confs(spark: SparkSession, confs: dict[str, str]) -> Iterator[None]:
     """Set session confs for the duration of a block, restoring each to
-    its prior value (or unsetting it) on exit. Catalyst reads confs at
-    OPTIMIZATION time, not DataFrame-construction time, so any plan that
-    depends on the scoped values must be *executed* (e.g. via
-    ``localCheckpoint(eager=True)``) inside the block.
+    its prior value (or unsetting it) on exit.
 
-    SINGLE-THREADED mutation by design: SQL confs are session-global, so
-    a block mutates state visible to every query on this SparkSession.
-    The grading driver and bench run queries sequentially; if execution
-    is ever parallelized, wrap scoped blocks in a lock (or give each
-    thread its own ``spark.newSession()``, which clones the conf map).
-    The §2.6 overlap pools inside individual queries are fine: they run
-    actions (conf READS at plan time) wholly within one scoped block on
-    one query's behalf and never set or unset a conf themselves."""
+    Catalyst reads confs at optimization time, not at DataFrame
+    construction, so a plan that depends on the scoped values must be
+    executed (e.g. ``localCheckpoint(eager=True)``) inside the block.
+
+    Confs are session-global. Entering raises ``RuntimeError`` while a
+    ``functions.concurrent.overlap`` runs on the same JVM session, so no
+    conf changes under a running thunk; enter the scope around the
+    overlap instead. Another session (``spark.newSession()``, a
+    ``foreachBatch`` handler's clone) has its own confs and is not
+    affected."""
+    if overlapping(spark):
+        raise RuntimeError(
+            "scoped_confs: an overlap() is running on this session; enter "
+            "the conf scope before the overlap starts, not inside a thunk"
+        )
     saved: dict[str, str | None] = {}
     for k, v in confs.items():
         try:

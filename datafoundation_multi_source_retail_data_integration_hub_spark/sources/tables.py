@@ -12,6 +12,7 @@ root).
 from __future__ import annotations
 
 import os
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -104,6 +105,9 @@ _FANOUT_MEMO: dict[tuple, int] = {}
 # is released between bench runs — never data across timed runs.
 _SPREAD_MEMO: dict[tuple, DataFrame] = {}
 _SPREAD_HOOKED = False
+# guards the check-then-set on both: overlap thunks may first-load the
+# same table at once
+_SPREAD_LOCK = threading.Lock()
 
 
 def scan_fanout(spark: SparkSession, sf_dir: str, name: str) -> int:
@@ -223,22 +227,22 @@ def load_table_spread(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     cached plan, so self-joins across two loads stay unambiguous while
     the cache lookup still hits.
     """
+    global _SPREAD_HOOKED
+    from ..operators.storage import on_release, persist_tracked
+
     df = load_table(spark, sf_dir, name)
     n = scan_fanout(spark, sf_dir, name)
     if not n:
         return df
     key = (spark.sparkContext.applicationId, sf_dir, name)
-    got = _SPREAD_MEMO.get(key)
-    if got is not None:
-        return got.toDF(*got.columns)
-    from ..operators.storage import on_release, persist_tracked
-
-    global _SPREAD_HOOKED
-    if not _SPREAD_HOOKED:
-        on_release(_SPREAD_MEMO.clear)
-        _SPREAD_HOOKED = True
-    spread = persist_tracked(df.repartition(n))
-    _SPREAD_MEMO[key] = spread
+    with _SPREAD_LOCK:
+        spread = _SPREAD_MEMO.get(key)
+        if spread is None:
+            if not _SPREAD_HOOKED:
+                on_release(_SPREAD_MEMO.clear)
+                _SPREAD_HOOKED = True
+            spread = persist_tracked(df.repartition(n))
+            _SPREAD_MEMO[key] = spread
     return spread.toDF(*spread.columns)
 
 

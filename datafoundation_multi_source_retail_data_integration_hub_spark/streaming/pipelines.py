@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions.concurrent import overlap
 from ..functions.parity import stable_sum, sql_stable_sum
 
 _SINK_COUNTER = itertools.count()
@@ -514,8 +515,7 @@ def stream_user_session_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # Each state-store partition is one Python worker task per micro-batch:
     # the floor is one wave of them (at most 16, at most the core count),
-    # growing with input bytes beyond it. Both runs and the staged write
-    # share one scope, so no conf changes while a pool action runs.
+    # growing with input bytes beyond it.
     n = scaled_shuffle_partitions(
         sf_dir,
         ("events",),
@@ -523,26 +523,10 @@ def stream_user_session_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         target_bytes=_STREAM_TARGET_BYTES,
     )
     try:
-        import os
-        from concurrent.futures import ThreadPoolExecutor
-
         ev.filter(F.col("ts") < split).write.mode("append").parquet(src)
-        # §2.6: the second time-slice derives from the source table, not
-        # from run 1's state — stage it during run 1, rename in after
-        # (staging dir is invisible to the running stream)
-        stage = f"{base}/stage"
         with scoped_confs(spark, {"spark.sql.shuffle.partitions": str(n)}):
-            with ThreadPoolExecutor(max_workers=1) as pool:
-                f_b2 = pool.submit(
-                    lambda: ev.filter(F.col("ts") >= split)
-                    .write.mode("append")
-                    .parquet(stage)
-                )
-                start_run()
-                f_b2.result()
-            for fn in os.listdir(stage):
-                if not fn.startswith(("_", ".")):
-                    os.rename(os.path.join(stage, fn), os.path.join(src, fn))
+            start_run()
+            ev.filter(F.col("ts") >= split).write.mode("append").parquet(src)
             start_run()
         # every column is monotone per user (first_us constant once set),
         # so max/min folds recover each user's LAST emission
@@ -749,37 +733,15 @@ def stream_mart_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
         _drain(q, "mart-refresh")
 
     try:
-        import os
-        from concurrent.futures import ThreadPoolExecutor
-
         base_feed = fact.filter(F.col("__ok") % IVM_DELTA_MOD != 0).drop("__ok")
         delta = fact.filter(F.col("__ok") % IVM_DELTA_MOD == 0).drop("__ok")
         base_feed.write.mode("append").parquet(src)
-        # the source schema is the feed frame's, nullable-relaxed the way
-        # a parquet read reports it — no extra read-back job
-        schema = T.StructType(
-            [T.StructField(f.name, f.dataType, True) for f in base_feed.schema]
-        )
-        # §2.6 overlap: the delta feed derives from the persisted fact,
-        # not from run 1's state — write it to a STAGING dir (invisible
-        # to the running stream) while run 1 replays, then move the part
-        # files in (per-file renames; UUID part names cannot collide)
-        stage = f"{base}/stage"
-        with ThreadPoolExecutor(max_workers=1) as pool:
-            f_delta = pool.submit(
-                lambda: delta.write.mode("append").parquet(stage)
-            )
-            run()
-            f_delta.result()
-        for fn in os.listdir(stage):
-            if not fn.startswith(("_", ".")):
-                os.rename(os.path.join(stage, fn), os.path.join(src, fn))
-        # same overlap for the replay batch's materialization: it reads
-        # the persisted fact, never run 2's state
-        with ThreadPoolExecutor(max_workers=1) as pool:
-            f_replay = pool.submit(lambda: delta.localCheckpoint(eager=True))
-            run()
-            replay_batch = f_replay.result()
+        # nullable the way a parquet read reports it, without a read-back job
+        schema = base_feed.schema.toNullable()
+        run()
+        delta.write.mode("append").parquet(src)
+        run()
+        replay_batch = delta.localCheckpoint(eager=True)
         # at-least-once redelivery of the final micro-batch: same stream
         # batch id, guard skips (apply_batch returns False)
         last = len(outcomes) - 1
@@ -868,29 +830,12 @@ def stream_cdc_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
         _drain(q, "cdc-compaction")
 
     try:
-        from concurrent.futures import ThreadPoolExecutor
-
         ev = load_tables(spark, sf_dir, "events")["events"]
         ev.filter(F.col("event_id") % 2 == 0).write.mode("append").parquet(src)
-        # feed frame's schema, nullable-relaxed as a parquet read reports
-        # it — no read-back job
-        schema = T.StructType(
-            [T.StructField(f.name, f.dataType, True) for f in ev.schema]
-        )
-        # §2.6: the odd-parity feed derives from the source table, not
-        # from run 1's state — stage it during run 1, rename in after
-        stage = f"{base}/stage"
-        with ThreadPoolExecutor(max_workers=1) as pool:
-            f_odd = pool.submit(
-                lambda: ev.filter(F.col("event_id") % 2 == 1)
-                .write.mode("append")
-                .parquet(stage)
-            )
-            run()
-            f_odd.result()
-        for fn in os.listdir(stage):
-            if not fn.startswith(("_", ".")):
-                os.rename(os.path.join(stage, fn), os.path.join(src, fn))
+        # nullable the way a parquet read reports it, without a read-back job
+        schema = ev.schema.toNullable()
+        run()
+        ev.filter(F.col("event_id") % 2 == 1).write.mode("append").parquet(src)
         run()
         latest = max(
             int(d[1:]) for d in os.listdir(f"{base}/state") if d[0] == "v"
@@ -1051,28 +996,18 @@ def stream_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 merged = (
                     store_hv.select("hv").union(pos.select("hv")).distinct()
                 )
-                # §2.6: the report and the store fold write DIFFERENT
-                # directories and share only the persisted pos (whose
-                # concurrent materialization is serialized per block by
-                # the BlockManager) — overlap the two write jobs. The
-                # crash window is unchanged: a torn store version still
-                # reads as fresh (no _SUCCESS) and a redelivery
-                # re-derives BOTH writes idempotently from v{id-1}.
-                from concurrent.futures import ThreadPoolExecutor
-
-                with ThreadPoolExecutor(max_workers=2) as p:
-                    f_r = p.submit(
-                        lambda: report.write.mode("overwrite").parquet(
-                            f"{base}/reports/b{batch_id}"
-                        )
-                    )
-                    f_m = p.submit(
-                        lambda: merged.write.mode("overwrite").parquet(
-                            spath(batch_id)
-                        )
-                    )
-                    f_r.result()
-                    f_m.result()
+                # the two writes share only the persisted pos; a torn
+                # store version still reads as fresh (no _SUCCESS), and a
+                # redelivery re-derives both from v{batch_id-1}
+                overlap(
+                    s,
+                    lambda: report.write.mode("overwrite").parquet(
+                        f"{base}/reports/b{batch_id}"
+                    ),
+                    lambda: merged.write.mode("overwrite").parquet(
+                        spath(batch_id)
+                    ),
+                )
             finally:
                 pos.unpersist()
 
@@ -1095,31 +1030,12 @@ def stream_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
 
     try:
-        import os
-        from concurrent.futures import ThreadPoolExecutor
-
         docs = load_tables(spark, sf_dir, "documents")["documents"]
         docs.filter(F.col("doc_id") % 2 == 0).write.mode("append").parquet(src)
-        # feed frame's schema, nullable-relaxed as a parquet read reports
-        # it — no read-back job
-        schema = T.StructType(
-            [T.StructField(f.name, f.dataType, True) for f in docs.schema]
-        )
-        # §2.6: the odd-parity feed derives from the source table, not
-        # from run 1's store state — stage it during run 1, rename in
-        # after (staging dir is invisible to the running stream)
-        stage = f"{base}/stage"
-        with ThreadPoolExecutor(max_workers=1) as pool:
-            f_odd = pool.submit(
-                lambda: docs.filter(F.col("doc_id") % 2 == 1)
-                .write.mode("append")
-                .parquet(stage)
-            )
-            run()
-            f_odd.result()
-        for fn in os.listdir(stage):
-            if not fn.startswith(("_", ".")):
-                os.rename(os.path.join(stage, fn), os.path.join(src, fn))
+        # nullable the way a parquet read reports it, without a read-back job
+        schema = docs.schema.toNullable()
+        run()
+        docs.filter(F.col("doc_id") % 2 == 1).write.mode("append").parquet(src)
         run()
         out = spark.read.parquet(f"{base}/reports/b*").localCheckpoint(
             eager=True

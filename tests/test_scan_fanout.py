@@ -10,6 +10,7 @@ old constant 4)."""
 from __future__ import annotations
 
 import os
+import time
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -142,3 +143,34 @@ def test_spread_memo_shares_one_persisted_frame(spark):
     finally:
         storage.unpersist_all()
     assert not TB._SPREAD_MEMO  # release hook dropped the memo
+
+
+def test_concurrent_first_loads_persist_the_spread_once(spark, monkeypatch):
+    # two overlap thunks first-load the same table; a slow persist widens
+    # the check-then-set window the memo lock must close
+    from datafoundation_multi_source_retail_data_integration_hub_spark.functions.concurrent import (
+        overlap,
+    )
+    from datafoundation_multi_source_retail_data_integration_hub_spark.sources import (
+        tables as TB,
+    )
+
+    persist = storage.persist_tracked
+
+    def slow_persist(df):
+        time.sleep(0.3)
+        return persist(df)
+
+    _FANOUT_MEMO.clear()
+    storage.unpersist_all()
+    monkeypatch.setattr(storage, "persist_tracked", slow_persist)
+    try:
+        overlap(
+            spark,
+            lambda: load_table_spread(spark, SF_SMOKE, "documents"),
+            lambda: load_table_spread(spark, SF_SMOKE, "documents"),
+        )
+        assert len(storage._PERSISTED) == 1
+        assert len(TB._SPREAD_MEMO) == 1
+    finally:
+        storage.unpersist_all()

@@ -6,6 +6,7 @@ loads (S6-S8, U2, §2.9)."""
 from __future__ import annotations
 
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from datafoundation_multi_source_retail_data_integration_hub_spark.sources import writers as W
 from datafoundation_multi_source_retail_data_integration_hub_spark.streaming import pipelines
@@ -67,6 +68,51 @@ def test_incremental_stream_ingestion_to_parquet(spark, tmp_path):
     )
     q2.awaitTermination(120)
     assert spark.read.parquet(out).count() == 1000
+
+
+def test_feed_schema_to_nullable_matches_parquet_read_nested(spark, tmp_path):
+    """Stream feeds pin their source schema from the feed frame, relaxed
+    with ``toNullable()`` instead of a read-back job. The relaxation must
+    equal what a parquet read reports, nested fields included."""
+    schema = T.StructType(
+        [
+            T.StructField("id", T.LongType(), False),
+            T.StructField(
+                "s",
+                T.StructType([T.StructField("x", T.IntegerType(), False)]),
+                False,
+            ),
+            T.StructField("a", T.ArrayType(T.IntegerType(), False), False),
+            T.StructField(
+                "m", T.MapType(T.StringType(), T.IntegerType(), False), False
+            ),
+        ]
+    )
+    feed = spark.createDataFrame([(1, (2,), [3, 4], {"k": 5})], schema)
+    src = str(tmp_path / "feed")
+    feed.write.parquet(src)
+    read_back = spark.read.parquet(src).schema
+    assert feed.schema.toNullable() == read_back
+    # relaxing only the top level leaves nested nullability wrong
+    top_only = T.StructType(
+        [T.StructField(f.name, f.dataType, True) for f in feed.schema]
+    )
+    assert top_only != read_back
+
+    out = str(tmp_path / "out")
+    q = (
+        spark.readStream.schema(feed.schema.toNullable())
+        .parquet(src)
+        .writeStream.format("parquet")
+        .option("path", out)
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    assert [tuple(r) for r in spark.read.parquet(out).collect()] == [
+        (1, (2,), [3, 4], {"k": 5})
+    ]
 
 
 def test_compact_parquet_reduces_files(spark, tmp_path):

@@ -1,12 +1,12 @@
 """Per-query JOB TIMELINE: every Spark job's submission/completion time,
-description, and the driver-side GAP before it — the §2.6 decomposition
-instrument for the work-asymmetric pipelines (r15 verdict item 2).
+description, and the driver-side GAP before it — the decomposition
+instrument for the work-asymmetric pipelines.
 
 A pipeline's wall is `sum(job walls) + sum(gaps)`; jobs whose intervals
 OVERLAP are already concurrent. The table makes three costs visible:
 
-- sequential jobs that do not depend on each other (ThreadPool-overlap
-  candidates, guide §2.6);
+- sequential jobs that do not depend on each other (candidates for
+  ``functions.concurrent.overlap``);
 - driver-side gaps (planning, commit/rename machinery, catalog calls,
   stream-start overhead) that no executor-side change can touch;
 - the per-job scheduling floor (many tiny jobs -> chain the floor).
@@ -22,6 +22,7 @@ import json
 import os
 import sys
 import time
+import urllib.error
 import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -46,14 +47,26 @@ def _parse_ts(s: str) -> float:
 
 
 def settled_jobs(sc) -> list[dict]:
-    prev = None
+    """The job list once two polls agree. A failed or timed-out poll
+    counts as "still moving"."""
+    prev = cur = None
     for _ in range(40):
-        cur = _jobs(sc)
-        key = sorted((j["jobId"], j.get("status"), j.get("numCompletedTasks", 0)) for j in cur)
-        if key == prev:
-            return cur
-        prev = key
+        try:
+            got = _jobs(sc)
+        except (urllib.error.URLError, TimeoutError):
+            prev = None
+        else:
+            cur = got
+            key = sorted(
+                (j["jobId"], j.get("status"), j.get("numCompletedTasks", 0))
+                for j in cur
+            )
+            if key == prev:
+                return cur
+            prev = key
         time.sleep(0.25)
+    if cur is None:
+        raise RuntimeError("job_timeline: the UI jobs endpoint never answered")
     print("# WARN: job list still moving", file=sys.stderr)
     return cur
 
@@ -111,9 +124,12 @@ def main() -> None:
                 rows.append((j["jobId"], sub, end, j.get("numTasks", 0),
                              (j.get("description") or j.get("name") or "")[:90]))
             # driver-side gap before each job = its submission minus the
-            # latest completion among EARLIER jobs (0 for overlapped jobs)
+            # latest completion among EARLIER jobs (0 for overlapped jobs);
+            # jobs without a completionTime (NaN end) are left out of both
+            ends = [r[2] for r in rows if r[2] == r[2]]
+            span = f"{max(ends):.2f}s" if ends else "n/a"
             print(f"\n## {name}: wall {wall:.2f}s, {len(rows)} jobs, "
-                  f"job-span {max(r[2] for r in rows):.2f}s")
+                  f"job-span {span}")
             print("| job | start | end | dur | gap | tasks | description |")
             print("|---|---|---|---|---|---|---|")
             prev_end = 0.0
@@ -123,7 +139,8 @@ def main() -> None:
                     f"| {jid} | {sub:.2f} | {end:.2f} | {end - sub:.2f} | "
                     f"{gap:.2f} | {ntasks} | {desc} |"
                 )
-                prev_end = max(prev_end, end)
+                if end == end:
+                    prev_end = max(prev_end, end)
 
 
 if __name__ == "__main__":
