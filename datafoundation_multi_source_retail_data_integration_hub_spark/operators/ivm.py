@@ -37,7 +37,6 @@ from datetime import datetime
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.concurrent import overlap
 from ..functions.parity import fixed_units_total, round_dp
 
 _STATE_DEC = "decimal(38,0)"
@@ -177,18 +176,12 @@ def apply_batch(
         merged = merge_state(prev, partial, cfg)
     else:
         merged = partial
-    # the audit count reads the partial beside the state write; log_run
-    # still lands strictly after the write (the audit marker must never
-    # precede the state it records)
-    n, _ = overlap(
-        spark,
-        lambda: partial.agg(F.sum(cfg.count_col)).first()[0],
-        # no checkpoint needed on merged: the write target is v{version},
-        # which the plan never reads (it reads the immutable v{version-1})
-        lambda: W.write_table(
-            merged, state_table(table, version), database=database
-        ),
-    )
+    n = partial.agg(F.sum(cfg.count_col)).first()[0]
+    # no checkpoint needed on merged: the write target is v{version},
+    # which the plan never reads (it reads the immutable v{version-1});
+    # log_run lands after the write, so the audit marker never precedes
+    # the state it records
+    W.write_table(merged, state_table(table, version), database=database)
     log_run(
         spark,
         RunLogEntry(batch_id, table, int(n or 0), "success", ts, ts),

@@ -18,7 +18,6 @@ from datetime import datetime
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.concurrent import overlap
 from ..sources import writers as W
 from ..sources.writers import DEFAULT_DATABASE, read_table, write_table
 
@@ -154,7 +153,8 @@ def logged_stream_sink(
         spark = batch.sparkSession
         # the audit row counts the batch itself (logged_write semantics),
         # not the sink's output
-        n, _ = overlap(spark, batch.count, lambda: inner(batch, batch_id))
+        n = batch.count()
+        inner(batch, batch_id)
         run_id = f"{stream_id}#{batch_id}"
         if run_already_logged(spark, run_id, table, database):
             return

@@ -1266,18 +1266,19 @@ def fact_late_arriving_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .localCheckpoint(eager=True)
     )
-    stable, uncorrected_with_facts = overlap(
-        spark,
-        lambda: dim2.select("c_custkey", "sk")
+    stable = (
+        dim2.select("c_custkey", "sk")
         .exceptAll(dim1.select("c_custkey", "sk"))
         .count()
-        == 0,
-        lambda: orders.join(
+        == 0
+    )
+    uncorrected_with_facts = (
+        orders.join(
             dim2.where("inferred"),
             F.col("o_custkey") == F.col("c_custkey"),
             "left_semi",
         ).count()
-        == 0,
+        == 0
     )
     return (
         orders.join(dim2, F.col("o_custkey") == F.col("c_custkey"))
@@ -1339,15 +1340,10 @@ def federated_segment_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     url = f"jdbc:derby:{base}/db;create=true"
     try:
         dim = t["customer"].select("c_custkey", "c_mktsegment")
-        _, b = overlap(
-            spark,
-            lambda: write_jdbc(
-                dim, url, "stg_customer", properties=_DERBY_DRIVER
-            ),
-            lambda: dim.agg(
-                F.min("c_custkey").alias("lo"), F.max("c_custkey").alias("hi")
-            ).collect()[0],
-        )
+        write_jdbc(dim, url, "stg_customer", properties=_DERBY_DRIVER)
+        b = dim.agg(
+            F.min("c_custkey").alias("lo"), F.max("c_custkey").alias("hi")
+        ).collect()[0]
         cust = read_jdbc(
             spark,
             url,
@@ -1458,28 +1454,25 @@ def warehouse_key_erasure(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("o_custkey")
             .distinct()
         )
-        before, touched, loc = overlap(
-            spark,
-            lambda: {
-                r["bucket"]: r["n"]
-                for r in stored.groupBy("bucket")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .collect()
-            },
-            lambda: sorted(
-                r["bucket"]
-                for r in keys.select(
-                    (F.col("o_custkey") % ERASE_BUCKETS).cast("int").alias("bucket")
-                )
-                .distinct()
-                .collect()
-            ),
-            lambda: [
-                r["data_type"]
-                for r in spark.sql(f"DESCRIBE FORMATTED {name}").collect()
-                if r["col_name"].strip() == "Location"
-            ][0].removeprefix("file:"),
+        before = {
+            r["bucket"]: r["n"]
+            for r in stored.groupBy("bucket")
+            .agg(F.count(F.lit(1)).alias("n"))
+            .collect()
+        }
+        touched = sorted(
+            r["bucket"]
+            for r in keys.select(
+                (F.col("o_custkey") % ERASE_BUCKETS).cast("int").alias("bucket")
+            )
+            .distinct()
+            .collect()
         )
+        loc = [
+            r["data_type"]
+            for r in spark.sql(f"DESCRIBE FORMATTED {name}").collect()
+            if r["col_name"].strip() == "Location"
+        ][0].removeprefix("file:")
         untouched = sorted(set(before) - set(touched))
 
         def inventory(buckets) -> set:
@@ -1523,21 +1516,17 @@ def warehouse_key_erasure(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
 
         after = spark.table(name)
-        leftover, intact, counts = overlap(
-            spark,
-            lambda: after.where(F.col("o_custkey") % ERASE_MOD == 0).count(),
-            # vacuously true when every bucket was touched (possible at
-            # larger SFs where the request list covers all residues);
-            # tests/test_key_erasure.py asserts non-vacuity at the
-            # oracle SF
-            lambda: inventory(untouched) == inv_before,
-            lambda: {
-                int(r["bucket"]): int(r["rows_after"])
-                for r in after.groupBy("bucket")
-                .agg(F.count(F.lit(1)).alias("rows_after"))
-                .collect()
-            },
-        )
+        leftover = after.where(F.col("o_custkey") % ERASE_MOD == 0).count()
+        # vacuously true when every bucket was touched (possible at larger
+        # SFs where the request list covers all residues);
+        # tests/test_key_erasure.py asserts non-vacuity at the oracle SF
+        intact = inventory(untouched) == inv_before
+        counts = {
+            int(r["bucket"]): int(r["rows_after"])
+            for r in after.groupBy("bucket")
+            .agg(F.count(F.lit(1)).alias("rows_after"))
+            .collect()
+        }
         # emit one row per ORIGINAL bucket: a fully-erased bucket is
         # absent from the table after the drop but the oracle (and the
         # erasure report a user expects) carries it with rows_after=0
@@ -1599,9 +1588,8 @@ def fact_layout_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     write-path demos.
 
     After ``domains`` the linear and Z-order chains are independent (each
-    writes and reads only its own directory), and within a chain the
-    reports and the band count share only the finished write, so both
-    levels run through ``overlap``."""
+    writes and reads only its own directory), so the two chains run
+    through ``overlap``."""
     import shutil
     import tempfile
 
@@ -1632,10 +1620,9 @@ def fact_layout_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
             layout.write_range_clustered(
                 li, linear, ("l_partkey",), LAYOUT_N_FILES
             )
-            return overlap(
-                spark,
-                lambda: layout.file_skipping_report(spark, linear, sec_box),
-                lambda: layout.file_skipping_report(spark, linear, lead_box),
+            return (
+                layout.file_skipping_report(spark, linear, sec_box),
+                layout.file_skipping_report(spark, linear, lead_box),
             )
 
         def zorder_chain():
@@ -1643,10 +1630,9 @@ def fact_layout_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
                 li, zordered, "l_partkey", "l_suppkey", LAYOUT_N_FILES, domains
             )
             (lo_b, hi_b) = sec_box["l_suppkey"]
-            return overlap(
-                spark,
-                lambda: layout.file_skipping_report(spark, zordered, sec_box),
-                lambda: spark.read.parquet(zordered)
+            return (
+                layout.file_skipping_report(spark, zordered, sec_box),
+                spark.read.parquet(zordered)
                 .where((F.col("l_suppkey") >= lo_b) & (F.col("l_suppkey") <= hi_b))
                 .count(),
             )

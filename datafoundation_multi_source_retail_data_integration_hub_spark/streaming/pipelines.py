@@ -24,7 +24,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..functions.concurrent import overlap
 from ..functions.parity import stable_sum, sql_stable_sum
 
 _SINK_COUNTER = itertools.count()
@@ -996,18 +995,13 @@ def stream_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 merged = (
                     store_hv.select("hv").union(pos.select("hv")).distinct()
                 )
-                # the two writes share only the persisted pos; a torn
-                # store version still reads as fresh (no _SUCCESS), and a
-                # redelivery re-derives both from v{batch_id-1}
-                overlap(
-                    s,
-                    lambda: report.write.mode("overwrite").parquet(
-                        f"{base}/reports/b{batch_id}"
-                    ),
-                    lambda: merged.write.mode("overwrite").parquet(
-                        spath(batch_id)
-                    ),
+                # a torn store version still reads as fresh (no
+                # _SUCCESS), and a redelivery re-derives both writes
+                # from v{batch_id-1}
+                report.write.mode("overwrite").parquet(
+                    f"{base}/reports/b{batch_id}"
                 )
+                merged.write.mode("overwrite").parquet(spath(batch_id))
             finally:
                 pos.unpersist()
 
