@@ -33,26 +33,11 @@ from ..functions.text import md5_long
 
 Centroids = list[tuple[int, list[float]]]
 
-# Persisted intermediates go through the SHARED registry
-# (operators/storage.py); correctness never depends on the cache, so
-# releasing early just recomputes. Aliases kept for existing callers.
+# Persisted intermediates go through the shared registry
+# (operators/storage.py). Aliases kept for existing callers.
+from . import storage  # noqa: E402
 from .storage import persist_tracked as _persist  # noqa: E402
 from .storage import unpersist_all  # noqa: E402,F401
-
-
-# Session-scoped memo for FITTED centroids. A fit is deterministic (seeds,
-# tie-breaks and means are pure functions of the data — module doc above)
-# and its result is a driver-side constant of k x dim doubles, so callers
-# that name their corpus (``cache_key``) share one training run across the
-# whole vector query family (kmeans census, SemDeDup, PQ codebooks) within
-# a bench/driver session instead of re-running the Lloyd's jobs per query.
-# Correctness is unaffected: a cache hit returns bit-identical centroids.
-_FIT_CACHE: dict[tuple, Centroids] = {}
-
-
-def clear_fit_cache() -> None:
-    """Drop memoized fits (e.g. when the underlying corpus files change)."""
-    _FIT_CACHE.clear()
 
 
 def sq_dist_sql(a: str, b: str) -> str:
@@ -206,9 +191,10 @@ def kmeans_fit(
     ``prepare_vectors`` frame to share it with downstream assignment.
 
     ``cache_key``: a tuple naming the input corpus (e.g. the sf_dir) —
-    when given, the fitted centroids are memoized per
-    (cache_key, k, n_iter, train_mod) in ``_FIT_CACHE`` and the training
-    jobs are skipped on repeat invocations in the same session.
+    when given, the fitted centroids are a ``SESSION`` entry of the
+    storage registry, so the whole vector query family (kmeans census,
+    SemDeDup, PQ codebooks) shares one training run per session. A fit is
+    deterministic (module doc above), so a hit is bit-identical.
 
     ``train_mod``: sampled Lloyd's — seeds and update iterations run on
     the deterministic subset ``md5_long(id) % train_mod == 0`` (~1/mod
@@ -220,14 +206,26 @@ def kmeans_fit(
     whole pipeline stays engine-reproducible (the SQL oracles apply the
     identical predicate). ``None`` = train on everything.
     """
-    full_key = None
     if cache_key is not None:
         # every parameter that changes the fit belongs in the key —
         # omitting vec_col/id_col/dim would hand one column's centroids
         # to a fit on a different column of the same corpus
-        full_key = (cache_key, k, n_iter, train_mod, vec_col, id_col, dim)
-        if full_key in _FIT_CACHE:
-            return _FIT_CACHE[full_key]
+        key = ("fit", cache_key, k, n_iter, train_mod, vec_col, id_col, dim)
+        return storage.memo(
+            df.sparkSession,
+            storage.SESSION,
+            key,
+            lambda: kmeans_fit(
+                df,
+                k=k,
+                n_iter=n_iter,
+                vec_col=vec_col,
+                id_col=id_col,
+                dim=dim,
+                pre_cast=pre_cast,
+                train_mod=train_mod,
+            ),
+        )
     prep = df if pre_cast else prepare_vectors(df, vec_col, id_col)
     vcol = vec_col if pre_cast else "__dvec"
     if dim is None:
@@ -266,8 +264,6 @@ def kmeans_fit(
                 float(r["s"]) / r["n"]
             )
         centroids = sorted((cid, vals) for cid, vals in by.items())
-    if full_key is not None:
-        _FIT_CACHE[full_key] = centroids
     return centroids
 
 

@@ -56,9 +56,9 @@ def train_codebooks(
     """One deterministic k-means codebook per subspace. ``prep`` is a
     ``prepare_vectors`` frame (already double-cast + persisted).
 
-    ``cache_key`` (a tuple naming the corpus) memoizes each subspace fit
-    via ``clustering._FIT_CACHE`` — the ``m`` training-job groups run
-    once per session instead of once per query invocation.
+    ``cache_key`` (a tuple naming the corpus) makes each subspace fit a
+    ``SESSION`` entry of the storage registry — the ``m`` training-job
+    groups run once per session instead of once per query invocation.
 
     The ``m`` fits are independent chains of tiny jobs (seed scan +
     ``n_iter`` aggregate-collects), so they run through ``overlap``: on a

@@ -1,45 +1,91 @@
-"""Shared registry for persisted operator intermediates.
+"""The package's one cache: persisted intermediates and memoized values.
 
-Operators persist intermediates (shingle postings, signatures, vector
-working sets) so multi-consumer plans compute them once; callers running
-many queries in one long-lived session release executor storage between
-runs with ``unpersist_all()``. ONE registry for every operator module —
-two private copies (the pre-r10 state) meant every harness had to
-remember to drain both, and a third module growing its own would leak
-silently.
+``persist_tracked(df)`` persists an operator intermediate (shingle
+postings, signatures, vector working sets) so a multi-consumer plan
+computes it once. ``memo(spark, lifetime, key, build)`` returns the value
+``build()`` made for ``key`` the first time it was asked for.
 
-Unpersisting before a consuming action is still CORRECT (Spark just
-recomputes), so this is purely a storage-hygiene hook.
+Contract:
+
+- entries are keyed ``(lifetime, applicationId, *key)``, so a new
+  SparkSession never sees another application's frames or blocks; one
+  module lock guards the store;
+- each key has its own build lock: concurrent first calls with the same
+  key run ``build`` once, calls with different keys build concurrently,
+  and a ``build`` may call ``memo`` for another key (no other lock is held
+  across ``build``);
+- ``RUN`` entries live until the next ``unpersist_all()``, which also
+  unpersists every ``persist_tracked`` frame; ``SESSION`` entries live as
+  long as the process, scoped by application id.
+
+Releasing a persisted frame before a consuming action is still correct
+(Spark recomputes it), so ``unpersist_all`` is storage hygiene between
+runs, never a correctness step.
 """
 
 from __future__ import annotations
 
+import threading
 from collections.abc import Callable
+from typing import Any
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
+RUN = "run"
+SESSION = "session"
+
+_LOCK = threading.Lock()
+_ENTRIES: dict[tuple, Any] = {}
+_BUILD_LOCKS: dict[tuple, threading.Lock] = {}
 _PERSISTED: list[DataFrame] = []
-_RELEASE_HOOKS: list[Callable[[], None]] = []
+
+
+def memo(
+    spark: SparkSession, lifetime: str, key: tuple, build: Callable[[], Any]
+) -> Any:
+    """The value cached under ``key`` for ``lifetime``, built on first use."""
+    assert lifetime in (RUN, SESSION), lifetime
+    full = (lifetime, spark.sparkContext.applicationId, *key)
+    with _LOCK:
+        if full in _ENTRIES:
+            return _ENTRIES[full]
+        build_lock = _BUILD_LOCKS.setdefault(full, threading.Lock())
+    with build_lock:
+        with _LOCK:
+            if full in _ENTRIES:
+                return _ENTRIES[full]
+        value = build()
+        with _LOCK:
+            _ENTRIES[full] = value
+            del _BUILD_LOCKS[full]
+    return value
+
+
+def cached_keys(lifetime: str) -> list[tuple]:
+    """The ``key`` of every entry held for ``lifetime``, any application."""
+    with _LOCK:
+        return [k[2:] for k in _ENTRIES if k[0] == lifetime]
 
 
 def persist_tracked(df: DataFrame) -> DataFrame:
     """Persist ``df`` and register it for ``unpersist_all``."""
-    _PERSISTED.append(df)
+    with _LOCK:
+        _PERSISTED.append(df)
     return df.persist()
 
 
-def on_release(hook: Callable[[], None]) -> None:
-    """Register a callback run by every ``unpersist_all`` — for memos of
-    persisted frames (sources.tables._SPREAD_MEMO) that must be dropped
-    when the registry releases the frames they point at, or a later
-    lookup would hand out an unpersisted frame and silently lose the
-    optimizer-barrier/single-scan properties the cache provides."""
-    _RELEASE_HOOKS.append(hook)
+def tracked_count() -> int:
+    """Number of frames ``unpersist_all`` would release."""
+    with _LOCK:
+        return len(_PERSISTED)
 
 
 def unpersist_all() -> None:
-    """Release every intermediate persisted through this registry."""
-    while _PERSISTED:
-        _PERSISTED.pop().unpersist()
-    for hook in _RELEASE_HOOKS:
-        hook()
+    """Unpersist every tracked frame and drop every ``RUN`` entry."""
+    with _LOCK:
+        frames = _PERSISTED[::-1]
+        _PERSISTED.clear()
+        for k in [k for k in _ENTRIES if k[0] == RUN]:
+            del _ENTRIES[k]
+    for df in frames:
+        df.unpersist()

@@ -12,6 +12,7 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators import storage
 from ..operators.similarity import (
     brute_force_topk,
     cosine_neardup_pairs,
@@ -46,12 +47,10 @@ def _emb(spark: SparkSession, sf_dir: str, spread: bool = True) -> DataFrame:
     return load_table_spread(spark, sf_dir, "embeddings")
 
 
-_N_PLANES_CACHE: dict[tuple, int] = {}
-
-
 def _n_planes(spark: SparkSession, sf_dir: str) -> int:
     """LSH plane count derived from a cheap corpus count (parquet
-    row-count metadata — no column scan), memoized per corpus dir.
+    row-count metadata — no column scan); a ``SESSION`` entry per corpus
+    dir.
 
     This is the live scale gate: a fixed plane count makes the bucketed
     self-join degenerate toward all-pairs as the corpus grows
@@ -61,16 +60,16 @@ def _n_planes(spark: SparkSession, sf_dir: str) -> int:
     tests/test_vectors_oracle.py::test_plane_count_derivation) — while
     1e9 vectors derive 14 planes with no code change.
     """
-    key = (spark.sparkContext.applicationId, sf_dir)
-    got = _N_PLANES_CACHE.get(key)
-    if got is None:
-        got = planes_for_corpus(
+    return storage.memo(
+        spark,
+        storage.SESSION,
+        ("n_planes", sf_dir),
+        lambda: planes_for_corpus(
             _emb(spark, sf_dir, spread=False).count(),
             target_bucket_rows=LSH_TARGET_BUCKET_ROWS,
             min_planes=N_PLANES,
-        )
-        _N_PLANES_CACHE[key] = got
-    return got
+        ),
+    )
 
 
 def embedding_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -15,6 +15,7 @@ from ..functions.concurrent import overlap
 from ..functions.dates import build_calendar, date_key
 from ..functions.local import local_frame
 from ..functions.parity import fixed_sum, round_dp, sql_round_dp, sql_stable_sum
+from ..operators import storage
 from ..operators.scd2 import SCD2Config, current_key_map, scd2_initial_load, scd2_merge
 from ..pipelines import retail
 from ..plans.star_schema import StarSchema
@@ -37,34 +38,20 @@ PART_CFG = SCD2Config(
 )
 
 
-# ---------------------------------------------------------------------------
-# Session-scoped memo of materialized initial-load dims. A warehouse
-# materializes each dimension ONCE (reference S6: the dims are tables) and
-# every fact build reads it; the driver/bench call each query standalone,
-# which would rerun the same deterministic dim build (distinct + global
-# numbering) for fact_sales_resolution, dashboard_extract and both marts.
-# First use runs the build and localCheckpoints it (dimension-sized state,
-# lineage cut); later queries in the same session reuse the identical
-# frame — a hit is bit-identical because scd2_initial_load is
-# deterministic. Keyed by (application id, sf_dir, table, date) so a new
-# SparkSession never sees another session's checkpointed blocks. On a real
-# cluster this role is played by the managed dim tables themselves
-# (write_table once, spark.table thereafter).
-# ---------------------------------------------------------------------------
-
-_DIM_CACHE: dict[tuple, DataFrame] = {}
-
-
 def _initial_dim(
     spark: SparkSession, sf_dir: str, table: str, cfg: SCD2Config, date: str
 ) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir, table, cfg.natural_key, date)
-    got = _DIM_CACHE.get(key)
-    if got is None:
+    """The initial-load SCD2 dim, built once per session and
+    localCheckpointed: a ``SESSION`` entry that holds data blocks, shared
+    by every fact build, mart and extract. A hit is bit-identical because
+    ``scd2_initial_load`` is deterministic."""
+
+    def build() -> DataFrame:
         src = load_tables(spark, sf_dir, table)[table]
-        got = scd2_initial_load(src, cfg, date).localCheckpoint(eager=True)
-        _DIM_CACHE[key] = got
-    return got
+        return scd2_initial_load(src, cfg, date).localCheckpoint(eager=True)
+
+    key = ("dim", sf_dir, table, cfg.natural_key, date)
+    return storage.memo(spark, storage.SESSION, key, build)
 
 
 # ---------------------------------------------------------------------------

@@ -12,11 +12,12 @@ root).
 from __future__ import annotations
 
 import os
-import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..operators import storage
 
 TPCH_TABLES = (
     "region",
@@ -52,62 +53,41 @@ def _normalize_event_time(df: DataFrame, col: str) -> DataFrame:
     return df
 
 
-# DataFrame-object memo: `spark.read.parquet` resolves the schema eagerly
-# (driver-side file listing + footer read, ~50-80 ms per call). A corpus
-# table's logical plan is immutable and the testdata paths never change
-# within a session, so the resolved relation is reused — every consumer
-# still gets an identical declarative plan (pushdown/pruning unaffected;
-# this caches the PLAN object, not data). Each call returns a fresh
-# ``toDF`` re-projection so every caller sees NEW attribute exprIds, as
-# two independent reads would produce — otherwise two branches of one
-# query (e.g. an SCD2 merge joining a dim and a batch both derived from
-# customer) share ids and trip Spark's ambiguous-self-join check.
-_TABLE_CACHE: dict[tuple, DataFrame] = {}
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Scan one corpus table. Lazy — nothing is read until an action."""
-    key = (spark.sparkContext.applicationId, sf_dir, name)
-    got = _TABLE_CACHE.get(key)
-    if got is not None:
-        return got.toDF(*got.columns)
-    # Runtime-settable confs applied here (not only in the session factory)
-    # because the driver harness builds its own SparkSession.
-    # inferTimestampNTZ=false makes plain-micros parquet timestamps (no UTC
-    # flag) scan directly as session-TZ TIMESTAMP — a scan-level fix, so
-    # predicate pushdown on timestamp filters is preserved (a post-scan
-    # NTZ->TZ cast would block it). Session TZ is pinned UTC, so values are
-    # identical to the UTC-naive DuckDB oracle.
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    if name in _EVENT_TIME_COLS:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    for col in _EVENT_TIME_COLS.get(name, ()):
-        df = _normalize_event_time(df, col)
-    _TABLE_CACHE[key] = df
+    """Scan one corpus table. Lazy — nothing is read until an action.
+
+    The resolved relation is a ``SESSION`` entry: ``spark.read.parquet``
+    lists files and reads footers eagerly, and a corpus table's plan never
+    changes within a session. Each call returns a fresh ``toDF``
+    re-projection, so every caller sees new attribute exprIds, as two
+    independent reads would; otherwise two branches of one query derived
+    from the same table (an SCD2 merge joining a dim and a batch both
+    built from customer) share ids and trip Spark's ambiguous-self-join
+    check."""
+
+    def build() -> DataFrame:
+        # Runtime-settable confs applied here (not only in the session
+        # factory) because the driver harness builds its own SparkSession.
+        # inferTimestampNTZ=false makes plain-micros parquet timestamps (no
+        # UTC flag) scan directly as session-TZ TIMESTAMP — a scan-level
+        # fix, so predicate pushdown on timestamp filters is preserved (a
+        # post-scan NTZ->TZ cast would block it). Session TZ is pinned UTC,
+        # so values are identical to the UTC-naive DuckDB oracle.
+        spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+        if name in _EVENT_TIME_COLS:
+            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        for col in _EVENT_TIME_COLS.get(name, ()):
+            df = _normalize_event_time(df, col)
+        return df
+
+    df = storage.memo(spark, storage.SESSION, ("table", sf_dir, name), build)
     return df.toDF(*df.columns)
 
 
 def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:
     """Scan several corpus tables (all of them when ``names`` is empty)."""
     return {n: load_table(spark, sf_dir, n) for n in (names or TPCH_TABLES)}
-
-
-# Scan-parallelism memo: row-group layout is a property of the immutable
-# corpus files, so the fan-out decision per (dir, table, cores) is computed
-# once per process. This caches parquet FOOTER metadata (like Spark's own
-# file-index cache), never data or results.
-_FANOUT_MEMO: dict[tuple, int] = {}
-
-# Memo of the PERSISTED spread frames (one cache per (app, dir, table));
-# cleared by operators.storage.unpersist_all via the release hook, so its
-# lifetime is exactly the persisted frames'. Caches a plan whose persist
-# is released between bench runs — never data across timed runs.
-_SPREAD_MEMO: dict[tuple, DataFrame] = {}
-_SPREAD_HOOKED = False
-# guards the check-then-set on both: overlap thunks may first-load the
-# same table at once
-_SPREAD_LOCK = threading.Lock()
 
 
 def scan_fanout(spark: SparkSession, sf_dir: str, name: str) -> int:
@@ -124,9 +104,9 @@ def scan_fanout(spark: SparkSession, sf_dir: str, name: str) -> int:
     of a local[32] constant:
 
     - total bytes >= cores x ``maxPartitionBytes`` → the scan fans wide
-      natively; return 0 without touching footers (at warehouse scale
-      this short-circuits on the first few files, so no million-file
-      footer walk can happen);
+      natively; return 0 without touching footers. The directory listing
+      stops at the file that crosses the gate, so a million-file table
+      costs a few ``stat`` calls, not a full listing;
     - otherwise count row groups across the files (footer-only reads,
       bounded by the size gate) and spread to ``defaultParallelism``
       only when the layout provides fewer groups than cores.
@@ -136,59 +116,47 @@ def scan_fanout(spark: SparkSession, sf_dir: str, name: str) -> int:
     moves at most a few GB once per query while unlocking a cores-fold
     speedup of the per-row work stacked above it.
 
-    Known gap (documented, deliberate): a table OVER the byte gate is
-    assumed to fan wide natively without reading any footer, which is
-    wrong for a pathological layout of few-but-huge row groups (e.g. a
-    writer that emitted one row group per multi-GB file). Spreading
-    such a table through this helper would be wrong anyway — the
-    repartition+persist in ``load_table_spread`` would cache more than
-    cores x maxPartitionBytes of data. The fix at that scale is the
-    corpus WRITER bounding ``parquet.block.size`` (row-group size), not
-    a reader-side exchange; the gate keeps this helper a no-op there by
-    design.
+    Known gap, deliberate: a table over the byte gate is assumed to fan
+    wide without reading any footer, which is wrong for few-but-huge row
+    groups. Spreading it would cache more than cores x maxPartitionBytes
+    anyway; the fix at that scale is the writer bounding
+    ``parquet.block.size``.
     """
     cores = spark.sparkContext.defaultParallelism
-    key = (sf_dir, name, cores)
-    got = _FANOUT_MEMO.get(key)
-    if got is not None:
-        return got
     try:
         max_pb = int(
             spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
         )
     except Exception:
         max_pb = 128 * 1024 * 1024
+    gate = cores * max_pb
     path = os.path.join(sf_dir, f"{name}.parquet")
-    n = 0
     try:
         if os.path.isfile(path):
-            files = [path]
+            files, total = [path], os.path.getsize(path)
         else:
-            files = []
+            files, total = [], 0
             with os.scandir(path) as it:
                 for ent in it:
                     if ent.is_file() and not ent.name.startswith(("_", ".")):
                         files.append(ent.path)
-        total = 0
-        for f in files:
-            total += os.path.getsize(f)
-            if total >= cores * max_pb:
-                _FANOUT_MEMO[key] = 0
-                return 0
+                        total += ent.stat().st_size
+                        if total >= gate:
+                            return 0
+        if total >= gate:
+            return 0
         import pyarrow.parquet as pq
 
         groups = 0
         for f in files:
             groups += pq.ParquetFile(f).metadata.num_row_groups
             if groups >= cores:
-                break
-        n = cores if groups < cores else 0
+                return 0
+        return cores
     except Exception:
         # non-posix storage (object stores) or unreadable footers: fall
         # back to the scan's native split behavior
-        n = 0
-    _FANOUT_MEMO[key] = n
-    return n
+        return 0
 
 
 def load_table_spread(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -197,8 +165,8 @@ def load_table_spread(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     No-op (and zero extra plan nodes) when the input layout already
     yields at least ``defaultParallelism`` scan tasks.
 
-    The repartitioned frame is PERSISTED (tracked; released by the
-    operators' ``unpersist_all``), which matters twice over:
+    The repartitioned frame is PERSISTED (tracked; released by
+    ``unpersist_all``), which matters twice over:
 
     - optimizer barrier: filters inferred above expensive derived
       columns (``InferFiltersFromGenerate`` on an explode, the shingle
@@ -216,33 +184,23 @@ def load_table_spread(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     working set is bounded by the same gate and production-scale tables
     never take this path at all.
 
-    The spread frame is MEMOIZED per (application, dir, table) and
-    released together with its persist by ``unpersist_all`` (storage
-    release hook): composite reports that invoke several spread-loading
+    The spread frame is a ``RUN`` entry, released with its persist by
+    ``unpersist_all``: composite reports that run several spread-loading
     queries in one call (ann_quality_report runs the brute-force truth
-    and the PQ probe beside its own corpus load) share ONE cached copy
-    and ONE exchange instead of building three identical caches of the
-    same table. Callers get a fresh ``toDF`` re-projection (new
-    attribute exprIds, same ``_TABLE_CACHE`` discipline) over the same
-    cached plan, so self-joins across two loads stay unambiguous while
-    the cache lookup still hits.
+    and the PQ probe beside its own corpus load) share one cached copy
+    and one exchange. Callers get a fresh ``toDF`` re-projection over the
+    same cached plan, so self-joins across two loads stay unambiguous.
     """
-    global _SPREAD_HOOKED
-    from ..operators.storage import on_release, persist_tracked
-
     df = load_table(spark, sf_dir, name)
     n = scan_fanout(spark, sf_dir, name)
     if not n:
         return df
-    key = (spark.sparkContext.applicationId, sf_dir, name)
-    with _SPREAD_LOCK:
-        spread = _SPREAD_MEMO.get(key)
-        if spread is None:
-            if not _SPREAD_HOOKED:
-                on_release(_SPREAD_MEMO.clear)
-                _SPREAD_HOOKED = True
-            spread = persist_tracked(df.repartition(n))
-            _SPREAD_MEMO[key] = spread
+    spread = storage.memo(
+        spark,
+        storage.RUN,
+        ("spread", sf_dir, name),
+        lambda: storage.persist_tracked(df.repartition(n)),
+    )
     return spread.toDF(*spread.columns)
 
 

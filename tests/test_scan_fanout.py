@@ -20,7 +20,6 @@ from datafoundation_multi_source_retail_data_integration_hub_spark.operators imp
     storage,
 )
 from datafoundation_multi_source_retail_data_integration_hub_spark.sources.tables import (
-    _FANOUT_MEMO,
     load_table,
     load_table_spread,
     scaled_shuffle_partitions,
@@ -32,7 +31,6 @@ from .conftest import SF_SMOKE
 
 
 def test_scan_fanout_fires_on_single_row_group(spark):
-    _FANOUT_MEMO.clear()
     n = scan_fanout(spark, SF_SMOKE, "documents")
     assert n == spark.sparkContext.defaultParallelism
 
@@ -46,15 +44,47 @@ def test_scan_fanout_zero_when_layout_fans_wide(spark, tmp_path):
     path = str(tmp_path / "many.parquet")
     pq.write_table(tbl, path, row_group_size=1)
     assert pq.ParquetFile(path).metadata.num_row_groups >= cores
-    _FANOUT_MEMO.clear()
-    try:
-        assert scan_fanout(spark, str(tmp_path), "many") == 0
-    finally:
-        _FANOUT_MEMO.clear()
+    assert scan_fanout(spark, str(tmp_path), "many") == 0
+
+
+def test_scan_fanout_byte_gate_stops_the_listing(spark, tmp_path, monkeypatch):
+    # every file is maxPartitionBytes long (sparse), so the gate is
+    # crossed at the cores-th file; the listing must stop there instead
+    # of walking the whole directory first
+    cores = spark.sparkContext.defaultParallelism
+    max_pb = int(
+        spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    )
+    table = tmp_path / "wide.parquet"
+    table.mkdir()
+    n_files = 2 * cores + 3
+    for i in range(n_files):
+        with open(table / f"part-{i:05d}.parquet", "wb") as f:
+            f.truncate(max_pb)
+    yielded = []
+    real_scandir = os.scandir
+
+    class CountingScandir:
+        def __init__(self, path):
+            self._it = real_scandir(path)
+
+        def __enter__(self):
+            return self
+
+        def __exit__(self, *exc):
+            self._it.close()
+
+        def __iter__(self):
+            for ent in self._it:
+                yielded.append(ent.name)
+                yield ent
+
+    monkeypatch.setattr(os, "scandir", CountingScandir)
+    assert scan_fanout(spark, str(tmp_path), "wide") == 0
+    assert 0 < len(yielded) <= cores < n_files
 
 
 def test_load_table_spread_same_rows_wider_layout(spark):
-    _FANOUT_MEMO.clear()
     plain = load_table(spark, SF_SMOKE, "documents")
     spread = load_table_spread(spark, SF_SMOKE, "documents")
     try:
@@ -122,19 +152,16 @@ def test_scaled_shuffle_partitions_warns_when_cap_binds():
 
 def test_spread_memo_shares_one_persisted_frame(spark):
     # two loads in one "query window" share the cached plan (new exprIds,
-    # same storage); unpersist_all drops the memo with the persist
-    from datafoundation_multi_source_retail_data_integration_hub_spark.sources import (
-        tables as TB,
-    )
-
-    _FANOUT_MEMO.clear()
+    # same storage); unpersist_all drops the RUN entry with the persist
     storage.unpersist_all()
     a = load_table_spread(spark, SF_SMOKE, "documents")
-    n_after_first = len(TB._SPREAD_MEMO)
+    n_after_first = len(storage.cached_keys(storage.RUN))
     b = load_table_spread(spark, SF_SMOKE, "documents")
     try:
         assert n_after_first == 1
-        assert len(TB._SPREAD_MEMO) == 1  # second load hit the memo
+        # second load hit the entry
+        assert len(storage.cached_keys(storage.RUN)) == 1
+        assert storage.tracked_count() == 1
         # fresh exprIds per caller: a self-join on equal ids must not
         # trip the ambiguous-self-join check
         assert a.schema == b.schema
@@ -142,17 +169,14 @@ def test_spread_memo_shares_one_persisted_frame(spark):
         assert joined.count() == a.count()
     finally:
         storage.unpersist_all()
-    assert not TB._SPREAD_MEMO  # release hook dropped the memo
+    assert not storage.cached_keys(storage.RUN)
 
 
 def test_concurrent_first_loads_persist_the_spread_once(spark, monkeypatch):
     # two overlap thunks first-load the same table; a slow persist widens
-    # the check-then-set window the memo lock must close
+    # the check-then-set window the key's build lock must close
     from datafoundation_multi_source_retail_data_integration_hub_spark.functions.concurrent import (
         overlap,
-    )
-    from datafoundation_multi_source_retail_data_integration_hub_spark.sources import (
-        tables as TB,
     )
 
     persist = storage.persist_tracked
@@ -161,7 +185,6 @@ def test_concurrent_first_loads_persist_the_spread_once(spark, monkeypatch):
         time.sleep(0.3)
         return persist(df)
 
-    _FANOUT_MEMO.clear()
     storage.unpersist_all()
     monkeypatch.setattr(storage, "persist_tracked", slow_persist)
     try:
@@ -170,7 +193,7 @@ def test_concurrent_first_loads_persist_the_spread_once(spark, monkeypatch):
             lambda: load_table_spread(spark, SF_SMOKE, "documents"),
             lambda: load_table_spread(spark, SF_SMOKE, "documents"),
         )
-        assert len(storage._PERSISTED) == 1
-        assert len(TB._SPREAD_MEMO) == 1
+        assert storage.tracked_count() == 1
+        assert len(storage.cached_keys(storage.RUN)) == 1
     finally:
         storage.unpersist_all()

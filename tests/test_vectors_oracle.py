@@ -145,4 +145,4 @@ def test_ann_quality_report_concurrent_reentrant(spark):
 
     first, second = rows(), rows()
     assert first == second
-    assert storage._PERSISTED == []
+    assert storage.tracked_count() == 0

@@ -61,18 +61,7 @@ def main() -> None:
     # (matching bench.py and the reference's S9 Arrow query->client
     # transfer) — row-at-a-time fetch would bill each engine's Python
     # object construction instead of the engine
-    from datafoundation_multi_source_retail_data_integration_hub_spark.operators import (
-        clustering,
-        dedup,
-    )
-
-    def unpersist_all() -> None:
-        # storage hygiene between queries, outside the timed window
-        # (mirrors bench.py): the dedup/clustering operators persist
-        # intermediates scoped to one query; letting them accumulate
-        # across the 65-query suite inflates GC pressure on the tail
-        dedup.unpersist_all()
-        clustering.unpersist_all()
+    from datafoundation_multi_source_retail_data_integration_hub_spark.operators.storage import unpersist_all
 
     # one warm pass, then min of REPS timed passes — SYMMETRIC for both
     # engines. Sub-second queries here are scheduling-constant-dominated

@@ -24,10 +24,7 @@ def main() -> None:
     args = ap.parse_args()
 
     import __spark_entry__ as entrymod
-    from datafoundation_multi_source_retail_data_integration_hub_spark.operators import (
-        clustering,
-        dedup,
-    )
+    from datafoundation_multi_source_retail_data_integration_hub_spark.operators.storage import unpersist_all
     from datafoundation_multi_source_retail_data_integration_hub_spark.session import (
         get_spark,
     )
@@ -49,8 +46,7 @@ def main() -> None:
         with open(path, "w") as f:
             f.write(txt)
         print(f"wrote {path}", file=sys.stderr)
-        dedup.unpersist_all()
-        clustering.unpersist_all()
+        unpersist_all()
 
 
 if __name__ == "__main__":

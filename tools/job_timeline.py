@@ -79,10 +79,7 @@ def main() -> None:
     args = ap.parse_args()
 
     import __spark_entry__ as entrymod
-    from datafoundation_multi_source_retail_data_integration_hub_spark.operators import (
-        clustering,
-        dedup,
-    )
+    from datafoundation_multi_source_retail_data_integration_hub_spark.operators.storage import unpersist_all
     from datafoundation_multi_source_retail_data_integration_hub_spark.session import (
         get_spark,
     )
@@ -92,10 +89,6 @@ def main() -> None:
     )
     sc = spark.sparkContext
     qs = entrymod.queries()
-
-    def unpersist_all() -> None:
-        dedup.unpersist_all()
-        clustering.unpersist_all()
 
     for name in [n.strip() for n in args.query.split(",") if n.strip()]:
         fn = qs[name]

@@ -85,10 +85,7 @@ def main() -> None:
 
     import bench
     import __spark_entry__ as entrymod
-    from datafoundation_multi_source_retail_data_integration_hub_spark.operators import (
-        clustering,
-        dedup,
-    )
+    from datafoundation_multi_source_retail_data_integration_hub_spark.operators.storage import unpersist_all
     from datafoundation_multi_source_retail_data_integration_hub_spark.session import (
         get_spark,
     )
@@ -107,10 +104,6 @@ def main() -> None:
             if n in qs
             and (args.include_asymmetric or n not in bench.WORK_ASYMMETRIC)
         ]
-
-    def unpersist_all() -> None:
-        dedup.unpersist_all()
-        clustering.unpersist_all()
 
     rows = []
     for name in names:

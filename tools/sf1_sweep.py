@@ -262,10 +262,7 @@ def main() -> None:
         # >1000 overflows the shard key offsets
         ap.error("--shards must be in [2, 1000]")
 
-    from datafoundation_multi_source_retail_data_integration_hub_spark.operators import (
-        clustering,
-        dedup,
-    )
+    from datafoundation_multi_source_retail_data_integration_hub_spark.operators.storage import unpersist_all
     from datafoundation_multi_source_retail_data_integration_hub_spark.session import (
         get_spark,
     )
@@ -283,10 +280,6 @@ def main() -> None:
     sc = spark.sparkContext
     if not args.skip_build:
         build(spark, SF01, args.out, n_shards=args.shards)
-
-    def unpersist_all() -> None:
-        dedup.unpersist_all()
-        clustering.unpersist_all()
 
     qs = entrymod.queries()
     names = (args.queries.split(",") if args.queries else SWEEP)
