@@ -182,45 +182,16 @@ def positional_hashes_from_tokens(toks: Column, n: int) -> Column:
 
 
 def winnowing_from_hashes(h: Column, window: int) -> Column:
-    """Winnowing window-min pass over a MATERIALIZED positional-hash array
-    column (``h`` is sliced inside the lambda — stage it first)."""
+    """Winnowing (Schleimer/Wilkerson/Aiken, MOSS) over a MATERIALIZED
+    positional-hash array column (``h`` is sliced inside the lambda —
+    stage it first): slide a ``window`` over the hash sequence, keep each
+    window's minimum hash, dedup. Every match of length >= window+n-1
+    tokens shares a fingerprint, at ~2/(window+1) the density of full
+    shingling. (Simplified tie rule: min VALUE per window rather than
+    rightmost-min position — deterministic and engine-agnostic.)"""
     starts = _index_range(F.size(h) - (window - 1))
     mins = F.transform(starts, lambda i: F.array_min(F.slice(h, i, window)))
     return F.array_distinct(mins)
-
-
-def word_shingles(c: Column, n: int) -> Column:
-    """One-shot shingle column from raw text. Convenience form for small
-    inputs/tests — hot paths stage tokens and use ``shingles_from_tokens``
-    (performance note above)."""
-    return shingles_from_tokens(ws_tokens(normalized_text(c)), n)
-
-
-def hashed_word_shingles(c: Column, n: int) -> Column:
-    """Shingles hashed to 60-bit ints: 8-byte join/shuffle keys instead of
-    ~25-char strings — the scale-relevant representation for the dedup
-    inverted-index joins (collisions: ~n²/2^60, irrelevant)."""
-    return F.transform(word_shingles(c, n), md5_long)
-
-
-def positional_shingle_hashes(c: Column, n: int) -> Column:
-    """One-shot positional hashes from raw text (convenience form; hot
-    paths use ``positional_hashes_from_tokens`` on staged tokens)."""
-    return positional_hashes_from_tokens(ws_tokens(normalized_text(c)), n)
-
-
-def winnowing_fingerprints(c: Column, n: int, window: int) -> Column:
-    """Winnowing (Schleimer/Wilkerson/Aiken, MOSS): slide a ``window`` over
-    the positional shingle-hash sequence, keep each window's minimum hash,
-    dedup. Guarantees every match of length >= window+n-1 tokens shares a
-    fingerprint, at ~2/(window+1) the density of full shingling.
-    (Simplified tie rule: min VALUE per window rather than rightmost-min
-    position — deterministic and engine-agnostic.)
-
-    One-shot convenience form — the hash array is re-evaluated per window
-    position here; hot paths stage tokens AND hashes
-    (``positional_hashes_from_tokens`` -> ``winnowing_from_hashes``)."""
-    return winnowing_from_hashes(positional_shingle_hashes(c, n), window)
 
 
 # PII redaction patterns — character classes + bounded repetition only,

@@ -1125,11 +1125,6 @@ def encode_baseline(
     )
 
 
-def encode_baseline_gray(w: int, h: int, pixels: bytes) -> bytes:
-    """Grayscale convenience wrapper over ``encode_baseline``."""
-    return encode_baseline(w, h, pixels, channels=1)
-
-
 # ---------------------------------------------------------------------------
 # progressive (SOF2) encoder — test fixtures only, like the baseline
 # encoder: real spec-valid streams so the progressive decoder is

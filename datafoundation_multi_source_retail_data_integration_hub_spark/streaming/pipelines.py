@@ -19,6 +19,8 @@ in ``queries.eventops``.
 from __future__ import annotations
 
 import itertools
+import shutil
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -67,6 +69,66 @@ def _drain(q, what: str, timeout_s: int = 300) -> None:
     if not q.awaitTermination(timeout_s):
         q.stop()
         raise TimeoutError(f"{what} stream did not finish in {timeout_s}s")
+
+
+def _feed_and_run(feed: DataFrame, base: str, handler, what: str) -> None:
+    """Append ``feed`` to the file source ``{base}/incoming``, then run one
+    ``availableNow`` pass of ``handler`` over the new files, resuming the
+    checkpoint ``{base}/ckpt``. Each call therefore hands the handler
+    exactly the rows of ``feed``, as one or more micro-batches whose ids
+    continue the previous run's."""
+    feed.write.mode("append").parquet(f"{base}/incoming")
+    q = (
+        feed.sparkSession.readStream
+        # nullable the way a parquet read reports it, without a read-back job
+        .schema(feed.schema.toNullable())
+        .parquet(f"{base}/incoming")
+        .writeStream.foreachBatch(handler)
+        .option("checkpointLocation", f"{base}/ckpt")
+        .trigger(availableNow=True)
+        .start()
+    )
+    _drain(q, what)
+
+
+def _versioned_fold(
+    spark: SparkSession,
+    what: str,
+    feeds: list[DataFrame],
+    fold_slice,
+    merge,
+    present=lambda state: state,
+) -> DataFrame:
+    """Stream ``feeds`` in order through a ``foreachBatch`` fold into
+    versioned state and return ``present`` of the final state,
+    materialized.
+
+    Micro-batch ``N`` writes ``v{N} = merge(v{N-1}, fold_slice(batch))``
+    (``v0`` is the first slice alone). The previous version is addressed
+    by the batch id, which is stable across checkpoint restarts, so a
+    redelivered batch rewrites ``v{N}`` from the immutable ``v{N-1}``:
+    never a double merge, and never an overwrite of the path its own plan
+    reads. ``merge`` must accept state and slice in that order and may
+    assume the slice comes later in the feed's order."""
+    base = tempfile.mkdtemp(prefix=f"stream_{what}_")
+    state = f"{base}/state"
+
+    def handler(batch: DataFrame, batch_id: int) -> None:
+        out = fold_slice(batch)
+        if batch_id > 0:
+            prev = batch.sparkSession.read.parquet(f"{state}/v{batch_id - 1}")
+            out = merge(prev, out)
+        out.write.mode("overwrite").parquet(f"{state}/v{batch_id}")
+
+    try:
+        for feed in feeds:
+            _feed_and_run(feed, base, handler, what)
+        latest = committed_store_versions(state) - 1
+        return present(spark.read.parquet(f"{state}/v{latest}")).localCheckpoint(
+            eager=True
+        )
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
 
 
 def run_to_memory(agg: DataFrame, mode: str = "complete") -> DataFrame:
@@ -368,8 +430,6 @@ def stream_scd2_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch ``scd2_customer_two_batch`` exactly, so the same oracle gates
     this path — proving the streaming ingest converges to the batch
     warehouse state."""
-    import shutil
-    import tempfile
     import uuid
 
     from ..queries.warehouse import CUSTOMER_CFG, D0, D1, _customer_batch2
@@ -468,81 +528,30 @@ SESSION_STATS_SPLIT = "2024-01-16 00:00:00"
 
 @_stream_scoped
 def stream_user_session_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Custom stateful streaming operator end-to-end (§2.9 "custom
-    stateful operators"): per-user lifetime session statistics via
-    ``applyInPandasWithState`` (``streaming/stateful.py``), replayed as
-    TWO time-split ``availableNow`` runs through ONE checkpoint — the
-    state store carries each user's (n_events, n_sessions, first_us,
-    last_us) across the runs, exactly how a daily-restarted production
-    stream resumes. The monotone fold over both update-mode sinks equals
-    the batch lag/cumsum sessionization, which is the oracle.
-    """
-    import shutil
-    import tempfile
+    """Per-user lifetime session statistics ``(user_id, n_events,
+    n_sessions, first_us, last_us)`` from a stream of events, where a gap
+    strictly greater than ``SESSION_GAP_SECONDS`` opens a session.
 
+    The events arrive as two ``availableNow`` runs through one checkpoint,
+    split at ``SESSION_STATS_SPLIT``, so each user's later events come in
+    a later micro-batch. Each micro-batch is folded into versioned state
+    with ``operators/sessionize.session_slice`` and
+    ``merge_session_state``, which need batches in time order per user.
+    The result equals the batch lag-and-count sessionization, which is
+    the oracle."""
+    from ..operators.sessionize import merge_session_state, session_slice
     from ..queries.eventops import SESSION_GAP_SECONDS
-    from ..session import scoped_confs
-    from ..sources.tables import load_table, scaled_shuffle_partitions
-    from .stateful import user_session_stats
+    from ..sources.tables import load_table
 
     ev = load_table(spark, sf_dir, "events").select("user_id", "ts")
-    base = tempfile.mkdtemp(prefix="stream_session_stats_")
-    src = f"{base}/incoming"
-    ckpt = f"{base}/ckpt"
-    out_dir = f"{base}/updates"
-    schema = ev.schema
     split = F.lit(SESSION_STATS_SPLIT).cast("timestamp")
-
-    # foreachBatch, not the memory sink: only fault-tolerant sinks may
-    # resume a checkpoint, and resuming is the point of the two-run replay
-    def sink(batch: DataFrame, batch_id: int) -> None:
-        batch.write.mode("append").parquet(out_dir)
-
-    def start_run() -> None:
-        q = (
-            user_session_stats(
-                spark.readStream.schema(schema).parquet(src),
-                SESSION_GAP_SECONDS,
-            )
-            .writeStream.foreachBatch(sink)
-            .option("checkpointLocation", ckpt)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain(q, "stateful session")
-
-    # Each state-store partition is one Python worker task per micro-batch:
-    # the floor is one wave of them (at most 16, at most the core count),
-    # growing with input bytes beyond it.
-    n = scaled_shuffle_partitions(
-        sf_dir,
-        ("events",),
-        min(16, spark.sparkContext.defaultParallelism),
-        target_bytes=_STREAM_TARGET_BYTES,
+    return _versioned_fold(
+        spark,
+        "session_stats",
+        [ev.filter(F.col("ts") < split), ev.filter(F.col("ts") >= split)],
+        lambda batch: session_slice(batch, SESSION_GAP_SECONDS),
+        lambda state, later: merge_session_state(state, later, SESSION_GAP_SECONDS),
     )
-    try:
-        ev.filter(F.col("ts") < split).write.mode("append").parquet(src)
-        with scoped_confs(spark, {"spark.sql.shuffle.partitions": str(n)}):
-            start_run()
-            ev.filter(F.col("ts") >= split).write.mode("append").parquet(src)
-            start_run()
-        # every column is monotone per user (first_us constant once set),
-        # so max/min folds recover each user's LAST emission
-        out = (
-            spark.read.parquet(out_dir)
-            .groupBy("user_id")
-            .agg(
-                F.max("n_events").alias("n_events"),
-                F.max("n_sessions").alias("n_sessions"),
-                F.min("first_us").alias("first_us"),
-                F.max("last_us").alias("last_us"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-    return out
 
 
 # 1800000000 us == queries.eventops.SESSION_GAP_SECONDS (strict > gap
@@ -584,8 +593,6 @@ def stream_audit_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct batch, derived from the audit table itself) and
     ``replay_exercised`` (the handler really ran more times than there
     were batches; harness-asserted, constant TRUE in the oracle)."""
-    import shutil
-    import tempfile
     import uuid
     from datetime import datetime
 
@@ -683,8 +690,6 @@ def stream_mart_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     is a guarded no-op (the audit-table batch key), so at-least-once
     delivery cannot double-count. The presented mart is bit-identical to
     a one-shot build — the same oracle as the batch IVM query."""
-    import shutil
-    import tempfile
     import uuid
     from datetime import datetime
 
@@ -697,7 +702,6 @@ def stream_mart_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # write, replay checkpoint) — persist so it computes once
     fact = mart_ivm_fact(spark, sf_dir).persist()
     base = tempfile.mkdtemp(prefix="stream_mart_refresh_")
-    src = f"{base}/incoming"
     db = f"stream_ivm_{uuid.uuid4().hex[:12]}"
     mart = "mart_daily_state"
     t0 = datetime(2026, 1, 1, 0, 0, 0)
@@ -720,26 +724,11 @@ def stream_mart_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    def run() -> None:
-        q = (
-            spark.readStream.schema(schema)
-            .parquet(src)
-            .writeStream.foreachBatch(handler)
-            .option("checkpointLocation", f"{base}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain(q, "mart-refresh")
-
     try:
         base_feed = fact.filter(F.col("__ok") % IVM_DELTA_MOD != 0).drop("__ok")
         delta = fact.filter(F.col("__ok") % IVM_DELTA_MOD == 0).drop("__ok")
-        base_feed.write.mode("append").parquet(src)
-        # nullable the way a parquet read reports it, without a read-back job
-        schema = base_feed.schema.toNullable()
-        run()
-        delta.write.mode("append").parquet(src)
-        run()
+        _feed_and_run(base_feed, base, handler, "mart-refresh")
+        _feed_and_run(delta, base, handler, "mart-refresh")
         replay_batch = delta.localCheckpoint(eager=True)
         # at-least-once redelivery of the final micro-batch: same stream
         # batch id, guard skips (apply_batch returns False)
@@ -770,84 +759,42 @@ def _mart_ivm_oracle() -> str:
 
 @_stream_scoped
 def stream_cdc_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming changelog compaction: a ``foreachBatch`` sink folds each
-    micro-batch's per-key compaction state (``operators/cdc.compact_batch``)
-    into the stored state with ``merge_state`` — the log is NEVER
-    rescanned; each merge touches one state-table-sized frame plus the
-    micro-batch. The feed is split by event-id PARITY (not time), so the
-    second batch carries sequences both older and newer than the first —
-    the max_by-over-total-order merge, not arrival order, decides every
-    key. Final presented snapshot is bit-identical to the one-shot batch
+    """Streaming changelog compaction: each micro-batch's per-key
+    compaction state (``operators/cdc.compact_batch``) is folded into the
+    stored state with ``merge_state`` — the log is NEVER rescanned; each
+    merge touches one state-table-sized frame plus the micro-batch. The
+    feed is split by event-id PARITY (not time), so the second batch
+    carries sequences both older and newer than the first — the
+    max_by-over-total-order merge, not arrival order, decides every key.
+    Final presented snapshot is bit-identical to the one-shot batch
     compaction, so it shares ``events_cdc_compaction``'s oracle.
 
-    State versions are written to per-batch paths (v{batch_id}) — the
+    State versions land at per-batch paths (``_versioned_fold``) — the
     poor-man's versioned table; at cluster scale the same merge plan
     lands in a transactional MERGE on one table (see ARCHITECTURE.md,
-    Streaming SCD2 row). The previous version is addressed by the
-    BATCH ID (v{batch_id-1}), not driver-local state: the micro-batch
-    id is stable across checkpoint restarts, so a redelivered batch
-    re-derives v{batch_id} from the immutable v{batch_id-1} — an
-    idempotent rewrite (never a double-merge, and never an overwrite
-    of the very path the merge plan is lazily reading)."""
-    import os
-    import shutil
-    import tempfile
-
+    Streaming SCD2 row)."""
     from ..operators import cdc
     from ..queries.eventops import CDC_DELETE_OP
     from ..sources.tables import load_tables
 
-    base = tempfile.mkdtemp(prefix="stream_cdc_")
-    src = f"{base}/incoming"
-    kw = dict(
-        key_col="user_id",
-        seq_cols=("ts", "event_id"),
-        op_col="event_type",
-        delete_op=CDC_DELETE_OP,
-        payload_cols=("event_id", "value"),
+    ev = load_tables(spark, sf_dir, "events")["events"]
+    return _versioned_fold(
+        spark,
+        "cdc",
+        [ev.filter(F.col("event_id") % 2 == 0), ev.filter(F.col("event_id") % 2 == 1)],
+        lambda batch: cdc.compact_batch(
+            batch,
+            key_col="user_id",
+            seq_cols=("ts", "event_id"),
+            op_col="event_type",
+            delete_op=CDC_DELETE_OP,
+            payload_cols=("event_id", "value"),
+        ),
+        lambda state, later: cdc.merge_state(state, later, "user_id"),
+        lambda state: cdc.present_state(
+            state, "user_id", CDC_DELETE_OP, ("event_id", "value")
+        ),
     )
-
-    def spath(version: int) -> str:
-        return f"{base}/state/v{version}"
-
-    def handler(batch: DataFrame, batch_id: int) -> None:
-        agg = cdc.compact_batch(batch, **kw)
-        if batch_id > 0:
-            prev = batch.sparkSession.read.parquet(spath(batch_id - 1))
-            agg = cdc.merge_state(prev, agg, "user_id")
-        agg.write.mode("overwrite").parquet(spath(batch_id))
-
-    def run() -> None:
-        q = (
-            spark.readStream.schema(schema)
-            .parquet(src)
-            .writeStream.foreachBatch(handler)
-            .option("checkpointLocation", f"{base}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain(q, "cdc-compaction")
-
-    try:
-        ev = load_tables(spark, sf_dir, "events")["events"]
-        ev.filter(F.col("event_id") % 2 == 0).write.mode("append").parquet(src)
-        # nullable the way a parquet read reports it, without a read-back job
-        schema = ev.schema.toNullable()
-        run()
-        ev.filter(F.col("event_id") % 2 == 1).write.mode("append").parquet(src)
-        run()
-        latest = max(
-            int(d[1:]) for d in os.listdir(f"{base}/state") if d[0] == "v"
-        )
-        out = cdc.present_state(
-            spark.read.parquet(spath(latest)),
-            "user_id",
-            CDC_DELETE_OP,
-            ("event_id", "value"),
-        ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-    return out
 
 
 def _cdc_oracle() -> str:
@@ -899,15 +846,11 @@ def stream_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     poor-man's versioned table as ``stream_cdc_compaction``; at cluster
     scale the store merge is one idempotent MERGE/append on a hash-
     bucketed table."""
-    import shutil
-    import tempfile
-
     from ..operators import spans as SP
     from ..queries.pipelineops import SUBSTR_W
     from ..sources.tables import load_tables
 
     base = tempfile.mkdtemp(prefix="stream_substr_")
-    src = f"{base}/incoming"
 
     def spath(version: int) -> str:
         return f"{base}/store/v{version}"
@@ -1005,17 +948,9 @@ def stream_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             finally:
                 pos.unpersist()
 
-    def run() -> None:
+    def run(feed: DataFrame) -> None:
         run_state["fresh"] = 0
-        q = (
-            spark.readStream.schema(schema)
-            .parquet(src)
-            .writeStream.foreachBatch(handler)
-            .option("checkpointLocation", f"{base}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain(q, "substring-dedup")
+        _feed_and_run(feed, base, handler, "substring-dedup")
         if run_state["fresh"] != 1:
             raise AssertionError(
                 f"stream_substring_dedup: run completed with "
@@ -1025,12 +960,8 @@ def stream_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     try:
         docs = load_tables(spark, sf_dir, "documents")["documents"]
-        docs.filter(F.col("doc_id") % 2 == 0).write.mode("append").parquet(src)
-        # nullable the way a parquet read reports it, without a read-back job
-        schema = docs.schema.toNullable()
-        run()
-        docs.filter(F.col("doc_id") % 2 == 1).write.mode("append").parquet(src)
-        run()
+        run(docs.filter(F.col("doc_id") % 2 == 0))
+        run(docs.filter(F.col("doc_id") % 2 == 1))
         out = spark.read.parquet(f"{base}/reports/b*").localCheckpoint(
             eager=True
         )

@@ -1,71 +1,17 @@
-"""applyInPandasWithState: state genuinely crosses micro-batches.
+"""Per-user session stats over a stream: the JVM fold and its replay.
 
-The events parquet is split into two files read one-per-trigger, so every
-user's total accumulates across >= 2 batches; the final running value must
-equal the batch-mode per-user sum."""
+``stream_user_session_stats`` folds each micro-batch into versioned state
+with ``operators/sessionize.session_slice`` and ``merge_session_state``.
+These tests pin the gap constant against the oracle, the state crossing
+two checkpointed runs, the absence of Python and state stores on the
+path, and the fold's equality with the batch rule for any time-ordered
+split."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
-from datafoundation_multi_source_retail_data_integration_hub_spark.streaming.stateful import (
-    running_total_per_user,
-)
-
 from .conftest import SF_SMOKE
-
-
-def test_running_total_state_across_batches(spark, tmp_path):
-    from datafoundation_multi_source_retail_data_integration_hub_spark.sources.tables import (
-        load_table,
-    )
-
-    events = load_table(spark, SF_SMOKE, "events")
-    src = str(tmp_path / "events_split")
-    # two files -> two micro-batches with maxFilesPerTrigger=1
-    events.filter(F.col("event_id") % 2 == 0).coalesce(1).write.parquet(
-        src, mode="overwrite"
-    )
-    events.filter(F.col("event_id") % 2 == 1).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-
-    stream = (
-        spark.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    out = running_total_per_user(stream)
-    q = (
-        out.writeStream.outputMode("update")
-        .format("memory")
-        .queryName("running_totals")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    emitted = spark.table("running_totals").collect()
-    # each user was emitted once per micro-batch containing their events
-    per_user_emits = {}
-    finals = {}
-    for r in emitted:
-        per_user_emits[r["user_id"]] = per_user_emits.get(r["user_id"], 0) + 1
-        finals[r["user_id"]] = max(
-            finals.get(r["user_id"], float("-inf")), r["running_value"]
-        )
-    assert max(per_user_emits.values()) == 2  # state crossed batches
-
-    expected = {
-        r["user_id"]: r["total"]
-        for r in events.groupBy("user_id").agg(F.sum("value").alias("total")).collect()
-    }
-    assert set(finals) == set(expected)
-    for u in expected:
-        assert finals[u] == pytest.approx(expected[u], rel=1e-9)
 
 
 def test_session_stats_gap_matches_oracle_constant():
@@ -137,35 +83,30 @@ def test_session_stats_state_crosses_checkpointed_runs(spark):
         assert out[u]["last_us"] >= split_us
 
 
-def test_session_stats_runs_one_wave_of_state_stores(spark):
-    """The stateful stage holds at most one wave of state-store instances
-    (one Python worker task each per micro-batch): min(16, cores) at
-    fixture scale, with the oracle answer unchanged."""
+def test_session_stats_runs_no_python_and_no_state_store(spark):
+    """The session fold runs in the JVM: no stream progress reports a
+    state operator, and no SQL execution the call starts plans a Python
+    operator or runs a PythonRDD."""
     import threading
     import time
 
     from pyspark.sql.streaming import StreamingQueryListener
 
     from datafoundation_multi_source_retail_data_integration_hub_spark.streaming.pipelines import (
-        STREAM_USER_SESSION_STATS_ORACLE,
         stream_user_session_stats,
     )
 
-    from .oracle import compare
-
-    class StateParts(StreamingQueryListener):
+    class Progress(StreamingQueryListener):
         def __init__(self):
-            self.parts = []
+            self.state_ops = []
             self.lock = threading.Lock()
 
         def onQueryStarted(self, event):
             pass
 
         def onQueryProgress(self, event):
-            ops = event.progress.stateOperators or []
-            if ops:
-                with self.lock:
-                    self.parts.append(ops[0].numShufflePartitions)
+            with self.lock:
+                self.state_ops.append(list(event.progress.stateOperators or []))
 
         def onQueryIdle(self, event):
             pass
@@ -173,25 +114,52 @@ def test_session_stats_runs_one_wave_of_state_stores(spark):
         def onQueryTerminated(self, event):
             pass
 
-    listener = StateParts()
+    sc = spark.sparkContext._jsc.sc()
+    sql_store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():
+        listed = sql_store.executionsList()
+        return [listed.apply(i) for i in range(listed.size())]
+
+    def rdd_names(job_id):
+        names = []
+        graphs = sc.statusStore().operationGraphForJob(job_id)
+        for g in (graphs.apply(i) for i in range(graphs.size())):
+            clusters = [g.rootCluster()]
+            while clusters:
+                c = clusters.pop()
+                nodes, kids = c.childNodes(), c.childClusters()
+                names += [nodes.apply(i).name() for i in range(nodes.size())]
+                clusters += [kids.apply(i) for i in range(kids.size())]
+        return names
+
+    seen = {e.executionId() for e in executions()}
+    listener = Progress()
     spark.streams.addListener(listener)
     try:
-        compare(
-            spark,
-            SF_SMOKE,
-            stream_user_session_stats,
-            STREAM_USER_SESSION_STATS_ORACLE,
-            "stream_user_session_stats",
-        )
+        stream_user_session_stats(spark, SF_SMOKE).collect()
         # progress events reach Python asynchronously; one per run at least
         deadline = time.monotonic() + 30
-        while len(listener.parts) < 2 and time.monotonic() < deadline:
+        while len(listener.state_ops) < 2 and time.monotonic() < deadline:
             time.sleep(0.1)
     finally:
         spark.streams.removeListener(listener)
-    want = min(16, spark.sparkContext.defaultParallelism)
-    assert len(listener.parts) >= 2
-    assert set(listener.parts) == {want}
+    sc.listenerBus().waitUntilEmpty(30_000)
+
+    assert len(listener.state_ops) >= 2
+    assert all(ops == [] for ops in listener.state_ops)
+    ran = [e for e in executions() if e.executionId() not in seen]
+    assert ran
+    forbidden = ("FlatMapGroupsInPandasWithState", "ArrowEvalPython", "PythonRDD")
+    for e in ran:
+        plan = e.physicalPlanDescription()
+        jobs = e.jobs().keysIterator()
+        names = []
+        while jobs.hasNext():
+            names += rdd_names(jobs.next())
+        for bad in forbidden:
+            assert bad not in plan, (bad, e.description())
+            assert bad not in names, (bad, e.description())
 
 
 # ---------------------------------------------------------------------------
@@ -199,25 +167,6 @@ def test_session_stats_runs_one_wave_of_state_stores(spark):
 # ANY time-ordered batch split (the streaming determinism contract), on
 # timestamps that deliberately include exact-gap boundaries and ties.
 # ---------------------------------------------------------------------------
-
-
-class _FakeState:
-    """Minimal GroupState stand-in: exists/get/update only (all the
-    transition kernel touches)."""
-
-    def __init__(self):
-        self._v = None
-
-    @property
-    def exists(self):
-        return self._v is not None
-
-    @property
-    def get(self):
-        return self._v
-
-    def update(self, v):
-        self._v = tuple(v)
 
 
 def _batch_reference(all_us, gap_us):
@@ -232,77 +181,99 @@ def _batch_reference(all_us, gap_us):
     return len(xs), n_sessions, xs[0], xs[-1]
 
 
-def test_session_kernel_matches_batch_for_any_ordered_split():
-    import itertools
+_GAP_S = 1
+_GAP = _GAP_S * 1_000_000
+_N_BATCHES = 4
 
-    import pandas as pd
+# Per-user splits that must appear in every folded frame, one user each:
+# a cross-batch gap of exactly the gap (continues), gap + 1 (opens),
+# gap - 1 (continues), a tie across the batch boundary, a user with state
+# missing from a batch, and a user first seen in a later batch.
+_FIXED_SPLITS = (
+    [[0], [_GAP]],
+    [[0], [_GAP + 1]],
+    [[0], [_GAP - 1]],
+    [[5, 5], [5], [5, _GAP + 6]],
+    [[0], [], [_GAP + 1], []],
+    [[], [], [0, _GAP, 2 * _GAP + 1]],
+)
+
+
+def _fold_splits(spark, splits):
+    """Fold every user's ordered split through ``session_slice`` and
+    ``merge_session_state``: user ``i`` owns ``splits[i]``, and batch ``k``
+    of the fold holds piece ``k`` of every user. Returns ``{user: row}``."""
+    from datafoundation_multi_source_retail_data_integration_hub_spark.functions.local import (
+        local_frame,
+    )
+    from datafoundation_multi_source_retail_data_integration_hub_spark.operators.sessionize import (
+        merge_session_state,
+        session_slice,
+    )
+
+    state = None
+    for k in range(_N_BATCHES):
+        rows = [
+            (user, us)
+            for user, pieces in enumerate(splits)
+            for us in (pieces[k] if k < len(pieces) else [])
+        ]
+        batch = local_frame(spark, rows, "user_id long, us long").select(
+            "user_id", F.timestamp_micros("us").alias("ts")
+        )
+        piece = session_slice(batch, _GAP_S)
+        state = piece if state is None else merge_session_state(state, piece, _GAP_S)
+    return {r["user_id"]: r for r in state.collect()}
+
+
+def test_session_kernel_matches_batch_for_any_ordered_split(spark):
+    """The fold equals the batch computation for ANY time-ordered split
+    into 1-4 batches, on timestamps that deliberately include exact-gap
+    boundaries, gap +- 1 and ties. Every generated split is its own user
+    in one frame, so each hypothesis example is one 4-batch fold."""
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
-    from datafoundation_multi_source_retail_data_integration_hub_spark.streaming.stateful import (
-        session_transition,
+    # timestamps drawn near multiples of the gap so exact-boundary gaps
+    # (== gap, continue) and just-over gaps (> gap, open) both occur,
+    # plus duplicates
+    near_gap = st.integers(min_value=0, max_value=20).flatmap(
+        lambda k: st.integers(min_value=k * _GAP - 1, max_value=k * _GAP + 1)
     )
 
-    GAP = 1000  # small gap in us so generated data straddles it often
-
-    @settings(max_examples=200, deadline=None)
-    @given(
-        # timestamps drawn near multiples of GAP so exact-boundary gaps
-        # (== GAP, merged) and just-over gaps (> GAP, split) both occur,
-        # plus duplicates
-        st.lists(
-            st.integers(min_value=0, max_value=20).flatmap(
-                lambda k: st.integers(min_value=k * GAP - 1, max_value=k * GAP + 1)
-            ),
-            min_size=1,
-            max_size=30,
-        ),
-        st.integers(min_value=1, max_value=4),  # number of batches
-        st.randoms(use_true_random=False),
-    )
-    def check(us, n_batches, rnd):
-        xs = sorted(us)
-        # any ORDERED split: batch i's timestamps all <= batch i+1's
-        cuts = sorted(rnd.choices(range(len(xs) + 1), k=n_batches - 1))
-        pieces = []
-        lo = 0
-        for c in [*cuts, len(xs)]:
-            pieces.append(xs[lo:c])
-            lo = c
-        state = _FakeState()
-        fn = session_transition(GAP)
-        out = None
-        for piece in pieces:
-            if not piece and state._v is None:
-                continue  # stream wouldn't invoke the group w/o rows/state
-            # shuffle within the batch AND split it into several Arrow-like
-            # chunks in arbitrary order: applyInPandasWithState delivers a
-            # group's batch as multiple pdfs (one per Arrow chunk) in
-            # partition/file order, so the kernel must sort ACROSS chunks,
-            # not just within each
-            shuffled = list(piece)
-            rnd.shuffle(shuffled)
-            chunk_cuts = sorted(
-                rnd.choices(range(len(shuffled) + 1), k=rnd.randint(0, 3))
+    @st.composite
+    def ordered_split(draw):
+        xs = sorted(draw(st.lists(near_gap, min_size=1, max_size=30)))
+        n_batches = draw(st.integers(min_value=1, max_value=_N_BATCHES))
+        # any ORDERED split: piece i's timestamps all <= piece i+1's; a
+        # cut at 0 makes the user first appear in a later batch, and
+        # fewer batches than the fold leave the user out of later ones
+        cuts = sorted(
+            draw(
+                st.lists(
+                    st.integers(min_value=0, max_value=len(xs)),
+                    min_size=n_batches - 1,
+                    max_size=n_batches - 1,
+                )
             )
-            chunks, lo2 = [], 0
-            for c in [*chunk_cuts, len(shuffled)]:
-                chunks.append(shuffled[lo2:c])
-                lo2 = c
-            frames = iter(
-                [
-                    pd.DataFrame({"__us": pd.Series(ch, dtype="int64")})
-                    for ch in chunks
-                ]
-            )
-            out = list(fn((7,), frames, state))[-1]
-        got = (
-            int(out["n_events"].iloc[0]),
-            int(out["n_sessions"].iloc[0]),
-            int(out["first_us"].iloc[0]),
-            int(out["last_us"].iloc[0]),
         )
-        assert got == _batch_reference(xs, GAP)
+        bounds = [0, *cuts, len(xs)]
+        return [xs[lo:hi] for lo, hi in zip(bounds, bounds[1:])]
+
+    @settings(max_examples=6, deadline=None)
+    @given(st.lists(ordered_split(), min_size=20, max_size=60))
+    def check(generated):
+        splits = [*_FIXED_SPLITS, *generated]
+        got = _fold_splits(spark, splits)
+        assert set(got) == set(range(len(splits)))
+        for user, pieces in enumerate(splits):
+            r = got[user]
+            assert (
+                r["n_events"],
+                r["n_sessions"],
+                r["first_us"],
+                r["last_us"],
+            ) == _batch_reference([u for p in pieces for u in p], _GAP), pieces
 
     check()
 
