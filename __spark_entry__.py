@@ -3,6 +3,9 @@
 ``entry(spark)`` runs the flagship star-join query on sf0.001.
 ``queries()`` / ``oracle_sql()`` aggregate every implemented operator's
 (Spark callable, DuckDB oracle SQL) pair from the engine's query modules.
+Each ``queries()`` callable is a prepared read (``operators.storage.
+prepared``): a pure build is analyzed once per session and re-planned
+and executed on every call.
 Names without an oracle entry are non-SQL-expressible ops (the driver
 records a rows-only check for those).
 """
@@ -14,6 +17,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 from datafoundation_multi_source_retail_data_integration_hub_spark import queries as q
+from datafoundation_multi_source_retail_data_integration_hub_spark.operators import storage
 from datafoundation_multi_source_retail_data_integration_hub_spark.streaming import (
     pipelines as streaming_pipelines,
 )
@@ -138,7 +142,7 @@ def _ordered(attr: str) -> dict:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return _ordered("QUERIES")
+    return {name: storage.prepared(name, fn) for name, fn in _ordered("QUERIES").items()}
 
 
 def oracle_sql() -> dict[str, str]:

@@ -164,46 +164,6 @@ def exact_topk_per_query(scored: DataFrame, k: int) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Arrow-vectorized alternative scoring path
-# ---------------------------------------------------------------------------
-
-
-def cosine_pandas_udf(dim: int):
-    """Pandas-UDF cosine against a fixed query vector — the Arrow-batched
-    alternative when per-row expression folds become the bottleneck (very
-    high dims). Kept API-compatible with the expression path; tests assert
-    both produce identical scores. Returns a udf factory: call with the
-    query vector (a Python list) to get the column function."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import functions as SF
-    from pyspark.sql import types as ST
-
-    def for_query(qvec: list[float]):
-        if len(qvec) != dim:
-            # validate at definition time — a mismatched query/corpus
-            # dim would otherwise surface as a numpy broadcast error
-            # deep inside an executor batch
-            raise ValueError(
-                f"query vector has dim {len(qvec)}, expected {dim}"
-            )
-        q = np.asarray(qvec, dtype="float64")
-        qn = float(np.sqrt((q * q).sum()))
-
-        def _cos(batch):  # pd.Series[list[float]] -> pd.Series[float]
-            m = np.vstack(batch.map(lambda v: np.asarray(v, dtype="float64")))
-            dots = m @ q
-            norms = np.sqrt((m * m).sum(axis=1))
-            return pd.Series(dots / (norms * qn))
-
-        # no type hints: local-alias annotations are not resolvable by
-        # pyspark's hint inference; explicit SCALAR eval type instead
-        return SF.pandas_udf(_cos, ST.DoubleType())
-
-    return for_query
-
-
-# ---------------------------------------------------------------------------
 # LSH (sign random projection) ANN
 # ---------------------------------------------------------------------------
 

@@ -4,6 +4,8 @@
 postings, signatures, vector working sets) so a multi-consumer plan
 computes it once. ``memo(spark, lifetime, key, build)`` returns the value
 ``build()`` made for ``key`` the first time it was asked for.
+``prepared(name, query)`` wraps a query callable so a pure build's
+analyzed plan is reused within the session.
 
 Contract:
 
@@ -16,7 +18,9 @@ Contract:
   across ``build``);
 - ``RUN`` entries live until the next ``unpersist_all()``, which also
   unpersists every ``persist_tracked`` frame; ``SESSION`` entries live as
-  long as the process, scoped by application id.
+  long as the process, scoped by application id;
+- a prepared read takes no build lock: concurrent first calls each build,
+  and the first pure plan stored is the one kept.
 
 Releasing a persisted frame before a consuming action is still correct
 (Spark recomputes it), so ``unpersist_all`` is storage hygiene between
@@ -38,15 +42,21 @@ _LOCK = threading.Lock()
 _ENTRIES: dict[tuple, Any] = {}
 _BUILD_LOCKS: dict[tuple, threading.Lock] = {}
 _PERSISTED: list[DataFrame] = []
+# bumped by every ``RUN`` lookup and every ``persist_tracked``: a build
+# that moves it depends on state ``unpersist_all`` releases
+_run_touches = 0
 
 
 def memo(
     spark: SparkSession, lifetime: str, key: tuple, build: Callable[[], Any]
 ) -> Any:
     """The value cached under ``key`` for ``lifetime``, built on first use."""
+    global _run_touches
     assert lifetime in (RUN, SESSION), lifetime
     full = (lifetime, spark.sparkContext.applicationId, *key)
     with _LOCK:
+        if lifetime == RUN:
+            _run_touches += 1
         if full in _ENTRIES:
             return _ENTRIES[full]
         build_lock = _BUILD_LOCKS.setdefault(full, threading.Lock())
@@ -61,6 +71,54 @@ def memo(
     return value
 
 
+def prepared(
+    name: str, query: Callable[[SparkSession, str], DataFrame]
+) -> Callable[[SparkSession, str], DataFrame]:
+    """``query`` as a prepared read: a build that submits no Spark job and
+    uses no ``RUN`` entry or tracked persist is kept as its analyzed plan,
+    a ``SESSION`` entry keyed ``("read", name, sf_dir)``. Every later call
+    returns a fresh ``DataFrame`` over that plan, bound to the caller's
+    session, so optimization, physical planning, AQE and execution still
+    run per call and no shuffle, broadcast or stage output is reused. A
+    build that breaks the rule (a pipeline, a write, a stream, a corpus op
+    that persists its intermediates) is returned as it is and built again
+    on the next call; once its ``SESSION`` inputs exist it may build pure
+    and be kept from then on.
+
+    Contract: a prepared read stays valid while the files under ``sf_dir``
+    do not change within the session, the same contract as the
+    ``("table", sf_dir, name)`` relations it is built from. Its exprIds
+    repeat across calls. A job another thread submits during a build only
+    makes the build look impure."""
+
+    def call(spark: SparkSession, sf_dir: str) -> DataFrame:
+        full = (SESSION, spark.sparkContext.applicationId, "read", name, sf_dir)
+        with _LOCK:
+            plan = _ENTRIES.get(full)
+        if plan is not None:
+            jdf = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+                spark._jsparkSession, plan
+            )
+            return DataFrame(jdf, spark)
+        before = _marks(spark)
+        df = query(spark, sf_dir)
+        if _marks(spark) == before:
+            plan = df._jdf.queryExecution().analyzed()
+            with _LOCK:
+                _ENTRIES.setdefault(full, plan)
+        return df
+
+    return call
+
+
+def _marks(spark: SparkSession) -> tuple[int, int]:
+    """(next Spark job id, ``RUN`` touches): equal before and after a
+    build when the build ran no job and used no ``RUN`` state."""
+    jobs = spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
+    with _LOCK:
+        return jobs, _run_touches
+
+
 def cached_keys(lifetime: str) -> list[tuple]:
     """The ``key`` of every entry held for ``lifetime``, any application."""
     with _LOCK:
@@ -69,8 +127,10 @@ def cached_keys(lifetime: str) -> list[tuple]:
 
 def persist_tracked(df: DataFrame) -> DataFrame:
     """Persist ``df`` and register it for ``unpersist_all``."""
+    global _run_touches
     with _LOCK:
         _PERSISTED.append(df)
+        _run_touches += 1
     return df.persist()
 
 

@@ -634,7 +634,9 @@ def stream_audit_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         replay_exercised = len(seen) > len(set(seen))
 
         counts = (
-            spark.read.parquet(f"{out}/b*")
+            # named paths: a glob sends the streaming-sink metadata probe
+            # into a logged stack trace
+            spark.read.parquet(*[f"{out}/b{i}" for i in sorted(set(seen))])
             .groupBy(F.window("ts", "10 minutes").alias("w"), "event_type")
             .agg(
                 F.count("*").alias("n_events"),
@@ -962,9 +964,10 @@ def stream_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs = load_tables(spark, sf_dir, "documents")["documents"]
         run(docs.filter(F.col("doc_id") % 2 == 0))
         run(docs.filter(F.col("doc_id") % 2 == 1))
-        out = spark.read.parquet(f"{base}/reports/b*").localCheckpoint(
-            eager=True
-        )
+        # one committed report per store version; named paths, because a
+        # glob makes the streaming-sink metadata probe log a stack trace
+        reports = [f"{base}/reports/b{i}" for i in range(_store_versions())]
+        out = spark.read.parquet(*reports).localCheckpoint(eager=True)
     finally:
         shutil.rmtree(base, ignore_errors=True)
     return out

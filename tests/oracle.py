@@ -13,6 +13,9 @@ import os
 import struct
 
 import duckdb
+import pytest
+
+import __spark_entry__ as entry
 
 TABLES = (
     "region",
@@ -155,3 +158,35 @@ def compare(spark, sf_dir: str, spark_fn, sql: str, name: str = "?") -> None:
     o = _norm_rows(oracle_rows, oracle_cols)
     for i, (a, b) in enumerate(zip(s, o)):
         assert a == b, f"{name}: first row diff at {i}:\n  spark={a}\n oracle={b}"
+
+
+# the reference dashboard's tiles; each is also checked over three
+# consecutive calls through the ``queries()`` registry, whose later calls
+# run a prepared (analyzed-once) plan
+DASHBOARD_QUERIES = (
+    "kpi_summary",
+    "daily_sales_trend",
+    "flagship_star_revenue",
+    "top_customers",
+    "mart_sales_performance",
+    "dashboard_extract",
+)
+
+
+def oracle_cases(module) -> list:
+    """``(name, prepared)`` cases: one per query of ``module``, plus a
+    ``-prepared`` case for each of its dashboard queries."""
+    return [pytest.param(n, False, id=n) for n in sorted(module.QUERIES)] + [
+        pytest.param(n, True, id=f"{n}-prepared")
+        for n in DASHBOARD_QUERIES
+        if n in module.QUERIES
+    ]
+
+
+def compare_case(spark, sf_dir: str, module, name: str, prepared: bool) -> None:
+    if not prepared:
+        compare(spark, sf_dir, module.QUERIES[name], module.ORACLES[name], name)
+        return
+    fn = entry.queries()[name]
+    for call in range(3):
+        compare(spark, sf_dir, fn, module.ORACLES[name], f"{name} call {call}")

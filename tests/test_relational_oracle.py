@@ -7,12 +7,12 @@ import pytest
 from datafoundation_multi_source_retail_data_integration_hub_spark.queries import relational
 
 from .conftest import SF_SMOKE
-from .oracle import compare
+from .oracle import compare_case, oracle_cases
 
 
-@pytest.mark.parametrize("name", sorted(relational.QUERIES))
-def test_relational_query_matches_oracle(spark, name):
-    compare(spark, SF_SMOKE, relational.QUERIES[name], relational.ORACLES[name], name)
+@pytest.mark.parametrize("name,prepared", oracle_cases(relational))
+def test_relational_query_matches_oracle(spark, name, prepared):
+    compare_case(spark, SF_SMOKE, relational, name, prepared)
 
 
 def test_flagship_nonempty(spark):

@@ -1,11 +1,9 @@
-"""Python on the row path lives in three modules.
+"""Python on the row path lives in two modules.
 
 Every other operator is a DataFrame/SQL expression that runs in the JVM.
-The three exceptions are the media decode (``operators/multimodal.py``),
-NFC normalization, which has no Spark builtin (``queries/pipelineops.py``),
-and the pandas cosine twin of the builtin scorer
-(``operators/similarity.py``). ARCHITECTURE.md's "Execution posture"
-names the same three."""
+The two exceptions are the media decode (``operators/multimodal.py``) and
+NFC normalization, which has no Spark builtin (``queries/pipelineops.py``).
+ARCHITECTURE.md's "Execution posture" names the same two."""
 
 from __future__ import annotations
 
@@ -20,7 +18,6 @@ _PYTHON_ROW_API = re.compile(r"applyInPandas\w*|mapIn(Pandas|Arrow)|pandas_udf|u
 
 ALLOWED = {
     "operators/multimodal.py",
-    "operators/similarity.py",
     "queries/pipelineops.py",
 }
 
@@ -43,7 +40,7 @@ def _python_row_names(tree: ast.AST) -> set[str]:
     return found
 
 
-def test_python_row_path_lives_in_three_modules():
+def test_python_row_path_lives_in_two_modules():
     root = pathlib.Path(pkg.__file__).parent
     users = {
         str(p.relative_to(root)): names

