@@ -1,11 +1,9 @@
 """Pure-Python JPEG codec: baseline-sequential AND progressive decode,
 plus minimal test-fixture encoders for both.
 
-Closes the Pillow dependence in the multimodal pixel tier (VERDICT r09
-directive 7; progressive added r11 — ~10% of real web corpora): baseline
-and progressive DCT / Huffman JPEGs now decode to raw 8-bit pixels with
-stdlib only, so ``resize_media`` yields real thumbnails in a codec-less
-environment. Supported: SOF0 (baseline sequential), SOF1 (extended
+Baseline and progressive DCT / Huffman JPEGs decode to raw 8-bit
+pixels with stdlib only, so ``resize_media`` yields real thumbnails with
+no raster library. Supported: SOF0 (baseline sequential), SOF1 (extended
 sequential, 8- and 12-bit — 12-bit samples level-shift by 2048, decode
 exactly, and scale to the module's 8-bit pixel contract; 16-bit Pq=1
 quantization tables; the §F.1.2.1.1 DC category-16 corner), and SOF2
@@ -16,12 +14,12 @@ compose through the generic per-component upsampler), restart markers
 in all modes. Arithmetic coding (SOF9+; no verifiable Table D.3 state
 machine available in this environment — see COVERAGE.md's declared
 boundary) and hierarchical/lossless frames raise
-``ValueError``/``NotImplementedError`` — callers fall back to Pillow
-or surface ``resize_ok=false`` data rows, never task failures.
+``ValueError``/``NotImplementedError`` — callers surface
+``resize_ok=false`` data rows, never task failures.
 
 Interpreted per-pixel loops are ~100x slower than a C codec; like the
-PNG/GIF paths, this is the deterministic fallback/oracle tier — bulk
-pipelines prefer Pillow via ``resize_image(backend="native")``.
+PNG/GIF paths, the decode is deterministic on any machine, which is what
+the oracle pins.
 
 This module is written from the public JPEG spec (ITU-T T.81): marker
 layout §B.2, Huffman table construction §C.2, the sequential decode
@@ -296,7 +294,7 @@ def decode_baseline(p: bytes) -> tuple[int, int, int, bytearray]:
                 # component; _decode_scan assumes the single fully
                 # interleaved scan — decoding a partial scan with MCU
                 # ordering would place blocks wrong and zero the other
-                # planes silently. Raise for the caller's Pillow fallback.
+                # planes silently. Raise instead.
                 raise NotImplementedError(
                     "non-interleaved baseline JPEG (scan covers "
                     f"{ns} of {len(frame[2])} components)"
@@ -707,7 +705,7 @@ def _decode_progressive(
     # 16.7 MP) covers real smartphone/web photo sizes while bounding
     # the worst case (3-component 4:4:4) near 500 MB transient per
     # blob, one blob at a time per task. Past the budget the row
-    # degrades to resize_ok=false (or Pillow when importable) — the
+    # degrades to resize_ok=false — the
     # same contract as every other decode boundary here.
     if fw * fh > (1 << 24):
         raise ValueError(
@@ -805,8 +803,8 @@ _GRAY_BLOCK = bytes([128]) * 64
 
 
 # ---------------------------------------------------------------------------
-# minimal encoder — test fixtures only (Pillow is absent in CI, so real
-# baseline streams must be built here). Single quant table of 1s keeps
+# minimal encoder — test fixtures only (no raster library builds the
+# real baseline streams the tests need). Single quant table of 1s keeps
 # the round-trip near-lossless; Huffman tables are the T.81 Annex K
 # luminance pair, valid for any symbol the encoder can emit.
 # ---------------------------------------------------------------------------
@@ -1128,7 +1126,7 @@ def encode_baseline(
 # ---------------------------------------------------------------------------
 # progressive (SOF2) encoder — test fixtures only, like the baseline
 # encoder: real spec-valid streams so the progressive decoder is
-# exercised without Pillow. Emits the same quantized coefficients as
+# exercised on real streams. Emits the same quantized coefficients as
 # encode_baseline, so a progressive stream decodes byte-identically to
 # its baseline twin.
 # ---------------------------------------------------------------------------

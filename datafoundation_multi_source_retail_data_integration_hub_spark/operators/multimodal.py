@@ -19,9 +19,8 @@ The codec boundary has three tiers:
   approximation — ``operators/jpeg.py``) decode, nearest-neighbor
   resize, and re-encode in PURE PYTHON — real thumbnails with no
   raster dependency (12-bit frames decode natively too in both DCT
-  modes, r12); arithmetic-coded JPEG streams use Pillow when
-  importable, else the row surfaces as ``resize_ok=false`` — never a
-  task failure;
+  modes); an arithmetic-coded JPEG or any other container surfaces as
+  ``resize_ok=false`` — never a task failure;
 - the FAKE format (``fake_image_bytes``) keeps its fully-deterministic
   arithmetic resize path so the DuckDB oracle can pin the pipeline.
 
@@ -43,18 +42,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-try:  # optional raster backend for real pixel ops (absent in CI)
-    from PIL import Image as _PILImage  # type: ignore
-
-    # DecompressionBombError subclasses Exception directly (NOT OSError):
-    # without it in the catch tuples, one oversized-dims payload (a
-    # classic bomb: huge declared dims in a few hundred bytes) would kill
-    # the whole Arrow batch task instead of degrading to resize_ok=false
-    _PIL_BOMB: tuple = (_PILImage.DecompressionBombError,)
-except ImportError:  # pragma: no cover - environment-dependent
-    _PILImage = None
-    _PIL_BOMB = ()
-
 # Per-row decode containment contracts, MODULE-level so the hostile-
 # input property tests import the exact production tuples instead of
 # hand-copying them (a drifted copy would keep passing while real
@@ -67,8 +54,7 @@ MEDIA_DECODE_ERRS: tuple = (
     IndexError,
     struct.error,
     zlib.error,
-    OSError,  # Pillow fallback on truncated real bytes
-    *_PIL_BOMB,  # DecompressionBombError is not OSError
+    OSError,
 )
 # - AV metadata tier (extract_av_meta)
 AV_META_CAUGHT: tuple = (
@@ -148,8 +134,7 @@ def _gif_meta(p: bytes) -> tuple[int, int, int]:
     return w, h, 3
 
 
-# Pure-path decompression-bomb guard (the stdlib analogue of Pillow's
-# MAX_IMAGE_PIXELS): a few-hundred-byte payload can declare gigapixel
+# Decompression-bomb guard: a few-hundred-byte payload can declare gigapixel
 # dims, and the pixel decoders allocate w*h*channels up front — cap the
 # pixel count so a hostile blob degrades to a data row instead of
 # OOM-killing the executor
@@ -227,8 +212,7 @@ def _png_decode_pixels(p: bytes) -> tuple[int, int, int, bytearray]:
     types 0/2/3/4/6 at depth 8; 16-bit for 0/2/4/6 (high-byte
     downsample); sub-byte depths (1/2/4) for grayscale and palette;
     Adam7 interlace. Palette output is expanded to RGB. Malformed
-    streams raise ValueError — callers surface it as ``resize_ok=false``
-    (or fall back to Pillow when present)."""
+    streams raise ValueError — callers surface it as ``resize_ok=false``."""
     w, h, _ = _png_meta(p)
     _check_pixel_budget(w, h)
     bit_depth, color_type, interlace = p[24], p[25], p[28]
@@ -330,9 +314,8 @@ def _nn_resample(
     """Nearest-neighbor scale-to-fit with the FAKE path's floor
     arithmetic (deterministic in any environment), shared by every real
     raster codec so pure-Python thumbnails are bit-reproducible.
-    SHRINK-ONLY, like Pillow's ``thumbnail``: a source already inside
-    ``max_side`` passes through at its own size — the pure and Pillow
-    paths must agree on thumbnail semantics per container."""
+    SHRINK-ONLY, the standard thumbnail semantics: a source already
+    inside ``max_side`` passes through at its own size."""
     m = max(w, h)
     target = min(max_side, m)
     dw = max(1, (w * target) // m)
@@ -360,8 +343,7 @@ def _png_resize(payload: bytes, max_side: int) -> bytes:
 def _jpeg_resize(payload: bytes, max_side: int) -> bytes:
     """Sequential (8/12-bit) or progressive (8/12-bit) JPEG -> PNG
     thumbnail via the pure decoder (``operators/jpeg.py``);
-    arithmetic-coded streams raise NotImplementedError for the caller's
-    Pillow fallback."""
+    arithmetic-coded streams raise NotImplementedError."""
     from .jpeg import decode_baseline
 
     w, h, ch, data = decode_baseline(payload)
@@ -492,8 +474,7 @@ def _gif_lzw_decode(data: bytes, mcs: int, n_pixels: int) -> bytearray:
 
 def _gif_resize(payload: bytes, max_side: int) -> bytes:
     """First GIF frame -> nearest-neighbor thumbnail, re-encoded as PNG
-    (the pipeline's canonical thumbnail container, matching the Pillow
-    fallback's behavior)."""
+    (the pipeline's canonical thumbnail container)."""
     w, h, ch, data = _gif_decode_pixels(payload)
     dw, dh, out = _nn_resample(w, h, ch, data, max_side)
     return _png_encode(dw, dh, ch, bytes(out))
@@ -505,8 +486,8 @@ def decode_image_meta(payload: bytes) -> tuple[int, int, int]:
     Real PNG/JPEG/GIF bytes are parsed with pure-Python header readers
     (no raster library needed — metadata extraction over a 100 TB media
     corpus must not depend on a decode dependency being present); the
-    FAKE test format keeps its struct header. Unknown containers fall
-    through to Pillow when available, else ``NotImplementedError``."""
+    FAKE test format keeps its struct header. Unknown containers raise
+    ``NotImplementedError``."""
     if payload[:4] == _FAKE_MAGIC:
         _, w, h, c = struct.unpack(_HEADER, payload[: struct.calcsize(_HEADER)])
         return w, h, c
@@ -516,14 +497,8 @@ def decode_image_meta(payload: bytes) -> tuple[int, int, int]:
         return _jpeg_meta(payload)
     if payload[:6] in (b"GIF87a", b"GIF89a"):
         return _gif_meta(payload)
-    if _PILImage is not None:  # pragma: no cover - environment-dependent
-        import io
-
-        with _PILImage.open(io.BytesIO(payload)) as im:
-            return im.width, im.height, len(im.getbands())
     raise NotImplementedError(
-        "unrecognized media container (PNG/JPEG/GIF headers are parsed "
-        "natively; other formats need Pillow)"
+        "unrecognized media container (PNG/JPEG/GIF headers are parsed)"
     )
 
 
@@ -590,80 +565,31 @@ HEADER_LEN = struct.calcsize(_HEADER)
 _BODY_CAP = 256  # fake_image_bytes caps pseudo-pixels at 256 bytes
 
 
-def _pil_resize(payload: bytes, max_side: int) -> bytes:
-    """Pillow thumbnail + PNG re-encode (the C-codec bulk path)."""
-    import io
-
-    with _PILImage.open(io.BytesIO(payload)) as im:
-        im.thumbnail((max_side, max_side))
-        buf = io.BytesIO()
-        im.save(buf, format="PNG")
-        return buf.getvalue()
-
-
-def resize_image(payload: bytes, max_side: int, backend: str = "native") -> bytes:
+def resize_image(payload: bytes, max_side: int) -> bytes:
     """Scale-to-fit ``max_side`` preserving aspect.
 
     FAKE format: integer arithmetic resize (floor division — exactly
     portable), header rewritten, body nearest-neighbor-subsampled from
     the capped pseudo-pixel array; fully deterministic so the DuckDB
-    oracle can pin it. Real formats depend on ``backend``:
-
-    - ``"native"`` (default): Pillow when importable — its C decode/
-      resize loops are ~100x faster than the interpreted per-pixel
-      unfilter/LZW here, and at real-corpus scale decode dominates the
-      stage. The pure-Python path is the fallback when Pillow is
-      absent or rejects the stream.
-    - ``"pure"``: stdlib-only PNG/GIF/baseline-JPEG raster paths first
-      — bit-exact deterministic on any machine, so oracle queries and
-      tests pin this backend; Pillow only as a corrupt-stream (or
-      arithmetic-coded-JPEG) fallback.
+    oracle can pin it. PNG, GIF and JPEG decode through the stdlib-only
+    raster paths above and re-encode as PNG, bit-exact on any machine.
 
     All paths are SHRINK-ONLY (upscaling is never performed, the
-    standard thumbnail semantics); with no backend able to decode,
-    ``NotImplementedError`` (callers surface it as ``resize_ok=false``).
+    standard thumbnail semantics). A corrupt stream raises its parser's
+    error; an arithmetic-coded JPEG or any other container raises
+    ``NotImplementedError`` (callers surface both as ``resize_ok=false``).
     """
-    # decode failures on a corrupt-but-signed payload: ValueError from
-    # the parsers, zlib.error from a bad IDAT/deflate body, IndexError
-    # from truncation past the header
-    _CORRUPT = (ValueError, zlib.error, IndexError)
     if payload[:4] != _FAKE_MAGIC:
-        if backend == "native" and _PILImage is not None:
-            try:
-                return _pil_resize(payload, max_side)
-            except (OSError, *_PIL_BOMB):
-                pass  # Pillow rejected the stream — try the pure path
         if payload[:8] == _PNG_SIG:
-            try:
-                # pure-Python PNG path: stdlib-only, and its floor
-                # arithmetic is deterministic on any machine
-                return _png_resize(payload, max_side)
-            except _CORRUPT:
-                if _PILImage is None:
-                    raise  # malformed/out-of-spec stream, no Pillow
-        elif payload[:6] in (b"GIF87a", b"GIF89a"):
-            try:
-                # pure-Python LZW first-frame path -> PNG thumbnail
-                return _gif_resize(payload, max_side)
-            except _CORRUPT:
-                if _PILImage is None:
-                    raise
-        elif payload[:2] == b"\xff\xd8":
-            try:
-                # pure-Python Huffman+IDCT path (baseline AND
-                # progressive) -> PNG thumbnail
-                return _jpeg_resize(payload, max_side)
-            except _CORRUPT + (struct.error, NotImplementedError):
-                # arithmetic-coded (NotImplementedError) or a corrupt
-                # stream: Pillow if present, else surface
-                if _PILImage is None:
-                    raise
-        if _PILImage is None:
-            raise NotImplementedError(
-                "pixel resize of this container requires Pillow; "
-                "header-only metadata still decodes via decode_image_meta"
-            )
-        return _pil_resize(payload, max_side)  # pragma: no cover - env
+            return _png_resize(payload, max_side)
+        if payload[:6] in (b"GIF87a", b"GIF89a"):
+            return _gif_resize(payload, max_side)
+        if payload[:2] == b"\xff\xd8":
+            return _jpeg_resize(payload, max_side)
+        raise NotImplementedError(
+            "no pixel decoder for this container; header-only metadata "
+            "still decodes via decode_image_meta"
+        )
     w, h, c = decode_image_meta(payload)
     m = max(w, h)
     dw = max(1, (w * max_side) // m)
@@ -675,22 +601,17 @@ def resize_image(payload: bytes, max_side: int, backend: str = "native") -> byte
     return struct.pack(_HEADER, _FAKE_MAGIC, dw, dh, c) + out
 
 
-def resize_media(df: DataFrame, max_side: int, backend: str = "native") -> DataFrame:
+def resize_media(df: DataFrame, max_side: int) -> DataFrame:
     """Arrow-batched resize stage: per row build/accept the payload,
     resize, RE-DECODE the result (the round-trip check a pipeline wants
     before shipping thumbnails), and emit source + target metadata.
     Expects columns (media_id, content); one Python batch per Arrow
-    record batch — same memory posture as ``extract_image_meta``.
-
-    ``backend="native"`` (default) prefers Pillow's C codec for bulk
-    throughput (see ``resize_image``); oracle queries pass ``"pure"``
-    to pin the deterministic stdlib raster path."""
+    record batch — same memory posture as ``extract_image_meta``."""
 
     # every way a signed-but-corrupt payload can fail: parser
     # ValueError/KeyError/IndexError/struct.error, zlib.error from a bad
-    # deflate body, OSError (incl. PIL.UnidentifiedImageError) from the
-    # Pillow fallback on truncated entropy data, NotImplementedError
-    # from a container with no pixel backend
+    # deflate body, NotImplementedError from a container with no pixel
+    # decoder
     _DECODE_ERRS = MEDIA_DECODE_ERRS
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -704,13 +625,13 @@ def resize_media(df: DataFrame, max_side: int, backend: str = "native") -> DataF
                     rows.append((mid, None, None, None, None, None, False))
                     continue
                 try:
-                    resized = resize_image(bytes(payload), max_side, backend)
+                    resized = resize_image(bytes(payload), max_side)
                     dw, dh, dc = decode_image_meta(resized)
                     ok = dc == sc and max(dw, dh) <= max_side
                     blen = len(resized)
                 except _DECODE_ERRS:
                     # header decoded but the body is corrupt, or there
-                    # is no pixel backend for this container
+                    # is no pixel decoder for this container
                     dw = dh = blen = 0
                     ok = False
                 rows.append((mid, sw, sh, dw, dh, blen, ok))

@@ -74,9 +74,7 @@ def doc_media_resized(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(_H).alias("height"),
     )
     media = generate_fake_media(dims)
-    # backend="pure": the oracle pins the deterministic stdlib raster
-    # path (bulk pipelines use the default Pillow-preferred "native")
-    return resize_media(media, MEDIA_MAX_SIDE, backend="pure")
+    return resize_media(media, MEDIA_MAX_SIDE)
 
 
 DOC_MEDIA_RESIZED_ORACLE = f"""

@@ -125,7 +125,7 @@ def test_truncated_entropy_data_raises_valueerror():
 
 def test_resize_image_pure_path_decodes_baseline_jpeg():
     enc = J.encode_baseline(32, 16, _gray(32, 16))
-    out = MM.resize_image(enc, 8, backend="pure")
+    out = MM.resize_image(enc, 8)
     assert out[:8] == b"\x89PNG\r\n\x1a\n"
     w, h, c = MM.decode_image_meta(out)
     assert (w, h, c) == (8, 4, 1)
@@ -133,8 +133,7 @@ def test_resize_image_pure_path_decodes_baseline_jpeg():
 
 def test_real_jpeg_through_resize_media_no_pillow(spark):
     """Directive 7 done-criterion: baseline JPEG -> resize_ok=true with
-    Pillow absent (it is not installed in this container)."""
-    assert MM._PILImage is None, "test environment unexpectedly has Pillow"
+    no raster library."""
     enc = J.encode_baseline(24, 12, _rgb(24, 12), channels=3, sampling=(2, 2))
     df = spark.createDataFrame(
         [(1, bytearray(enc))], "media_id long, content binary"
@@ -301,8 +300,7 @@ def test_progressive_roundtrip_property(w, h, seed, qseed, successive):
 
 def test_progressive_jpeg_through_resize_media_no_pillow(spark):
     """r11 directive 7 done-criterion: a progressive JPEG flows through
-    resize_media with resize_ok=true and Pillow absent."""
-    assert MM._PILImage is None, "test environment unexpectedly has Pillow"
+    resize_media with resize_ok=true and no raster library."""
     enc = J.encode_progressive(
         24, 12, _rgb(24, 12), channels=3, sampling=(2, 2), successive=True
     )

@@ -1,17 +1,9 @@
-"""Backend selection for pixel resize (VERDICT r09 directive 4).
-
-``resize_image``/``resize_media`` default to ``backend="native"``:
-Pillow's C decode/resize loops when importable (the interpreted
-per-pixel unfilter/LZW path is ~100x slower, and at real-corpus scale
-decode dominates the stage). ``backend="pure"`` pins the stdlib raster
-path for deterministic oracle/test output. Pillow is not installed in
-CI, so the native preference is verified with a recording fake patched
-over ``multimodal._PILImage``.
-"""
+"""Pixel resize dispatch: a real PNG goes through the stdlib raster
+path and comes back as a PNG thumbnail; the FAKE format keeps its own
+container; an out-of-spec PNG header raises ``ValueError``."""
 
 from __future__ import annotations
 
-import inspect
 import struct
 import zlib
 
@@ -42,94 +34,17 @@ def _tiny_png(w: int, h: int) -> bytes:
     )
 
 
-_PIL_MARKER = b"PIL-C-CODEC-OUTPUT"
-
-
-class _FakeIm:
-    def __init__(self, fail: bool = False):
-        self._fail = fail
-
-    def __enter__(self):
-        if self._fail:
-            raise OSError("fake Pillow rejects this stream")
-        return self
-
-    def __exit__(self, *exc):
-        return False
-
-    def thumbnail(self, size):
-        self.size = size
-
-    def save(self, buf, format=None):
-        buf.write(_PIL_MARKER)
-
-
-class _FakePIL:
-    """Stands in for PIL.Image; records whether open() was called."""
-
-    def __init__(self, fail: bool = False):
-        self.calls = 0
-        self._fail = fail
-
-    def open(self, fileobj):
-        self.calls += 1
-        return _FakeIm(self._fail)
-
-
-def test_native_backend_prefers_pillow_when_importable(monkeypatch):
-    fake = _FakePIL()
-    monkeypatch.setattr(MM, "_PILImage", fake)
-    out = MM.resize_image(_tiny_png(8, 8), 4, backend="native")
-    assert fake.calls == 1
-    assert out == _PIL_MARKER
-
-
-def test_native_is_the_default_backend(monkeypatch):
-    assert (
-        inspect.signature(MM.resize_image).parameters["backend"].default == "native"
-    )
-    assert (
-        inspect.signature(MM.resize_media).parameters["backend"].default == "native"
-    )
-    fake = _FakePIL()
-    monkeypatch.setattr(MM, "_PILImage", fake)
+def test_png_resize_is_a_stdlib_png_thumbnail():
     out = MM.resize_image(_tiny_png(8, 8), 4)
-    assert fake.calls == 1 and out == _PIL_MARKER
-
-
-def test_pure_backend_pins_stdlib_path_even_with_pillow(monkeypatch):
-    fake = _FakePIL()
-    monkeypatch.setattr(MM, "_PILImage", fake)
-    out = MM.resize_image(_tiny_png(8, 8), 4, backend="pure")
-    assert fake.calls == 0
     assert out[:8] == b"\x89PNG\r\n\x1a\n"
     w, h, c = MM.decode_image_meta(out)
     assert (w, h, c) == (4, 4, 3)
 
 
-def test_native_falls_back_to_pure_on_pillow_reject(monkeypatch):
-    fake = _FakePIL(fail=True)
-    monkeypatch.setattr(MM, "_PILImage", fake)
-    out = MM.resize_image(_tiny_png(8, 8), 4, backend="native")
-    assert fake.calls == 1  # Pillow tried first, raised OSError
-    w, h, c = MM.decode_image_meta(out)
-    assert (w, h, c) == (4, 4, 3)
-
-
-def test_native_without_pillow_uses_pure_path(monkeypatch):
-    monkeypatch.setattr(MM, "_PILImage", None)
-    out = MM.resize_image(_tiny_png(8, 8), 4, backend="native")
-    w, h, c = MM.decode_image_meta(out)
-    assert (w, h, c) == (4, 4, 3)
-
-
-def test_fake_format_ignores_backend(monkeypatch):
-    fake = _FakePIL()
-    monkeypatch.setattr(MM, "_PILImage", fake)
+def test_fake_format_resize_keeps_the_fake_container():
     payload = MM.fake_image_bytes(7, 16, 16)
-    out = MM.resize_image(payload, 8, backend="native")
-    assert fake.calls == 0
-    assert out[:4] == payload[:4]  # still the FAKE container
+    out = MM.resize_image(payload, 8)
+    assert out[:4] == payload[:4]
 
 
 def test_png_unknown_color_type_raises_valueerror():

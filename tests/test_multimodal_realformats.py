@@ -18,7 +18,6 @@ import zlib
 import pytest
 
 from datafoundation_multi_source_retail_data_integration_hub_spark.operators.multimodal import (
-    _PILImage,
     decode_image_meta,
     extract_image_meta,
     resize_media,
@@ -161,8 +160,7 @@ def test_png_unsupported_variants_degrade(spark):
     df = spark.createDataFrame([(1, png)], "media_id long, content binary")
     row = resize_media(df, max_side=2).collect()[0]
     assert (row["src_width"], row["src_height"]) == (2, 2)
-    if _PILImage is None:
-        assert not row["resize_ok"]
+    assert not row["resize_ok"]
 
 
 def _adam7_interlaced_png(w, h, ch, pixels):
@@ -483,7 +481,7 @@ def test_decompression_bomb_png_degrades_to_data_row(spark):
     )
     meta = extract_image_meta(df).collect()[0]
     assert meta["decode_ok"] and meta["width"] == 40000  # header tier ok
-    row = resize_media(df, 16, backend="pure").collect()[0]
+    row = resize_media(df, 16).collect()[0]
     assert not row["resize_ok"]
 
 

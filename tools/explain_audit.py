@@ -7,7 +7,8 @@ the properties that matter at 100 TB:
 - dimension joins are BroadcastHashJoin (no fact-side shuffle),
 - whole-stage codegen covers the hot expressions.
 
-Run: ``python tools/explain_audit.py [sf_dir]`` — writes PLANS.md.
+Run: ``python tools/explain_audit.py [sf_dir]`` — writes PLANS.md: one
+pass/fail line per check per query, plus the plan of each failing query.
 """
 
 from __future__ import annotations
@@ -356,6 +357,23 @@ AUDITED = {
 }
 
 
+def audit(plan: str, checks: dict) -> list[tuple[bool, str]]:
+    """(passed, description) per check of one query's plan."""
+    out = [(token in plan, f"expect `{token}`") for token in checks["expect"]]
+    fp = checks["forbid_pattern"]
+    if fp:
+        hit = re.search(fp, plan)
+        found = f" (found `{hit.group(0)}`)" if hit else ""
+        out.append((hit is None, f"forbid `/{fp}/`{found}"))
+    for pat, cap in checks.get("max_count", {}).items():
+        # count DISTINCT plan nodes (multiline detail-section entries),
+        # not tree references — stage reuse legitimately renders one
+        # node at several tree positions
+        got = len(re.findall(pat, plan, re.M))
+        out.append((got <= cap, f"max_count `/{pat}/` <= {cap} (got {got})"))
+    return out
+
+
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     from datafoundation_multi_source_retail_data_integration_hub_spark.session import get_spark
@@ -364,8 +382,7 @@ def main() -> None:
     spark = get_spark(app_name="explain_audit")
     qs = entrymod.queries()
 
-    sections = []
-    failures = []
+    lines, failed_plans = [], []
     for name, checks in AUDITED.items():
         df = qs[name](spark, sf_dir)
         df.collect()  # finalize the AQE plan so explain shows real stages
@@ -373,43 +390,23 @@ def main() -> None:
         with contextlib.redirect_stdout(buf):
             df.explain("formatted")
         plan = buf.getvalue()
-        status = []
-        for token in checks["expect"]:
-            ok = token in plan
-            status.append(f"{'OK ' if ok else 'MISS'} expect {token}")
-            if not ok:
-                failures.append(f"{name}: missing {token}")
-        fp = checks["forbid_pattern"]
-        if fp:
-            hit = re.search(fp, plan)
-            status.append(
-                f"{'OK ' if not hit else 'FAIL'} forbid /{fp}/"
-            )
-            if hit:
-                failures.append(f"{name}: forbidden {hit.group(0)!r}")
-        for pat, cap in checks.get("max_count", {}).items():
-            # count DISTINCT plan nodes (multiline detail-section
-            # entries), not tree references — stage reuse legitimately
-            # renders one node at several tree positions
-            got = len(re.findall(pat, plan, re.M))
-            ok = got <= cap
-            status.append(
-                f"{'OK ' if ok else 'FAIL'} max_count /{pat}/ <= {cap} (got {got})"
-            )
-            if not ok:
-                failures.append(f"{name}: {got} matches of /{pat}/ (cap {cap})")
-        summary = "\n".join(f"- {s}" for s in status)
-        sections.append(
-            f"## {name}\n\n{summary}\n\n```\n{plan.strip()}\n```\n"
-        )
+        results = audit(plan, checks)
+        lines += [f"- {'PASS' if ok else 'FAIL'} `{name}`: {desc}" for ok, desc in results]
+        if not all(ok for ok, _ in results):
+            failed_plans.append(f"## {name}\n\n```\n{plan.strip()}\n```\n")
 
     out = (
         "# PLANS — physical-plan audit (generated by tools/explain_audit.py)\n\n"
-        f"sf_dir: `{sf_dir}`\n\n" + "\n".join(sections)
+        f"sf_dir: `{sf_dir}`. One line per check per query; the formatted "
+        "physical plan is kept only for a query with a failed check.\n\n"
+        + "\n".join(lines)
+        + "\n\n"
+        + ("\n".join(failed_plans) if failed_plans else "No check failed.\n")
     )
     with open(os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md"), "w") as f:
         f.write(out)
-    print("\n".join(f"FAIL {f}" for f in failures) or "ALL PLAN CHECKS PASS")
+    failures = [line for line in lines if line.startswith("- FAIL")]
+    print("\n".join(failures) or "ALL PLAN CHECKS PASS")
 
 
 if __name__ == "__main__":

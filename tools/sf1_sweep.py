@@ -6,7 +6,8 @@ orders of magnitude further, where a quadratic blowup would actually
 show: it builds an ``--shards``-fold corpus at ``--out`` (default 10
 shards at ``/tmp/sf1``; ``--shards 100 --out /tmp/sf10`` for the 100x
 run) and measures wall time, output rows, and shuffle read/write bytes
-for the heaviest real-work queries at both scales.
+for the heaviest real-work queries at both scales. Shuffle bytes come
+from Spark's event log through ``tools/layer_profile.py``.
 
 Scale-up construction — N SHARDS, each statistically identical to the
 original corpus, mutually decorrelated so per-shard result structure is
@@ -46,11 +47,14 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import shutil
 import sys
 import time
-import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+import layer_profile  # noqa: E402  (beside this script)
+from perfbench.trace import MB  # noqa: E402
 
 SF01 = "/root/testdata/sf0.1"
 SHARDS = 10
@@ -200,51 +204,6 @@ def build(spark, src: str, out: str, n_shards: int = SHARDS) -> None:
     print(f"# build: wrote {n_shards} shards to {out}", file=sys.stderr)
 
 
-def _stages(sc) -> list[dict]:
-    url = f"{sc.uiWebUrl}/api/v1/applications/{sc.applicationId}/stages"
-    return json.load(urllib.request.urlopen(url))
-
-
-def settled_stage_ids(sc) -> set[int]:
-    """Stage-id set once the AppStatusStore stops registering new
-    stages — taking a single snapshot right after an action returns can
-    miss stages whose listener events are still in flight, which then
-    get mis-attributed to the NEXT measurement window."""
-    prev = None
-    for _ in range(20):
-        cur = {s["stageId"] for s in _stages(sc)}
-        if cur == prev:
-            return cur
-        prev = cur
-        time.sleep(0.5)
-    print("# WARN: stage-id set still moving after poll budget", file=sys.stderr)
-    return prev
-
-
-def shuffle_bytes_since(sc, ids0: set[int]) -> tuple[int, int]:
-    """(write, read) bytes of every stage registered after ``ids0``.
-
-    The AppStatusStore is fed asynchronously from the listener bus, so
-    both the id SET and the per-stage metrics can lag a completed
-    action; re-derive the set and re-read the values each poll until
-    two consecutive snapshots agree on both (a cumulative-total delta,
-    or a fixed id set, smears one query's bytes into another's window —
-    observed as a phantom 33x in the first run of this sweep)."""
-    prev = None
-    for _ in range(20):
-        data = [s for s in _stages(sc) if s["stageId"] not in ids0]
-        cur = (
-            sum(s.get("shuffleWriteBytes", 0) for s in data),
-            sum(s.get("shuffleReadBytes", 0) for s in data),
-        )
-        if cur == prev:
-            return cur
-        prev = cur
-        time.sleep(0.5)
-    print("# WARN: shuffle metrics still moving after poll budget", file=sys.stderr)
-    return prev
-
-
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--out", default="/tmp/sf1")
@@ -263,21 +222,10 @@ def main() -> None:
         ap.error("--shards must be in [2, 1000]")
 
     from datafoundation_multi_source_retail_data_integration_hub_spark.operators.storage import unpersist_all
-    from datafoundation_multi_source_retail_data_integration_hub_spark.session import (
-        get_spark,
-    )
-
     import __spark_entry__ as entrymod
 
-    spark = get_spark(
-        app_name="sf1-sweep",
-        extra_conf={
-            "spark.ui.enabled": "true",
-            "spark.ui.retainedStages": "100000",
-            "spark.ui.retainedJobs": "100000",
-        },
-    )
-    sc = spark.sparkContext
+    spark, log_dir = layer_profile.open_session("sf1-sweep")
+    spans = layer_profile.Spans(spark)
     if not args.skip_build:
         build(spark, SF01, args.out, n_shards=args.shards)
 
@@ -299,6 +247,7 @@ def main() -> None:
         )
     big = f"sf{args.shards / 10:g}"  # 10 shards -> sf1, 100 -> sf10
     results: dict[str, dict] = {}
+    runs: dict[tuple[str, str], list[str]] = {}  # (query, tag) -> span ids
     for name in names:
         fn = qs[name]
         row: dict[str, dict] = {}
@@ -306,27 +255,30 @@ def main() -> None:
             fn(spark, d).count()  # warm: AQE replan + codegen + IO cache
             unpersist_all()
             best, rows = float("inf"), 0
-            sws, srs = [], []
-            for _ in range(2):
-                ids0 = settled_stage_ids(sc)
+            for i in range(2):
+                span_id = f"{name}@{tag}#{i}"
                 t0 = time.perf_counter()
-                rows = fn(spark, d).count()
-                wall = time.perf_counter() - t0
-                w, r = shuffle_bytes_since(sc, ids0)
+                rows = spans.run(span_id, lambda: fn(spark, d).count())
+                best = min(best, time.perf_counter() - t0)
                 unpersist_all()
-                best = min(best, wall)
-                sws.append(w)
-                srs.append(r)
-            # min across runs = the intrinsic plan cost: a run can only
-            # shuffle MORE than intrinsic (recompute after cache
-            # eviction under memory pressure), never less
-            row[tag] = {
-                "wall_s": round(best, 3),
-                "rows": rows,
-                "shuffle_write_mb": round(min(sws) / 1e6, 2),
-                "shuffle_read_mb": round(min(srs) / 1e6, 2),
-            }
+                runs.setdefault((name, tag), []).append(span_id)
+            row[tag] = {"wall_s": round(best, 3), "rows": rows}
             print(f"# {name} {tag}: {row[tag]}", file=sys.stderr)
+        results[name] = row
+
+    spark.stop()
+    try:
+        layers = layer_profile.layer_tables(log_dir, spans.spans)
+    finally:
+        shutil.rmtree(log_dir, ignore_errors=True)
+    for (name, tag), span_ids in runs.items():
+        # min across runs = the intrinsic plan cost: a run can only
+        # shuffle MORE than intrinsic (recompute after cache eviction
+        # under memory pressure), never less
+        for key in ("shuffle_write_mb", "shuffle_read_mb"):
+            least = min(layers[s][key] for s in span_ids)
+            results[name][tag][key] = round(least * MB / 1e6, 2)  # MiB -> 1e6-byte MB
+    for name, row in results.items():
         a, b = row["sf0.1"], row[big]
         row["ratios"] = {
             "wall": round(b["wall_s"] / a["wall_s"], 2) if a["wall_s"] else None,
@@ -337,7 +289,6 @@ def main() -> None:
                 else None
             ),
         }
-        results[name] = row
 
     out_json = os.path.join(
         os.path.dirname(os.path.abspath(__file__)), f"{big}_sweep.json"
