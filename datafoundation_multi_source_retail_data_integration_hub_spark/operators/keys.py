@@ -68,6 +68,7 @@ def with_global_row_number(
     offset: int = 0,
     num_partitions: int | None = None,
     force_distributed: bool = False,
+    size_of: DataFrame | None = None,
 ) -> DataFrame:
     """Add ``col_name`` = offset + rank of the row in global ``order_cols``
     order (1-based). ``order_cols`` must uniquely order the rows.
@@ -75,9 +76,12 @@ def with_global_row_number(
     Path selection is automatic: a free Catalyst-statistics row estimate
     gates on ``SMALL_DIM_THRESHOLD`` so huge dims never silently serialize
     through one window task; callers that already know the input is big
-    can skip the gate with ``force_distributed=True``.
+    can skip the gate with ``force_distributed=True``. ``size_of`` names
+    the frame whose estimate gates instead of ``df``'s, for inputs filtered
+    from a larger plan whose statistics overstate them.
     """
-    if not force_distributed and _estimated_rows(df) <= SMALL_DIM_THRESHOLD:
+    gated = df if size_of is None else size_of
+    if not force_distributed and _estimated_rows(gated) <= SMALL_DIM_THRESHOLD:
         # Single-partition window: correct and cheapest at dim scale.
         w = Window.orderBy(*[F.col(c) for c in order_cols])
         return df.withColumn(

@@ -1,7 +1,7 @@
 """Set-based SCD Type 2 dimension merge.
 
 Reproduces the reference's SCD2 semantics (``etl/load_to_query.py:96-151``)
-as joins + unions instead of a row-at-a-time ``iterrows`` loop:
+as one Catalyst plan instead of a row-at-a-time ``iterrows`` loop:
 
 - natural key = first configured column; compare-columns = the rest
   (``load_to_query.py:120,137``).
@@ -17,18 +17,18 @@ Deviation (documented, SURVEY §4.3): the reference numbers new keys in
 source row order; we number in natural-key order (deterministic under
 parallelism). Correctness checks are order-insensitive so this is safe.
 
-Scale: the probe side (incoming batch) joins the current dim slice on the
-natural key — a plain hash join Catalyst can broadcast when the dim is
-small or shuffle-hash otherwise; change detection is a null-safe column
-comparison (optionally an md5 row-hash, reference ``README.md:300-311``),
-all JVM-side expressions. No Python hits the row path.
+Scale: a merge shuffles the existing dimension and the incoming batch
+once, hash-partitioned on the natural key; change detection is window
+maxima inside those partitions (null-safe: window partitions group
+nulls), and only the inserts reach the global numbering. Everything is
+JVM-side expressions; no Python hits the row path.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .keys import with_global_row_number
@@ -62,10 +62,12 @@ def _members(src: DataFrame, cfg: SCD2Config) -> DataFrame:
 
 
 def _with_flags(df: DataFrame, cfg: SCD2Config, effective_date: str) -> DataFrame:
-    return (
-        df.withColumn(cfg.effective_col, F.lit(effective_date).cast("date"))
-        .withColumn(cfg.expiry_col, F.lit(None).cast("date"))
-        .withColumn(cfg.current_col, F.lit(1))
+    return df.withColumns(
+        {
+            cfg.effective_col: F.lit(effective_date).cast("date"),
+            cfg.expiry_col: F.lit(None).cast("date"),
+            cfg.current_col: F.lit(1),
+        }
     )
 
 
@@ -91,87 +93,80 @@ def scd2_merge(
     """Incremental merge of a new batch into an existing SCD2 dimension.
 
     Returns the complete new dimension table: untouched history + expired
-    versions + surviving current rows + newly inserted versions.
+    versions + surviving current rows + newly inserted versions. Surrogate
+    keys of ``existing`` must be unique.
+
+    One plan, one hash exchange of existing rows ∪ incoming members on the
+    natural key. Window maxima inside it flag each row: a member tuple is
+    *current* when an existing current row equals it, *asserted* when an
+    incoming member does (null-safe: window partitions group nulls); a key
+    is *changed* when it has a current row and an incoming member of it is
+    not current. Current rows of changed keys the batch does not assert
+    expire, other existing rows are carried, and incoming members whose
+    tuple is not current are inserted, numbered after the prior maximum
+    surrogate key. A null natural key never matches: its members are
+    always inserted and its rows never expire. Matching is on the whole
+    tuple because an initial load can hold several variants per key
+    (Superstore does); key-only matching would re-insert present members
+    on every re-merge.
     """
-    nk = cfg.natural_key
-    inc = _members(incoming, cfg)
-    current = existing.filter(F.col(cfg.current_col) == 1)
-    cur_members = current.select(*cfg.member_cols)
-    cur_keys = current.select(nk).distinct()
-
-    def tuple_eq(left: DataFrame, right: DataFrame) -> F.Column:
-        """Null-safe full-member equality join condition. Matching must be
-        on the whole tuple: an initial load can legally hold several member
-        variants per natural key (Superstore does), and key-only change
-        detection would re-insert already-present members on every re-merge
-        (breaking idempotence)."""
-        cond = F.lit(True)
-        for c in cfg.member_cols:
-            cond = cond & left[c].eqNullSafe(right[c])
-        return cond
-
-    new_members = inc.join(cur_keys, nk, "left_anti")
-    matched = inc.join(cur_keys, nk, "left_semi")
-    # changed: natural key exists but no current variant equals the tuple
-    changed_members = matched.join(
-        cur_members, tuple_eq(matched, cur_members), "left_anti"
+    nk, members = cfg.natural_key, cfg.member_cols
+    version_cols = [cfg.surrogate_key, cfg.effective_col, cfg.expiry_col, cfg.current_col]
+    out_cols = [*members, *version_cols]
+    # an existing row is its member tuple plus its version record; every
+    # branch below reads these two columns, so the exchange is reused
+    version = F.col("__version")
+    inc = version.isNull()
+    rows = (
+        existing.select(*members, F.struct(*version_cols).alias("__version"))
+        .unionByName(incoming.select(*members), allowMissingColumns=True)
+        .repartition(nk)
     )
-
-    changed_keys = changed_members.select(nk).distinct()
-    # expire: current variants of changed keys NOT re-asserted by the
-    # incoming batch (a re-asserted identical variant stays current)
-    # changed_keys is batch-delta-sized — usually tiny, but a batch can
-    # legally rewrite the whole dimension, so no hard broadcast() hint
-    # (policy: queries/relational.py module doc); AQE decides.
-    expired_base = current.join(changed_keys, nk, "left_semi")
-    expired = (
-        expired_base.join(inc, tuple_eq(expired_base, inc), "left_anti")
-        .withColumn(cfg.expiry_col, F.lit(effective_date).cast("date"))
-        .withColumn(cfg.current_col, F.lit(0))
+    by_tuple, by_key = Window.partitionBy(*members), Window.partitionBy(nk)
+    is_current = F.coalesce(version[cfg.current_col] == 1, F.lit(False))
+    flagged = rows.select(
+        "*",
+        F.max(inc).over(by_tuple).alias("__asserted"),
+        F.max(is_current).over(by_tuple).alias("__tuple_cur"),
+    ).withColumn(
+        "__key_changed",
+        F.col(nk).isNotNull()
+        & F.max(is_current).over(by_key)
+        & F.max(inc & ~F.col("__tuple_cur")).over(by_key),
     )
-    # carry: every existing row except the ones expired above
-    expired_sks = expired.select(F.col(cfg.surrogate_key).alias("__esk"))
-    carried = existing.join(
-        expired_sks,
-        existing[cfg.surrogate_key] == expired_sks["__esk"],
-        "left_anti",
+    expire = is_current & F.col("__key_changed") & ~F.col("__asserted")
+    kept = flagged.filter(~inc).select(
+        *members,
+        *(version[c].alias(c) for c in (cfg.surrogate_key, cfg.effective_col)),
+        F.when(expire, F.lit(effective_date).cast("date"))
+        .otherwise(version[cfg.expiry_col])
+        .alias(cfg.expiry_col),
+        F.when(expire, F.lit(0))
+        .otherwise(version[cfg.current_col])
+        .alias(cfg.current_col),
     )
-
-    # prior max surrogate as a LAZY 1-row aggregate, broadcast onto the
-    # numbered inserts — the old eager `.first()` here ran the whole
-    # `existing` pipeline as a separate driver-blocking job per merge
-    # (an extra full pass over the dimension at any scale) before the
-    # real plan even started; as part of the plan it is one
-    # column-pruned agg the scheduler overlaps with everything else
-    prior_max_df = existing.agg(
-        F.coalesce(F.max(cfg.surrogate_key), F.lit(0))
-        .cast("bigint")
-        .alias("__prior_max")
+    inserts = (
+        flagged.filter(inc & (F.col(nk).isNull() | ~F.col("__tuple_cur")))
+        .select(*members)
+        .dropDuplicates()
     )
-    inserts = new_members.unionByName(changed_members)
-    keyed_inserts = (
-        with_global_row_number(inserts, cfg.member_cols, cfg.surrogate_key)
-        .crossJoin(F.broadcast(prior_max_df))
+    # prior max surrogate as a lazy 1-row aggregate broadcast onto the
+    # numbered inserts; the numbering path is chosen by the size of the
+    # incoming members, not of the union the inserts are filtered from
+    prior_max = existing.agg(
+        F.coalesce(F.max(cfg.surrogate_key), F.lit(0)).cast("bigint").alias("__prior_max")
+    )
+    keyed = (
+        with_global_row_number(
+            inserts, members, cfg.surrogate_key, size_of=_members(incoming, cfg)
+        )
+        .crossJoin(F.broadcast(prior_max))
         .withColumn(
             cfg.surrogate_key,
             (F.col(cfg.surrogate_key) + F.col("__prior_max")).cast("bigint"),
         )
-        .drop("__prior_max")
     )
-    new_rows = _with_flags(keyed_inserts, cfg, effective_date)
-
-    out_cols = [
-        *cfg.member_cols,
-        cfg.surrogate_key,
-        cfg.effective_col,
-        cfg.expiry_col,
-        cfg.current_col,
-    ]
-    return (
-        carried.select(*out_cols)
-        .unionByName(expired.select(*out_cols))
-        .unionByName(new_rows.select(*out_cols))
-    )
+    return kept.unionByName(_with_flags(keyed, cfg, effective_date).select(*out_cols))
 
 
 def current_key_map(dim: DataFrame, cfg: SCD2Config) -> DataFrame:

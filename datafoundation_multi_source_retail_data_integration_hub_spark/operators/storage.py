@@ -45,6 +45,9 @@ _PERSISTED: list[DataFrame] = []
 # bumped by every ``RUN`` lookup and every ``persist_tracked``: a build
 # that moves it depends on state ``unpersist_all`` releases
 _run_touches = 0
+# jobs submitted while ``SESSION`` builds ran leave a prepared read pure:
+# running builds, the job id they began at, jobs of finished ones
+_session_builds = _session_from = _session_jobs = 0
 
 
 def memo(
@@ -64,7 +67,12 @@ def memo(
         with _LOCK:
             if full in _ENTRIES:
                 return _ENTRIES[full]
-        value = build()
+        session = int(lifetime == SESSION)
+        _session_build(spark, session)
+        try:
+            value = build()
+        finally:
+            _session_build(spark, -session)
         with _LOCK:
             _ENTRIES[full] = value
             del _BUILD_LOCKS[full]
@@ -74,22 +82,23 @@ def memo(
 def prepared(
     name: str, query: Callable[[SparkSession, str], DataFrame]
 ) -> Callable[[SparkSession, str], DataFrame]:
-    """``query`` as a prepared read: a build that submits no Spark job and
-    uses no ``RUN`` entry or tracked persist is kept as its analyzed plan,
+    """``query`` as a prepared read: a build that submits no Spark job
+    outside ``SESSION`` builds (a first table load may run jobs) and uses
+    no ``RUN`` entry or tracked persist is kept as its analyzed plan,
     a ``SESSION`` entry keyed ``("read", name, sf_dir)``. Every later call
     returns a fresh ``DataFrame`` over that plan, bound to the caller's
     session, so optimization, physical planning, AQE and execution still
     run per call and no shuffle, broadcast or stage output is reused. A
     build that breaks the rule (a pipeline, a write, a stream, a corpus op
     that persists its intermediates) is returned as it is and built again
-    on the next call; once its ``SESSION`` inputs exist it may build pure
-    and be kept from then on.
+    on the next call.
 
     Contract: a prepared read stays valid while the files under ``sf_dir``
     do not change within the session, the same contract as the
     ``("table", sf_dir, name)`` relations it is built from. Its exprIds
-    repeat across calls. A job another thread submits during a build only
-    makes the build look impure."""
+    repeat across calls. Job ids are process-wide: a job another thread
+    submits during a build makes the build look impure, and no job
+    submitted while any ``SESSION`` build runs is counted."""
 
     def call(spark: SparkSession, sf_dir: str) -> DataFrame:
         full = (SESSION, spark.sparkContext.applicationId, "read", name, sf_dir)
@@ -111,12 +120,30 @@ def prepared(
     return call
 
 
+def _next_job(spark: SparkSession) -> int:
+    return spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
+
+
+def _session_build(spark: SparkSession, step: int) -> None:
+    """Enter (``step=1``) or leave (``-1``) a ``SESSION`` build; nested and
+    overlapping builds count their jobs once."""
+    global _session_builds, _session_from, _session_jobs
+    if step:
+        with _LOCK:
+            jobs = _next_job(spark)
+            _session_from = jobs if _session_builds == 0 else _session_from
+            _session_builds += step
+            _session_jobs += jobs - _session_from if _session_builds == 0 else 0
+
+
 def _marks(spark: SparkSession) -> tuple[int, int]:
-    """(next Spark job id, ``RUN`` touches): equal before and after a
-    build when the build ran no job and used no ``RUN`` state."""
-    jobs = spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
+    """(Spark jobs submitted outside ``SESSION`` builds, ``RUN`` touches):
+    equal before and after a build when the build ran no job of its own
+    and used no ``RUN`` state."""
     with _LOCK:
-        return jobs, _run_touches
+        jobs = _next_job(spark)
+        inside = _session_jobs + (jobs - _session_from if _session_builds else 0)
+        return jobs - inside, _run_touches
 
 
 def cached_keys(lifetime: str) -> list[tuple]:

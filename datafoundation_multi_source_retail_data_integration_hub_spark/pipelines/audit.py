@@ -15,7 +15,7 @@ from collections.abc import Callable
 from dataclasses import dataclass
 from datetime import datetime
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources import writers as W
@@ -100,19 +100,19 @@ def logged_write(
 ) -> int:
     """Write ``df`` to ``table`` and append the matching audit row.
 
-    Returns the written row count. The count comes from one extra action
-    on ``df`` — callers loading expensive frames should persist first
-    (the retail pipeline's loads are all terminal writes, so the scan is
-    the same one the write performs).
+    Returns the written row count, observed on the write itself (a
+    ``pyspark.sql.Observation``), so ``df``'s plan runs once: the write's
+    jobs and the one-job audit append are all the call submits. A failed
+    write appends a ``status="failed"`` row with ``n_rows=0`` (nothing
+    counted is known to have landed) and raises ``RuntimeError``.
     """
-    n = df.count()
+    obs = Observation()
     try:
-        write_table(df, table, mode=mode, database=database)
-        status = "success"
-        msg = ""
+        observed = df.observe(obs, F.count(F.lit(1)).alias("n_rows"))
+        write_table(observed, table, mode=mode, database=database)
+        n, status, msg = obs.get["n_rows"], "success", ""
     except Exception as exc:  # noqa: BLE001 — status row must still land
-        status = "failed"
-        msg = str(exc)[:500]
+        n, status, msg = 0, "failed", str(exc)[:500]
     log_run(
         df.sparkSession,
         RunLogEntry(run_id, table, n, status, started_at, finished_at, msg),

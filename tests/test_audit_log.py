@@ -8,6 +8,7 @@ from datetime import datetime
 import pytest
 from pyspark.sql import functions as F
 
+from datafoundation_multi_source_retail_data_integration_hub_spark.pipelines import audit
 from datafoundation_multi_source_retail_data_integration_hub_spark.pipelines.audit import (
     RUN_LOG_TABLE,
     RunLogEntry,
@@ -17,6 +18,7 @@ from datafoundation_multi_source_retail_data_integration_hub_spark.pipelines.aud
 )
 from datafoundation_multi_source_retail_data_integration_hub_spark.sources.writers import (
     read_table,
+    write_table,
 )
 
 DB = "audit_test_db"
@@ -61,6 +63,50 @@ def test_logged_write_records_count_and_status(spark, clean_db):
         42,
         "success",
     )
+
+
+def _jobs(spark) -> int:
+    return spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
+
+
+def test_logged_write_adds_only_the_audit_append(spark, clean_db):
+    # a shuffle in the plan: the write alone runs more than one job
+    def frame():
+        return spark.range(0, 500).groupBy((F.col("id") % 7).alias("k")).count()
+
+    t = datetime(2026, 2, 1, 12, 0, 0)
+    log_run(spark, RunLogEntry("run-0", "t", 0, "success", t, t), database=DB)
+    write_table(frame(), "plain", database=DB)  # creates the table
+    before = _jobs(spark)
+    write_table(frame(), "plain", database=DB)
+    write_jobs = _jobs(spark) - before
+    logged_write(frame(), "logged", "run-1", t, t, database=DB)  # creates the table
+    before = _jobs(spark)
+    assert logged_write(frame(), "logged", "run-2", t, t, database=DB) == 7
+    assert _jobs(spark) - before == write_jobs + 1
+
+
+def test_failed_logged_write_logs_zero_rows_without_waiting(spark, clean_db, monkeypatch):
+    gets = []
+
+    class SpyObservation(audit.Observation):
+        @property
+        def get(self):
+            gets.append(1)
+            return super().get
+
+    monkeypatch.setattr(audit, "Observation", SpyObservation)
+    # fails inside the write's tasks, after the plan started running
+    df = spark.range(0, 5).select(
+        F.when(F.col("id") == 3, F.raise_error(F.lit("boom"))).otherwise(F.col("id")).alias("k")
+    )
+    t = datetime(2026, 2, 1, 12, 0, 0)
+    with pytest.raises(RuntimeError, match="write of broken failed"):
+        logged_write(df, "broken", "run-f", t, t, database=DB)
+    assert gets == []
+    row = read_table(spark, RUN_LOG_TABLE, database=DB).first()
+    assert (row["run_id"], row["n_rows"], row["status"]) == ("run-f", 0, "failed")
+    assert "boom" in row["message"]
 
 
 def test_stream_sink_replayed_batch_logs_once(spark, clean_db, tmp_path):

@@ -187,6 +187,7 @@ from datafoundation_multi_source_retail_data_integration_hub_spark.operators.mul
     decode_image_meta,
 )
 
+from . import jpeg_encoders as JE
 from ._fuzz import mutate
 from .test_multimodal_realformats import tiny_gif, tiny_jpeg, tiny_png
 
@@ -197,22 +198,22 @@ _IMG_CAUGHT = MEDIA_DECODE_ERRS
 
 def _jpg_base(mid):
     px = bytes((mid * 7 + i) % 256 for i in range(24 * 16 * 3))
-    return J.encode_baseline(24, 16, px, 3)
+    return JE.encode_baseline(24, 16, px, 3)
 
 
 def _jpg_prog(mid):
     px = bytes((mid * 11 + i) % 256 for i in range(24 * 16 * 3))
-    return J.encode_progressive(24, 16, px, 3, successive=True)
+    return JE.encode_progressive(24, 16, px, 3, successive=True)
 
 
 def _jpg_12bit(mid):
     px = [(mid * 31 + i * 151) % 4096 for i in range(24 * 16)]
-    return J.encode_baseline(24, 16, px, 1, precision=12)
+    return JE.encode_baseline(24, 16, px, 1, precision=12)
 
 
 def _jpg_12bit_prog(mid):
     px = [(mid * 37 + i * 113) % 4096 for i in range(24 * 16)]
-    return J.encode_progressive(24, 16, px, 1, successive=True, precision=12)
+    return JE.encode_progressive(24, 16, px, 1, successive=True, precision=12)
 
 
 _IMG_BUILDERS = [

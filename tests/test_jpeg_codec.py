@@ -26,6 +26,8 @@ from datafoundation_multi_source_retail_data_integration_hub_spark.operators imp
     multimodal as MM,
 )
 
+from . import jpeg_encoders as JE
+
 
 def _gray(w: int, h: int) -> bytes:
     return bytes((x * 13 + y * 29) % 256 for y in range(h) for x in range(w))
@@ -42,14 +44,14 @@ def _rgb(w: int, h: int) -> bytes:
 
 def test_gray_roundtrip_near_lossless():
     pix = _gray(16, 12)
-    dw, dh, ch, out = J.decode_baseline(J.encode_baseline(16, 12, pix))
+    dw, dh, ch, out = J.decode_baseline(JE.encode_baseline(16, 12, pix))
     assert (dw, dh, ch) == (16, 12, 1)
     assert max(abs(a - b) for a, b in zip(pix, out)) <= 2
 
 
 def test_non_multiple_of_8_dims_pad_and_crop():
     pix = _gray(17, 9)
-    dw, dh, ch, out = J.decode_baseline(J.encode_baseline(17, 9, pix))
+    dw, dh, ch, out = J.decode_baseline(JE.encode_baseline(17, 9, pix))
     assert (dw, dh, ch) == (17, 9, 1)
     assert len(out) == 17 * 9
     assert max(abs(a - b) for a, b in zip(pix, out)) <= 2
@@ -61,7 +63,7 @@ def test_non_multiple_of_8_dims_pad_and_crop():
 )
 def test_color_roundtrip_all_samplings(sampling, tol):
     pix = _rgb(20, 12)
-    enc = J.encode_baseline(20, 12, pix, channels=3, sampling=sampling)
+    enc = JE.encode_baseline(20, 12, pix, channels=3, sampling=sampling)
     dw, dh, ch, out = J.decode_baseline(enc)
     assert (dw, dh, ch) == (20, 12, 3)
     assert max(abs(a - b) for a, b in zip(pix, out)) <= tol
@@ -69,7 +71,7 @@ def test_color_roundtrip_all_samplings(sampling, tol):
 
 def test_restart_markers_reset_dc_prediction():
     pix = _gray(48, 8)
-    enc = J.encode_baseline(48, 8, pix, restart_interval=2)
+    enc = JE.encode_baseline(48, 8, pix, restart_interval=2)
     assert b"\xff\xd0" in enc  # RST0 actually emitted
     dw, dh, ch, out = J.decode_baseline(enc)
     assert (dw, dh, ch) == (48, 8, 1)
@@ -78,7 +80,7 @@ def test_restart_markers_reset_dc_prediction():
 
 def test_color_with_restart_and_subsampling():
     pix = _rgb(24, 24)
-    enc = J.encode_baseline(24, 24, pix, channels=3, sampling=(2, 2), restart_interval=1)
+    enc = JE.encode_baseline(24, 24, pix, channels=3, sampling=(2, 2), restart_interval=1)
     dw, dh, ch, out = J.decode_baseline(enc)
     assert (dw, dh, ch) == (24, 24, 3)
     assert max(abs(a - b) for a, b in zip(pix, out)) <= 5
@@ -92,7 +94,7 @@ def test_color_with_restart_and_subsampling():
 )
 def test_gray_roundtrip_property(w, h, seed):
     pix = bytes((seed + x * 7 + y * 31 + (x * y) % 13) % 256 for y in range(h) for x in range(w))
-    dw, dh, ch, out = J.decode_baseline(J.encode_baseline(w, h, pix))
+    dw, dh, ch, out = J.decode_baseline(JE.encode_baseline(w, h, pix))
     assert (dw, dh, ch) == (w, h, 1)
     assert max(abs(a - b) for a, b in zip(pix, out)) <= 2
 
@@ -102,7 +104,7 @@ def test_mislabelled_progressive_raises_valueerror():
     # progressive (its single scan has Ss=0, Se=63 — a progressive DC
     # scan must have Se=0) — the r11 progressive decoder must reject it
     # rather than decode garbage
-    enc = bytearray(J.encode_baseline(8, 8, _gray(8, 8)))
+    enc = bytearray(JE.encode_baseline(8, 8, _gray(8, 8)))
     i = enc.find(b"\xff\xc0")
     enc[i + 1] = 0xC2  # flip SOF0 -> SOF2 (progressive)
     with pytest.raises(ValueError):
@@ -110,7 +112,7 @@ def test_mislabelled_progressive_raises_valueerror():
 
 
 def test_arithmetic_frame_raises_notimplemented():
-    enc = bytearray(J.encode_baseline(8, 8, _gray(8, 8)))
+    enc = bytearray(JE.encode_baseline(8, 8, _gray(8, 8)))
     i = enc.find(b"\xff\xc0")
     enc[i + 1] = 0xC9  # SOF9: arithmetic-coded sequential
     with pytest.raises(NotImplementedError):
@@ -118,13 +120,13 @@ def test_arithmetic_frame_raises_notimplemented():
 
 
 def test_truncated_entropy_data_raises_valueerror():
-    enc = J.encode_baseline(16, 16, _gray(16, 16))
+    enc = JE.encode_baseline(16, 16, _gray(16, 16))
     with pytest.raises(ValueError):
         J.decode_baseline(enc[: len(enc) // 2])
 
 
 def test_resize_image_pure_path_decodes_baseline_jpeg():
-    enc = J.encode_baseline(32, 16, _gray(32, 16))
+    enc = JE.encode_baseline(32, 16, _gray(32, 16))
     out = MM.resize_image(enc, 8)
     assert out[:8] == b"\x89PNG\r\n\x1a\n"
     w, h, c = MM.decode_image_meta(out)
@@ -134,7 +136,7 @@ def test_resize_image_pure_path_decodes_baseline_jpeg():
 def test_real_jpeg_through_resize_media_no_pillow(spark):
     """Directive 7 done-criterion: baseline JPEG -> resize_ok=true with
     no raster library."""
-    enc = J.encode_baseline(24, 12, _rgb(24, 12), channels=3, sampling=(2, 2))
+    enc = JE.encode_baseline(24, 12, _rgb(24, 12), channels=3, sampling=(2, 2))
     df = spark.createDataFrame(
         [(1, bytearray(enc))], "media_id long, content binary"
     )
@@ -145,7 +147,7 @@ def test_real_jpeg_through_resize_media_no_pillow(spark):
 
 
 def test_arithmetic_jpeg_degrades_to_data_row(spark):
-    enc = bytearray(J.encode_baseline(8, 8, _gray(8, 8)))
+    enc = bytearray(JE.encode_baseline(8, 8, _gray(8, 8)))
     i = enc.find(b"\xff\xc0")
     enc[i + 1] = 0xC9  # arithmetic-coded: metadata yes, pixels no
     df = spark.createDataFrame(
@@ -165,7 +167,7 @@ def test_non_uniform_quant_table_roundtrip():
     quant = [1 + ((3 * i) % 5) for i in range(64)]  # values 1..5, non-flat
     pix = _gray(24, 16)
     dw, dh, ch, out = J.decode_baseline(
-        J.encode_baseline(24, 16, pix, quant=quant)
+        JE.encode_baseline(24, 16, pix, quant=quant)
     )
     assert (dw, dh, ch) == (24, 16, 1)
     assert max(abs(a - b) for a, b in zip(pix, out)) <= 16
@@ -175,7 +177,7 @@ def test_non_interleaved_scan_raises_notimplemented():
     # spec-valid baseline JPEG may carry one scan per component; the
     # decoder only supports the single fully interleaved scan and must
     # raise (for the Pillow fallback) instead of decoding garbage
-    rgb = J.encode_baseline(16, 8, _rgb(16, 8), channels=3)
+    rgb = JE.encode_baseline(16, 8, _rgb(16, 8), channels=3)
     sos_at = rgb.find(b"\xff\xda")
     assert sos_at > 0 and rgb[sos_at + 4] == 3  # ns=3 in the real stream
     # rewrite the SOS header to a 1-component scan (ns=1, first comp)
@@ -193,7 +195,7 @@ def test_non_interleaved_scan_raises_notimplemented():
 def test_decode_budget_rejects_bomb_dims():
     # a ~200-byte stream declaring 65000x65000 must raise before the
     # gigabyte plane allocation
-    small = J.encode_baseline(8, 8, _gray(8, 8))
+    small = JE.encode_baseline(8, 8, _gray(8, 8))
     sof_at = small.find(b"\xff\xc0")
     bombed = (
         small[: sof_at + 5]
@@ -221,7 +223,7 @@ def test_quantized_roundtrip_property(w, h, seed, qseed):
         for x in range(w)
     )
     dw, dh, ch, out = J.decode_baseline(
-        J.encode_baseline(w, h, pix, quant=quant)
+        JE.encode_baseline(w, h, pix, quant=quant)
     )
     assert (dw, dh, ch) == (w, h, 1)
     assert max(abs(a - b) for a, b in zip(pix, out)) <= 24
@@ -236,10 +238,10 @@ def test_quantized_roundtrip_property(w, h, seed, qseed):
 
 
 def _prog_equal(w, h, pix, **kw):
-    base = J.decode_baseline(J.encode_baseline(w, h, pix, **{
+    base = J.decode_baseline(JE.encode_baseline(w, h, pix, **{
         k: v for k, v in kw.items() if k not in ("successive",)
     }))
-    prog = J.decode_baseline(J.encode_progressive(w, h, pix, **kw))
+    prog = J.decode_baseline(JE.encode_progressive(w, h, pix, **kw))
     assert prog == base
 
 
@@ -264,7 +266,7 @@ def test_progressive_non_multiple_of_8_dims():
 
 def test_progressive_restart_markers():
     pix = _gray(48, 8)
-    enc = J.encode_progressive(48, 8, pix, restart_interval=2, successive=True)
+    enc = JE.encode_progressive(48, 8, pix, restart_interval=2, successive=True)
     assert b"\xff\xd0" in enc
     _prog_equal(48, 8, pix, restart_interval=2, successive=True)
 
@@ -291,9 +293,9 @@ def test_progressive_roundtrip_property(w, h, seed, qseed, successive):
         for y in range(h)
         for x in range(w)
     )
-    base = J.decode_baseline(J.encode_baseline(w, h, pix, quant=quant))
+    base = J.decode_baseline(JE.encode_baseline(w, h, pix, quant=quant))
     prog = J.decode_baseline(
-        J.encode_progressive(w, h, pix, quant=quant, successive=successive)
+        JE.encode_progressive(w, h, pix, quant=quant, successive=successive)
     )
     assert prog == base
 
@@ -301,7 +303,7 @@ def test_progressive_roundtrip_property(w, h, seed, qseed, successive):
 def test_progressive_jpeg_through_resize_media_no_pillow(spark):
     """r11 directive 7 done-criterion: a progressive JPEG flows through
     resize_media with resize_ok=true and no raster library."""
-    enc = J.encode_progressive(
+    enc = JE.encode_progressive(
         24, 12, _rgb(24, 12), channels=3, sampling=(2, 2), successive=True
     )
     df = spark.createDataFrame(
@@ -328,7 +330,7 @@ def _gray12(w: int, h: int) -> list[int]:
 def test_12bit_gray_roundtrip_near_lossless():
     w, h = 24, 17
     pix = _gray12(w, h)
-    p = J.encode_baseline(w, h, pix, 1, precision=12)
+    p = JE.encode_baseline(w, h, pix, 1, precision=12)
     assert b"\xff\xc1" in p  # SOF1, not SOF0
     gw, gh, ch, out = J.decode_baseline(p)
     assert (gw, gh, ch) == (w, h, 1)
@@ -340,7 +342,7 @@ def test_12bit_16bit_quant_table_roundtrip():
     w, h = 16, 16
     pix = _gray12(w, h)
     quant = [300 + (i * 7) % 900 for i in range(64)]  # forces Pq=1 values
-    p = J.encode_baseline(w, h, pix, 1, precision=12, quant=quant)
+    p = JE.encode_baseline(w, h, pix, 1, precision=12, quant=quant)
     _, _, _, out = J.decode_baseline(p)
     # per-coefficient error <= q/2 in 12-bit units; loose envelope after >>4
     assert max(abs((v >> 4) - o) for v, o in zip(pix, out)) <= 1199 // 2 // 16 + 2
@@ -351,9 +353,9 @@ def test_12bit_dc_category_16_corner():
     appended magnitude bits. Hand-built two-block stream: block 1 holds
     DC -16384 (category 15), block 2 jumps by exactly +32768 via a
     category-16 code — left half decodes to 0, right half to 255."""
-    dc_codes = J._encode_codes(J._EXT_DC_COUNTS, J._EXT_DC_SYMBOLS)
-    ac_codes = J._encode_codes(J._EXT_AC_COUNTS, J._EXT_AC_SYMBOLS)
-    bw = J._BitWriter()
+    dc_codes = JE._encode_codes(JE._EXT_DC_COUNTS, JE._EXT_DC_SYMBOLS)
+    ac_codes = JE._encode_codes(JE._EXT_AC_COUNTS, JE._EXT_AC_SYMBOLS)
+    bw = JE._BitWriter()
     # block 1: DC cat 15, value -16384 -> bits = v + (1<<15) - 1
     length, code = dc_codes[15]
     bw.write(code, length)
@@ -374,8 +376,8 @@ def test_12bit_dc_category_16_corner():
     sof = seg(0xC1, struct.pack(">BHHB", 12, 8, 16, 1) + bytes((1, 0x11, 0)))
     dht = seg(
         0xC4,
-        bytes((0x00,)) + J._EXT_DC_COUNTS + J._EXT_DC_SYMBOLS
-        + bytes((0x10,)) + J._EXT_AC_COUNTS + J._EXT_AC_SYMBOLS,
+        bytes((0x00,)) + JE._EXT_DC_COUNTS + JE._EXT_DC_SYMBOLS
+        + bytes((0x10,)) + JE._EXT_AC_COUNTS + JE._EXT_AC_SYMBOLS,
     )
     sos = seg(0xDA, bytes((1, 1, 0x00, 0, 63, 0)))
     p = b"\xff\xd8" + dqt + sof + dht + sos + bytes(bw.out) + b"\xff\xd9"
@@ -387,7 +389,7 @@ def test_12bit_dc_category_16_corner():
 
 
 def test_12bit_baseline_sof0_is_malformed():
-    p = bytearray(J.encode_baseline(16, 8, _gray12(16, 8), 1, precision=12))
+    p = bytearray(JE.encode_baseline(16, 8, _gray12(16, 8), 1, precision=12))
     i = p.index(b"\xff\xc1")
     p[i + 1] = 0xC0  # relabel the frame baseline: 12-bit SOF0 is illegal
     with pytest.raises(ValueError, match="12-bit baseline"):
@@ -401,9 +403,9 @@ def test_12bit_progressive_byte_identical_to_sequential_twin(successive):
     byte-identical — the file's standard progressive assertion,
     extended to 12-bit."""
     pix = _gray12(24, 17)
-    base = J.decode_baseline(J.encode_baseline(24, 17, pix, 1, precision=12))
+    base = J.decode_baseline(JE.encode_baseline(24, 17, pix, 1, precision=12))
     prog = J.decode_baseline(
-        J.encode_progressive(24, 17, pix, 1, successive=successive, precision=12)
+        JE.encode_progressive(24, 17, pix, 1, successive=successive, precision=12)
     )
     assert prog == base
 
@@ -412,8 +414,8 @@ def test_12bit_progressive_dc_category_16_corner():
     """The §F.1.2.1.1 category-16 rule through the PROGRESSIVE DC-first
     path (_dc_first), which is separate code from the sequential
     branch: same two-block 0/255 construction, one DC-only scan."""
-    dc_codes = J._encode_codes(J._EXT_DC_COUNTS, J._EXT_DC_SYMBOLS)
-    bw = J._BitWriter()
+    dc_codes = JE._encode_codes(JE._EXT_DC_COUNTS, JE._EXT_DC_SYMBOLS)
+    bw = JE._BitWriter()
     length, code = dc_codes[15]
     bw.write(code, length)
     bw.write(-16384 + (1 << 15) - 1, 15)
@@ -426,7 +428,7 @@ def test_12bit_progressive_dc_category_16_corner():
 
     dqt = seg(0xDB, bytes((0x10,)) + struct.pack(">H", 1) * 64)
     sof = seg(0xC2, struct.pack(">BHHB", 12, 8, 16, 1) + bytes((1, 0x11, 0)))
-    dht = seg(0xC4, bytes((0x00,)) + J._EXT_DC_COUNTS + J._EXT_DC_SYMBOLS)
+    dht = seg(0xC4, bytes((0x00,)) + JE._EXT_DC_COUNTS + JE._EXT_DC_SYMBOLS)
     sos = seg(0xDA, bytes((1, 1, 0x00, 0, 0, 0)))  # DC scan, Ah=Al=0
     p = b"\xff\xd8" + dqt + sof + dht + sos + bytes(bw.out) + b"\xff\xd9"
     gw, gh, ch, out = J.decode_baseline(p)
@@ -437,9 +439,9 @@ def test_12bit_progressive_dc_category_16_corner():
 
 def test_12bit_encoder_guards():
     with pytest.raises(ValueError, match="grayscale only"):
-        J.encode_baseline(8, 8, [0] * 192, 3, precision=12)
+        JE.encode_baseline(8, 8, [0] * 192, 3, precision=12)
     with pytest.raises(ValueError, match="0..4095"):
-        J.encode_baseline(8, 8, [5000] * 64, 1, precision=12)
+        JE.encode_baseline(8, 8, [5000] * 64, 1, precision=12)
 
 
 def test_8bit_sof1_decodes_like_sof0():
@@ -447,7 +449,7 @@ def test_8bit_sof1_decodes_like_sof0():
     relabeling a baseline stream's frame marker must not change one
     output byte."""
     pix = _gray(24, 16)
-    p = bytearray(J.encode_baseline(24, 16, pix))
+    p = bytearray(JE.encode_baseline(24, 16, pix))
     i = p.index(b"\xff\xc0")
     base = J.decode_baseline(bytes(p))
     p[i + 1] = 0xC1
@@ -457,7 +459,7 @@ def test_8bit_sof1_decodes_like_sof0():
 def test_12bit_through_resize_media(spark):
     """Done-criterion parity with the 8-bit paths: a 12-bit SOF1 JPEG
     flows through resize_media with resize_ok=true and no Pillow."""
-    blob = J.encode_baseline(32, 24, _gray12(32, 24), 1, precision=12)
+    blob = JE.encode_baseline(32, 24, _gray12(32, 24), 1, precision=12)
     df = spark.createDataFrame([(1, blob)], "media_id long, content binary")
     (row,) = MM.resize_media(df, 16).collect()
     assert row["resize_ok"] and row["width"] == 16
@@ -469,9 +471,9 @@ def test_dc_category_16_negative_diff_raises():
     bytes a decoder reads back as +32768 (ADVICE r12)."""
     codes = {n: (max(n, 1), 0) for n in range(17)}
     with pytest.raises(ValueError, match="category 16"):
-        J._encode_block(J._BitWriter(), [-32768] + [0] * 63, 0, codes, codes)
+        JE._encode_block(JE._BitWriter(), [-32768] + [0] * 63, 0, codes, codes)
     # the legal corner still encodes
-    J._encode_block(J._BitWriter(), [32768] + [0] * 63, 0, codes, codes)
+    JE._encode_block(JE._BitWriter(), [32768] + [0] * 63, 0, codes, codes)
 
 
 def test_truncated_dqt_raises_both_precisions():

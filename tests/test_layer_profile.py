@@ -1,5 +1,7 @@
 """tools/layer_profile.py attributes jobs to queries by job group, and
-group-less or foreign-group jobs by span, on a tiny synthetic event log."""
+group-less or foreign-group jobs by span, on a tiny synthetic event log;
+through a real session, pipeline job counts stay under their caps and the
+Catalyst phases cover every execution of a call."""
 
 from __future__ import annotations
 
@@ -88,14 +90,17 @@ def test_skipped_stages_add_no_tasks(log_dir):
     assert t["q2"]["tasks"] == 8
 
 
-# job counts of the measured (second) call, recorded at sf0.01 on 4 cores
-# with the parent's UI poller and the collector on the same call; a
-# pipeline may get cheaper, never dearer. The count can move with timing
-# (one full-suite run read 43 for scd2_partition_merge where quiet runs
-# read 42; an AQE stage submitted before a re-plan drops it is one way),
+# job counts of the measured (second) call, recorded on 4 cores; a
+# pipeline may get cheaper, never dearer. The three SCD2 caps are the
+# one-exchange merge's counts (the join-chain merge ran 42, 15 and 23).
+# The count can move with timing (one full-suite run read 43 for the
+# join-chain scd2_partition_merge where quiet runs read 42; an AQE stage
+# submitted before a re-plan drops it is one way),
 # so each pipeline runs once more and the lesser count is pinned.
 JOB_CAPS = {
-    "scd2_partition_merge": 42,
+    "scd2_partition_merge": 20,
+    "scd2_customer_two_batch": 5,
+    "stream_scd2_upsert": 14,
     "mart_incremental_refresh": 20,
     "stream_user_session_stats": 11,
     "fact_layout_skipping": 24,
@@ -117,7 +122,7 @@ from datafoundation_multi_source_retail_data_integration_hub_spark.operators.sto
 spark, log_dir = lp.open_session("layer-profile-counts")
 spans = lp.Spans(spark)
 sf, names = sys.argv[2], sys.argv[3].split(",")
-lp.profile_queries(spark, spans, sf, names)
+rows = lp.profile_queries(spark, spans, sf, names)
 qs = entry.queries()
 for name in names:
     spans.run(name + "#3", lambda: qs[name](spark, sf).toPandas())
@@ -126,7 +131,7 @@ t = datetime(2026, 1, 1)
 log_run(spark, RunLogEntry("r1", "t", 1, "success", t, t))  # creates the table
 spans.run("log_run", lambda: log_run(spark, RunLogEntry("r2", "t", 1, "success", t, t)))
 spark.stop()
-print(json.dumps(lp.layer_tables(log_dir, spans.spans)))
+print(json.dumps({"layers": lp.layer_tables(log_dir, spans.spans), "rows": rows}))
 shutil.rmtree(log_dir)
 """
 
@@ -140,11 +145,16 @@ def test_pipeline_counts_through_the_collector(tmp_path):
         cwd=tmp_path, env=env, capture_output=True, text=True, timeout=900,
     )
     assert proc.returncode == 0, proc.stderr[-3000:]
-    tables = json.loads(proc.stdout.strip().splitlines()[-1])
+    out = json.loads(proc.stdout.strip().splitlines()[-1])
+    tables = out["layers"]
     for name, cap in JOB_CAPS.items():
         jobs = min(tables[name]["jobs"], tables[name + "#3"]["jobs"])
         assert 0 < jobs <= cap, (name, tables[name], tables[name + "#3"])
     # the stream's micro-batch jobs run on its own thread, without the group
     assert tables["stream_user_session_stats"]["untagged_jobs"] > 0
+    # Catalyst phases count every execution of the call, not only the
+    # returned frame's: the merge's inner writes and checkpoints plan too
+    merge = out["rows"]["scd2_partition_merge"]
+    assert merge["analysis"] + merge["optimization"] + merge["planning"] > 0.05, merge
     audit = tables["log_run"]
     assert (audit["jobs"], audit["stages"], audit["tasks"]) == (1, 1, 1), audit

@@ -347,7 +347,9 @@ def test_progressive_jpeg_bomb_budget():
         jpeg as J,
     )
 
-    small = J.encode_progressive(8, 8, bytes(64))
+    from . import jpeg_encoders as JE
+
+    small = JE.encode_progressive(8, 8, bytes(64))
     sof_at = small.find(b"\xff\xc2")
     bombed = (
         small[: sof_at + 5]

@@ -210,8 +210,26 @@ def test_cold_build_is_prepared_on_its_next_call(spark, monkeypatch, tmp_path):
     extract = entry.queries()["dashboard_extract"]
     for _ in range(3):
         extract(spark, sf_dir).collect()
-    assert len(calls) == 2  # the cold call checkpoints the initial dims
+    # the cold call checkpoints the initial dims inside a SESSION build,
+    # so its own build is the one kept
+    assert len(calls) == 1
     assert ("read", "dashboard_extract", sf_dir) in storage.cached_keys(storage.SESSION)
+
+
+def test_first_table_load_leaves_the_build_pure(spark, monkeypatch, tmp_path):
+    # a fresh copy of the corpus: the first call loads every table cold,
+    # and those jobs run inside SESSION builds
+    sf_dir = str(tmp_path / "sf")
+    shutil.copytree(SF_SMOKE, sf_dir)
+    calls = []
+    _counting(monkeypatch, relational, "flagship_star_revenue", calls)
+    star = entry.queries()["flagship_star_revenue"]
+    before = _jobs(spark)
+    star(spark, sf_dir).collect()
+    assert _jobs(spark) > before + 1  # the cold build ran jobs of its own loads
+    calls.clear()
+    star(spark, sf_dir).collect()
+    assert calls == []
 
 
 def test_new_application_builds_again(spark, monkeypatch):

@@ -11,7 +11,8 @@ query whose measured span its submission falls in.
 
 Per query: wall; Python build time of the first and the measured call,
 and whether the measured call reused a prepared plan
-(``storage.prepared``); the Catalyst phases; jobs, stages run, tasks;
+(``storage.prepared``); the Catalyst phases summed over every SQL
+execution begun in the measured call; jobs, stages run, tasks;
 job busy time and the driver-side gap around jobs; executor run, CPU and
 GC time; shuffle read, write and spill; output bytes.
 
@@ -50,6 +51,56 @@ def open_session(app_name: str):
         },
     )
     return spark, log_dir
+
+
+class CatalystPhases:
+    """A py4j ``QueryExecutionListener`` that keeps the Catalyst phases
+    (analysis, optimization, planning) of every SQL execution the session
+    finishes: the returned frame's collect and every inner write, count
+    or checkpoint. Each execution is keyed by when its first phase began,
+    so ``per_span`` can sum the executions that began inside a span."""
+
+    class Java:
+        implements = ["org.apache.spark.sql.util.QueryExecutionListener"]
+
+    def __init__(self, spark) -> None:
+        from pyspark.java_gateway import ensure_callback_server_started
+
+        ensure_callback_server_started(spark.sparkContext._gateway)
+        self.jsc = spark.sparkContext._jsc
+        self.identity = spark._jvm.System.identityHashCode
+        self.records: dict[int, tuple[float, dict[str, float]]] = {}
+        spark._jsparkSession.listenerManager().register(self)
+
+    def onSuccess(self, func_name, qe, duration_ns) -> None:
+        self._record(qe)
+
+    def onFailure(self, func_name, qe, exception) -> None:
+        self._record(qe)
+
+    def _record(self, qe) -> None:
+        phases, start = {}, None
+        it = qe.tracker().phases().iterator()
+        while it.hasNext():
+            kv = it.next()
+            summary = kv._2()
+            phases[kv._1()] = (summary.endTimeMs() - summary.startTimeMs()) / 1e3
+            start = summary.startTimeMs() if start is None else min(start, summary.startTimeMs())
+        if start is not None:  # an execution run twice is counted once
+            self.records[self.identity(qe)] = (start, phases)
+
+    def per_span(self, spans: list[trace.OpSpan]) -> dict[str, dict[str, float]]:
+        """Seconds per phase summed over the executions begun in each span,
+        once every finished execution has been reported."""
+        self.jsc.sc().listenerBus().waitUntilEmpty()
+        out = {s.op_id: dict.fromkeys(("analysis", "optimization", "planning"), 0.0) for s in spans}
+        for start, phases in list(self.records.values()):
+            s = trace.span_at(spans, start)
+            if s is not None:
+                for name, secs in phases.items():
+                    if name in out[s.op_id]:
+                        out[s.op_id][name] += secs
+        return out
 
 
 class Spans:
@@ -99,6 +150,7 @@ def profile_queries(spark, spans: Spans, sf_dir: str, names: list[str]) -> dict[
     )
 
     qs = entry.queries()
+    phases = CatalystPhases(spark)
     out: dict[str, dict] = {}
     for name in names:
         t0 = time.perf_counter()
@@ -113,18 +165,20 @@ def profile_queries(spark, spans: Spans, sf_dir: str, names: list[str]) -> dict[
             df = qs[name](spark, sf_dir)
             build = time.perf_counter() - t0
             df.toPandas()
-            return df, build, time.perf_counter() - t0
+            return build, time.perf_counter() - t0
 
-        df, build, wall = spans.run(name, measured)
+        build, wall = spans.run(name, measured)
         storage.unpersist_all()
         out[name] = {
             "wall_s": wall,
             "build_first_s": build_first,
             "build_s": build,
             "prepared": prepared,
-            **trace.catalyst_phases(df),
         }
         print(f"# {name}: {wall:.2f}s", file=sys.stderr)
+    for span_id, sums in phases.per_span(spans.spans).items():
+        if span_id in out:
+            out[span_id].update(sums)
     return out
 
 
@@ -194,7 +248,10 @@ def main() -> None:
     print(
         "Each query runs twice in one session; the row is the second call. "
         "*build 1st* is the first call's Python build; *prep* says the second "
-        "call reused the first's analyzed plan. Jobs are the query's job group "
+        "call reused the first's analyzed plan. *analysis*, *optim* and "
+        "*planning* sum the Catalyst phases of every SQL execution begun "
+        "during the call (its collect and each inner write, count or "
+        "checkpoint); AQE re-planning is not among them. Jobs are the query's job group "
         "plus, under *by span*, group-less jobs (stream threads) submitted "
         "during the call. *gap* is wall time with no job of the query running: "
         "Python build, Catalyst, catalog calls, commits, result transfer. "
