@@ -20,6 +20,13 @@ from pyspark.sql import SparkSession
 from .functions.concurrent import overlapping
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# Entries of Spark's generated-class cache (static; Spark's default is 100).
+# The 9 dashboard query kinds compile 222 whole-stage and expression classes
+# cold, the warehouse_etl ops about 290, so at 100 every warm pass over the
+# dashboard recompiled about 169 of them. 2000 holds both working sets with
+# headroom; a warm pass then compiles nothing
+# (tests/test_codegen_cache.py).
+CODEGEN_CACHE_ENTRIES = 2000
 
 
 def get_spark(
@@ -39,6 +46,9 @@ def get_spark(
       parallelism; left at default — correct for both scales.
     - Arrow execution accelerates any pandas interchange (``toPandas``,
       pandas UDFs) by columnar batch transfer.
+    - ``spark.sql.codegen.cache.maxEntries`` is static: it takes effect only
+      when this call starts the JVM's first session, and a session built
+      elsewhere keeps Spark's default.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
@@ -62,6 +72,7 @@ def get_spark(
         # Pandas-UDF kernels see fewer, larger chunks. Per-batch memory
         # stays bounded (row width x 65536 ~ a few MB on every table here).
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
     )
@@ -70,6 +81,13 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def compiled_classes(spark: SparkSession) -> int:
+    """Classes Spark's code generator has compiled in this JVM: an exact
+    count (the compile-time histogram behind it samples)."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
 
 
 @contextlib.contextmanager

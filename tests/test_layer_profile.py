@@ -156,5 +156,7 @@ def test_pipeline_counts_through_the_collector(tmp_path):
     # returned frame's: the merge's inner writes and checkpoints plan too
     merge = out["rows"]["scd2_partition_merge"]
     assert merge["analysis"] + merge["optimization"] + merge["planning"] > 0.05, merge
+    # a fresh JVM compiles code for each pipeline's first call
+    assert all(r["cg_first"] > 0 for r in out["rows"].values()), out["rows"]
     audit = tables["log_run"]
     assert (audit["jobs"], audit["stages"], audit["tasks"]) == (1, 1, 1), audit

@@ -12,7 +12,8 @@ query whose measured span its submission falls in.
 Per query: wall; Python build time of the first and the measured call,
 and whether the measured call reused a prepared plan
 (``storage.prepared``); the Catalyst phases summed over every SQL
-execution begun in the measured call; jobs, stages run, tasks;
+execution begun in the measured call; the classes Spark's code generator
+compiled during the first and the measured call; jobs, stages run, tasks;
 job busy time and the driver-side gap around jobs; executor run, CPU and
 GC time; shuffle read, write and spill; output bytes.
 
@@ -148,16 +149,21 @@ def profile_queries(spark, spans: Spans, sf_dir: str, names: list[str]) -> dict[
     from datafoundation_multi_source_retail_data_integration_hub_spark.operators import (
         storage,
     )
+    from datafoundation_multi_source_retail_data_integration_hub_spark.session import (
+        compiled_classes,
+    )
 
     qs = entry.queries()
     phases = CatalystPhases(spark)
     out: dict[str, dict] = {}
     for name in names:
+        cg0 = compiled_classes(spark)
         t0 = time.perf_counter()
         df = qs[name](spark, sf_dir)
         build_first = time.perf_counter() - t0
         df.toPandas()
         storage.unpersist_all()
+        cg1 = compiled_classes(spark)
         prepared = ("read", name, sf_dir) in storage.cached_keys(storage.SESSION)
 
         def measured():
@@ -174,6 +180,8 @@ def profile_queries(spark, spans: Spans, sf_dir: str, names: list[str]) -> dict[
             "build_first_s": build_first,
             "build_s": build,
             "prepared": prepared,
+            "cg_first": cg1 - cg0,
+            "cg": compiled_classes(spark) - cg1,
         }
         print(f"# {name}: {wall:.2f}s", file=sys.stderr)
     for span_id, sums in phases.per_span(spans.spans).items():
@@ -190,6 +198,8 @@ COLUMNS = [
     ("analysis (s)", "analysis"),
     ("optim (s)", "optimization"),
     ("planning (s)", "planning"),
+    ("cg 1st", "cg_first"),
+    ("cg", "cg"),
     ("jobs", "jobs"),
     ("by span", "untagged_jobs"),
     ("stages", "stages"),
@@ -234,6 +244,7 @@ def main() -> None:
     spark, log_dir = open_session("layer-profile")
     try:
         cpus = spark.sparkContext.defaultParallelism
+        cache = spark.conf.get("spark.sql.codegen.cache.maxEntries")
         spans = Spans(spark)
         rows = profile_queries(spark, spans, args.sf, names)
         spark.stop()
@@ -255,7 +266,19 @@ def main() -> None:
         "plus, under *by span*, group-less jobs (stream threads) submitted "
         "during the call. *gap* is wall time with no job of the query running: "
         "Python build, Catalyst, catalog calls, commits, result transfer. "
-        "Stages and tasks count stages that ran; skipped stages add nothing.\n"
+        "Stages and tasks count stages that ran; skipped stages add nothing. "
+        "*cg 1st* and *cg* count the classes Spark's code generator compiled "
+        "during the first and the measured call; *cg 1st* is the query's "
+        "code footprint beyond the classes earlier rows already compiled. "
+        "The measured call directly follows the first, so *cg* reads 0 "
+        "whenever the cache holds one query's classes; eviction between "
+        "kinds shows only when their summed footprint exceeds the cache.\n"
+    )
+    footprint = sum(r["cg_first"] for r in rows.values())
+    print(
+        f"The {len(rows)} queries profiled compiled {footprint} classes on their "
+        f"first calls; the generated-class cache holds {cache} "
+        "(`spark.sql.codegen.cache.maxEntries`).\n"
     )
     asym = {n: r for n, r in rows.items() if n in bench.WORK_ASYMMETRIC}
     gate = {n: r for n, r in rows.items() if n not in bench.WORK_ASYMMETRIC}
