@@ -23,7 +23,7 @@ DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 # Entries of Spark's generated-class cache (static; Spark's default is 100).
 # The 9 dashboard query kinds compile 222 whole-stage and expression classes
 # cold, the warehouse_etl ops about 290, so at 100 every warm pass over the
-# dashboard recompiled about 169 of them. 2000 holds both working sets with
+# dashboard recompiled 166-168 of them. 2000 holds both working sets with
 # headroom; a warm pass then compiles nothing
 # (tests/test_codegen_cache.py).
 CODEGEN_CACHE_ENTRIES = 2000

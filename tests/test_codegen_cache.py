@@ -2,7 +2,7 @@
 
 The 9 kinds compile about 222 whole-stage and expression classes cold.
 With Spark's default of 100 cache entries every warm pass recompiled
-about 169 of them; ``session.CODEGEN_CACHE_ENTRIES`` holds them all. The
+166-168 of them; ``session.CODEGEN_CACHE_ENTRIES`` holds them all. The
 count is Spark's ``CodegenMetrics`` compile counter, which is exact.
 """
 
