@@ -83,13 +83,6 @@ def get_spark(
     return spark
 
 
-def compiled_classes(spark: SparkSession) -> int:
-    """Classes Spark's code generator has compiled in this JVM: an exact
-    count (the compile-time histogram behind it samples)."""
-    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
-    return metrics.METRIC_COMPILATION_TIME().getCount()
-
-
 @contextlib.contextmanager
 def scoped_confs(spark: SparkSession, confs: dict[str, str]) -> Iterator[None]:
     """Set session confs for the duration of a block, restoring each to

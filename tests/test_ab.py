@@ -1,5 +1,6 @@
-"""tools/ab.py's keep rule, on synthetic readings: a no-op change (both
-sides drawn alike) is not kept, a clear gain is."""
+"""tools/ab.py's keep and claim rules, on synthetic readings: a no-op
+change (both sides drawn alike) is not kept, a clear gain is; a gain
+over too few pairs, or one inside the parent's spread, is not claimed."""
 
 from __future__ import annotations
 
@@ -7,6 +8,7 @@ import importlib.util
 from pathlib import Path
 
 import numpy as np
+import pytest
 
 REPO = Path(__file__).resolve().parent.parent
 _spec = importlib.util.spec_from_file_location("ab", REPO / "tools" / "ab.py")
@@ -32,6 +34,10 @@ def test_a_no_op_change_is_not_kept():
         for _ in range(2000)
     )
     assert kept / 2000 < 0.06, kept
+    assert not any(
+        ab.compare(list(rng.normal(3.0, 0.4, 10)), list(rng.normal(3.0, 0.4, 10)), True)["claim"]
+        for _ in range(200)
+    )
 
 
 def test_ties_count_for_neither_side():
@@ -48,3 +54,28 @@ def test_a_clear_gain_is_kept_in_either_direction():
     assert (c["wins"], c["keep"]) == (7, True)
     # and the same readings as a throughput gained nothing
     assert not ab.compare(slow, fast, higher_is_better=True)["keep"]
+
+
+def test_iqr_interpolates_between_readings():
+    assert ab.iqr([1.0, 2.0, 3.0, 4.0, 5.0]) == 2.0
+    assert ab.iqr([1.0, 2.0, 3.0, 4.0]) == 1.5
+
+
+def test_the_claim_needs_ten_pairs_nine_won_and_a_gap_beyond_the_iqr():
+    a = [3.0, 3.1, 2.9, 3.2, 2.8, 3.0, 3.1, 2.9, 3.2, 2.8]  # IQR 0.2
+    # 5/5 pairs won clear of every reading: kept, but too few to claim
+    c = ab.compare(a[:5], [x + 1.0 for x in a[:5]], higher_is_better=True)
+    assert (c["keep"], c["claim"]) == (True, False)
+    # 10/10 won by 0.5, beyond A's IQR of 0.2: claimed
+    c = ab.compare(a, [x + 0.5 for x in a], higher_is_better=True)
+    assert c["a_iqr"] == pytest.approx(0.2)
+    assert (c["wins"], c["keep"], c["claim"]) == (10, True, True)
+    # 10/10 won, but the median moved by 0.1, inside A's IQR: not claimed
+    c = ab.compare(a, [x + 0.1 for x in a], higher_is_better=True)
+    assert (c["wins"], c["keep"], c["claim"]) == (10, True, False)
+    # 8/10 won by a wide margin: not claimed
+    c = ab.compare(a, [x + 0.5 for x in a[:8]] + [x - 0.5 for x in a[8:]], True)
+    assert (c["wins"], c["claim"]) == (8, False)
+    # the same rule for a latency, where lower is better
+    c = ab.compare(a, [x - 0.5 for x in a], higher_is_better=False)
+    assert (c["wins"], c["claim"]) == (10, True)

@@ -11,10 +11,13 @@ median latency of that kind), it reports each side's median and range,
 the pairs B won and lost (ties count for neither), and the one-sided
 sign-test p that B wins at least that often by chance. The keep rule
 keeps B on a metric when B's range lies wholly on the better side of A's
-or p < 0.05. The rule judges a metric named before the runs: across
-the dozen or so rows printed, one may read "keep" by chance. Each run's
-line gives its blocks timed, since a run that times a second block reads
-warmer ops.
+or p < 0.05. The claim rule is stricter: at least 10 pairs, B better in
+at least 9 of every 10, and B's median better than A's by more than A's
+interquartile range, which is printed too. Both rules judge a metric
+named before the runs: across the dozen or so rows printed, one may
+read "keep" by chance. Each run's line gives its blocks timed, since a
+run that times a second block reads warmer ops. Every run lasts the
+benchmark's own ``run_seconds``.
 
 Run from the repository root:
 
@@ -41,6 +44,8 @@ sys.path.insert(0, ROOT)
 from perfbench.workloads import WORKLOADS  # noqa: E402
 
 P_KEEP = 0.05
+CLAIM_PAIRS = 10
+CLAIM_WON = 0.9
 
 
 def sign_test_p(wins: int, losses: int) -> float:
@@ -50,24 +55,35 @@ def sign_test_p(wins: int, losses: int) -> float:
     return sum(math.comb(n, k) for k in range(wins, n + 1)) / 2**n
 
 
+def iqr(xs: list[float]) -> float:
+    """Distance between the quartiles (linear interpolation)."""
+    q1, _, q3 = statistics.quantiles(xs, n=4, method="inclusive")
+    return q3 - q1
+
+
 def compare(a: list[float], b: list[float], higher_is_better: bool) -> dict:
-    """Paired readings ``a[i]``, ``b[i]`` of one metric, and the keep rule's
-    verdict on B."""
+    """Paired readings ``a[i]``, ``b[i]`` of one metric, and the keep and
+    claim rules' verdicts on B."""
     sign = 1 if higher_is_better else -1
     wins = sum(1 for x, y in zip(a, b) if sign * (y - x) > 0)
     losses = sum(1 for x, y in zip(a, b) if sign * (y - x) < 0)
     p = sign_test_p(wins, losses)
     separate = (min(b) > max(a)) if higher_is_better else (max(b) < min(a))
+    a_median, b_median, a_iqr = statistics.median(a), statistics.median(b), iqr(a)
     return {
-        "a_median": statistics.median(a),
+        "a_median": a_median,
         "a_range": (min(a), max(a)),
-        "b_median": statistics.median(b),
+        "a_iqr": a_iqr,
+        "b_median": b_median,
         "b_range": (min(b), max(b)),
         "wins": wins,
         "losses": losses,
         "pairs": len(a),
         "p": p,
         "keep": separate or p < P_KEEP,
+        "claim": len(a) >= CLAIM_PAIRS
+        and wins >= CLAIM_WON * len(a)
+        and sign * (b_median - a_median) > a_iqr,
     }
 
 
@@ -110,21 +126,23 @@ def blocks_timed(workload: str, timed_ops: int) -> float:
     return (timed_ops - len(w.once)) / len(w.block)
 
 
-def end_to_end() -> dict[str, bool]:
-    """Each end-to-end metric of the benchmark: is higher better?"""
+def benchmark() -> tuple[dict[str, bool], float]:
+    """The benchmark's end-to-end metrics (is higher better?) and its run
+    length in seconds."""
     with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
-        return {m["name"]: m["better"] == "higher" for m in json.load(f)["end_to_end"]}
+        spec = json.load(f)
+    return {m["name"]: m["better"] == "higher" for m in spec["end_to_end"]}, spec["run_seconds"]
 
 
-def report(runs: dict[str, list[dict]]) -> list[str]:
+def report(runs: dict[str, list[dict]], metrics: dict[str, bool]) -> list[str]:
     """Markdown: every metric and op kind compared A → B."""
     lines = [
-        "| metric | A median [range] | B median [range] | B won | B lost | p | keep |",
-        "|---|---|---|---|---|---|---|",
+        "| metric | A median [range] | A IQR | B median [range] | B won | B lost | p | keep | claim |",
+        "|---|---|---|---|---|---|---|---|---|",
     ]
     series = {
         name: (higher, [r["metrics"][name] for r in runs["A"]], [r["metrics"][name] for r in runs["B"]])
-        for name, higher in end_to_end().items()
+        for name, higher in metrics.items()
     }
     kinds = [k for k in runs["A"][0]["kinds"] if all(k in r["kinds"] for r in runs["A"] + runs["B"])]
     for k in kinds:
@@ -133,9 +151,10 @@ def report(runs: dict[str, list[dict]]) -> list[str]:
         c = compare(a, b, higher)
         lines.append(
             f"| {name} | {c['a_median']:.4g} [{c['a_range'][0]:.4g}–{c['a_range'][1]:.4g}] "
+            f"| {c['a_iqr']:.4g} "
             f"| {c['b_median']:.4g} [{c['b_range'][0]:.4g}–{c['b_range'][1]:.4g}] "
             f"| {c['wins']}/{c['pairs']} | {c['losses']}/{c['pairs']} | {c['p']:.3f} "
-            f"| {'keep' if c['keep'] else 'no'} |"
+            f"| {'keep' if c['keep'] else 'no'} | {'claim' if c['claim'] else 'no'} |"
         )
     return lines
 
@@ -147,7 +166,6 @@ def main() -> None:
     ap.add_argument("--workload", required=True, choices=sorted(WORKLOADS))
     ap.add_argument("--pairs", type=int, default=5)
     ap.add_argument("--seed", type=int, required=True, help="pair i runs seed + i on both sides")
-    ap.add_argument("--seconds", type=float, default=8.0)
     args = ap.parse_args()
     if args.pairs < 5:
         ap.error("--pairs must be at least 5: fewer cannot reach p < 0.05")
@@ -156,25 +174,27 @@ def main() -> None:
     try:
         trees = {"A": tree_of(args.a, scratch), "B": tree_of(args.b, scratch)}
         runs: dict[str, list[dict]] = {"A": [], "B": []}
-        metrics = end_to_end()
+        metrics, seconds = benchmark()
         print(f"A = `{args.a}`, B = `{args.b}`; workload `{args.workload}`, "
               f"{args.pairs} pairs, seeds {args.seed}–{args.seed + args.pairs - 1}, "
-              f"--seconds {args.seconds:g}\n")
+              f"{seconds:g} s per run\n")
         print("| pair | seed | side | blocks | steal (s) | failed | "
               + " | ".join(metrics) + " |")
         print("|---" * (6 + len(metrics)) + "|")
         for i in range(args.pairs):
             seed = args.seed + i
             for side in ("AB" if i % 2 == 0 else "BA"):
-                r = run_once(trees[side], args.workload, seed, args.seconds)
+                r = run_once(trees[side], args.workload, seed, seconds)
                 runs[side].append(r)
                 print(f"| {i + 1} | {seed} | {side} | {blocks_timed(args.workload, r['timed_ops']):g} "
                       f"| {r['steal_s']:.1f} | {r['failed']} | "
                       + " | ".join(f"{r['metrics'][m]:.4g}" for m in metrics) + " |",
                       flush=True)
         print()
-        print("\n".join(report(runs)))
-        print(f"\nkeep = B's range wholly better than A's, or one-sided sign-test p < {P_KEEP}.")
+        print("\n".join(report(runs, metrics)))
+        print(f"\nkeep = B's range wholly better than A's, or one-sided sign-test p < {P_KEEP}. "
+              f"claim = at least {CLAIM_PAIRS} pairs, B better in at least {CLAIM_WON:.0%} "
+              "of them, and B's median better than A's by more than A's IQR.")
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
 

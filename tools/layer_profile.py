@@ -142,15 +142,19 @@ def layer_tables(log_dir: str, spans: list[trace.OpSpan]) -> dict[str, dict[str,
     return {s.op_id: trace.op_table(s, by_span[s.op_id], stages) for s in spans}
 
 
+def compiled_classes(spark) -> int:
+    """Classes Spark's code generator has compiled in this JVM: an exact
+    count (the compile-time histogram behind it samples)."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
 def profile_queries(spark, spans: Spans, sf_dir: str, names: list[str]) -> dict[str, dict]:
     """Driver-side numbers per query; the measured call's span is named
     after the query."""
     import __spark_entry__ as entry
     from datafoundation_multi_source_retail_data_integration_hub_spark.operators import (
         storage,
-    )
-    from datafoundation_multi_source_retail_data_integration_hub_spark.session import (
-        compiled_classes,
     )
 
     qs = entry.queries()
