@@ -93,11 +93,16 @@ def prepare_vectors(
     cache-the-working-set step a cluster run does too (iterative ML on
     a 100 TB corpus persists its feature frame or checkpoints it).
     Release with ``unpersist_all()``."""
-    return _persist(
-        df.select(
-            F.col(id_col),
-            F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("__dvec"),
-        )
+    return _persist(double_vectors(df, vec_col, id_col))
+
+
+def double_vectors(
+    df: DataFrame, vec_col: str = "embedding", id_col: str = "vec_id"
+) -> DataFrame:
+    """The (id, ``__dvec``) projection ``prepare_vectors`` persists."""
+    return df.select(
+        F.col(id_col),
+        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("__dvec"),
     )
 
 

@@ -9,12 +9,15 @@ the Jegou/Douze/Schmid IVF-ADC layout every production ANN index uses).
 Spark shape:
 
 - **train**: ``m`` independent deterministic k-means fits, each over a
-  ``slice`` of the shared persisted double-cast working set
-  (``clustering.prepare_vectors``) — the corpus is scanned from cache,
-  and each fit shuffles only k x sub doubles per iteration.
+  ``slice`` of the double-cast working set, persisted while the index
+  builds — the corpus is scanned from cache, and each fit shuffles only
+  k x sub doubles per iteration.
 - **encode**: one map-side expression per subspace (codebooks enter the
   plan as literals, exactly like ``assign_clusters``); the corpus never
   shuffles. The encoded frame is ``m`` ints per vector.
+- **index**: ``pq_index`` trains and encodes once and localCheckpoints
+  the codes; with a ``cache_key`` the codebooks and codes are a
+  ``SESSION`` entry, so a request only runs the ADC probe below.
 - **ADC query**: the query side (tiny) precomputes its per-subspace
   distance TABLE to every codebook centroid as a map literal-keyed
   column, broadcasts, and the scored join is ``m`` map lookups + an
@@ -34,9 +37,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.concurrent import overlap
+from . import storage
 from .clustering import (
     Centroids,
     centroid_literal_sql,
+    double_vectors,
     kmeans_fit,
     sq_dist_sql,
 )
@@ -50,21 +55,17 @@ def train_codebooks(
     n_iter: int = 2,
     vec_col: str = "__dvec",
     id_col: str = "vec_id",
-    cache_key: tuple | None = None,
     train_mod: int | None = None,
 ) -> list[Centroids]:
     """One deterministic k-means codebook per subspace. ``prep`` is a
-    ``prepare_vectors`` frame (already double-cast + persisted).
-
-    ``cache_key`` (a tuple naming the corpus) makes each subspace fit a
-    ``SESSION`` entry of the storage registry — the ``m`` training-job
-    groups run once per session instead of once per query invocation.
+    double-cast (``clustering.double_vectors``), persisted frame.
 
     The ``m`` fits are independent chains of tiny jobs (seed scan +
     ``n_iter`` aggregate-collects), so they run through ``overlap``: on a
-    cold fit cache training took 5.1 s instead of 7.1 s at sf0.1 on 4
-    cores, and on a warm one the overlap costs nothing measurable. Each
-    subspace trains on its own slice and lands in its own list slot."""
+    cold build training took 5.1 s instead of 7.1 s at sf0.1 on 4 cores.
+    They run once per index build (``pq_index``), never on a
+    request that probes a built index. Each subspace trains on its own
+    slice and lands in its own list slot."""
 
     def fit(s: int) -> Centroids:
         sub_df = prep.select(
@@ -79,11 +80,47 @@ def train_codebooks(
             id_col=id_col,
             dim=sub,
             pre_cast=True,
-            cache_key=(*cache_key, "pq_sub", s, sub) if cache_key else None,
             train_mod=train_mod,
         )
 
     return overlap(prep.sparkSession, *(partial(fit, s) for s in range(m)))
+
+
+def pq_index(
+    corpus: DataFrame,
+    cache_key: tuple,
+    m: int,
+    sub: int,
+    k: int = 8,
+    n_iter: int = 2,
+    train_mod: int | None = None,
+    vec_col: str = "embedding",
+    id_col: str = "vec_id",
+) -> tuple[list[Centroids], DataFrame]:
+    """The PQ index of ``corpus``: ``m`` codebooks and the codes frame
+    (``id_col``, ``c0..c{m-1}``), localCheckpointed, for ``adc_topk``.
+
+    A ``SESSION`` entry that holds data blocks, under ``cache_key`` (a
+    tuple naming the corpus, e.g. its file identity) and the parameters:
+    built once per session, a hit is bit-identical because training and
+    encoding are deterministic. The build persists the double-cast corpus
+    for its own duration and releases it; the index keeps only the codes
+    (``m`` ints per vector)."""
+
+    def build() -> tuple[list[Centroids], DataFrame]:
+        prep = double_vectors(corpus, vec_col, id_col).persist()
+        try:
+            books = train_codebooks(
+                prep, m, sub, k=k, n_iter=n_iter, id_col=id_col,
+                train_mod=train_mod,
+            )
+            codes = encode(prep, books, sub, id_col=id_col)
+            return books, codes.localCheckpoint(eager=True)
+        finally:
+            prep.unpersist()
+
+    key = ("pq", cache_key, m, sub, k, n_iter, train_mod, vec_col, id_col)
+    return storage.memo(corpus.sparkSession, storage.SESSION, key, build)
 
 
 def _bt(name: str) -> str:

@@ -37,9 +37,12 @@ from __future__ import annotations
 
 import hashlib
 from functools import reduce
+from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from . import storage
 
 # ---------------------------------------------------------------------------
 # vector math (built-in expressions only). Each helper accepts a Column
@@ -385,74 +388,117 @@ def lsh_ann_topk(
 # ---------------------------------------------------------------------------
 
 
-def ivf_scored(
+class IvfIndex(NamedTuple):
+    """A built IVF index: ``cells`` holds one row per corpus vector —
+    (cid, neighbor_id, cvec, __cn), localCheckpointed — and ``cents``
+    the coarse quantizer's (cid, centv, __cen) rows it was assigned to."""
+
+    cells: DataFrame
+    cents: DataFrame
+
+
+def ivf_index(
     corpus: DataFrame,
-    queries: DataFrame,
+    cache_key: tuple,
     centroid_stride: int = 100,
-    nprobe: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     centroids: DataFrame | None = None,
-) -> DataFrame:
-    """IVF-style approximate top-k: partition the corpus into Voronoi
-    cells around centroid vectors, probe only the ``nprobe`` cells nearest
-    each query, score exactly within the probed cells.
+) -> IvfIndex:
+    """The IVF cell assignment: partition the corpus into Voronoi cells
+    around centroid vectors, built in one action (a localCheckpoint).
+    ``ivf_probe`` then scores queries only within their nearest cells.
 
     Coarse quantizer: every ``centroid_stride``-th corpus vector serves as
     a centroid — deterministic (hence cross-engine oracle-checkable) and a
-    standard cheap init; production swaps in k-means centroids through the
-    same cell-assignment plan, nothing else changes.
+    standard cheap init; its rows are read back from the cells, so the
+    index is the one checkpoint. ``centroids`` swaps in a trained
+    quantizer (e.g. ``operators.clustering.kmeans_fit``): (cid, centv)
+    rows drop into the identical cell-assignment plan.
+
+    A ``SESSION`` entry that holds data blocks, built once per session
+    under ``cache_key`` (a tuple naming the corpus, e.g. its file
+    identity, and the trained quantizer if one is given) and the
+    parameters.
 
     Scale shape: centroids broadcast (C = n/stride rows); cell assignment
     is one map-side pass (crossJoin vs the broadcast + partial-aggregated
     ``max_by`` — the shuffle carries one row per corpus vector, never the
-    corpus x C scored pairs); the probe join is an equi-join on the cell
-    id with the tiny query side broadcast. Recall rises with ``nprobe``
-    exactly as in FAISS-style IVF.
+    corpus x C scored pairs).
     """
-    if centroids is not None:
-        # trained quantizer (e.g. operators.clustering.kmeans_fit):
-        # (cid, centv) rows drop into the identical cell-assignment plan
-        cents = centroids.select("cid", "centv")
-    else:
-        cents = corpus.filter((F.col(id_col) % centroid_stride) == 0).select(
-            F.col(id_col).alias("cid"), F.col(vec_col).alias("centv")
+
+    def build() -> IvfIndex:
+        if centroids is not None:
+            cents = centroids.select("cid", "centv")
+        else:
+            cents = corpus.filter(
+                (F.col(id_col) % centroid_stride) == 0
+            ).select(F.col(id_col).alias("cid"), F.col(vec_col).alias("centv"))
+        # norms hoisted to one fold per side (centroid norms fold once per
+        # centroid INSIDE the broadcast build, not once per corpus x C
+        # pair) — identical IEEE operand values, bit-equal csim/cosine
+        # (see brute_force_topk)
+        cents = cents.withColumn("__cen", norm("centv"))
+        # tie rule: highest cosine, then LOWEST centroid id -> max_by on
+        # the (csim, -cid) pair, mirrored by arg_max(cid, [csim, -cid]) in
+        # DuckDB
+        ckey = F.struct(
+            F.col("csim"), (-F.col("cid")).cast("double").alias("ncid")
         )
-    # norms hoisted to one fold per side (centroid norms fold once per
-    # centroid INSIDE the broadcast build, not once per corpus x C pair) —
-    # identical IEEE operand values, bit-equal csim/cosine (see
-    # brute_force_topk)
-    cents = cents.withColumn("__cen", norm("centv"))
-    # tie rule: highest cosine, then LOWEST centroid id -> max_by on the
-    # (csim, -cid) pair, mirrored by arg_max(cid, [csim, -cid]) in DuckDB
-    ckey = F.struct(
-        F.col("csim"), (-F.col("cid")).cast("double").alias("ncid")
-    )
-    corpus_cells = (
-        corpus.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("cvec"),
-            norm(f"`{vec_col}`").alias("__cn"),
+        cells = (
+            corpus.select(
+                F.col(id_col).alias("neighbor_id"),
+                F.col(vec_col).alias("cvec"),
+                norm(f"`{vec_col}`").alias("__cn"),
+            )
+            .crossJoin(F.broadcast(cents))
+            .withColumn(
+                "csim",
+                F.expr(f"{sql_dot('cvec', 'centv')} / (`__cn` * `__cen`)"),
+            )
+            .groupBy("neighbor_id")
+            .agg(
+                F.max_by("cid", ckey).alias("cid"),
+                F.first("cvec").alias("cvec"),
+                F.first("__cn").alias("__cn"),
+            )
+            .localCheckpoint(eager=True)
         )
-        .crossJoin(F.broadcast(cents))
-        .withColumn(
-            "csim",
-            F.expr(f"{sql_dot('cvec', 'centv')} / (`__cn` * `__cen`)"),
-        )
-        .groupBy("neighbor_id")
-        .agg(
-            F.max_by("cid", ckey).alias("cid"),
-            F.first("cvec").alias("cvec"),
-            F.first("__cn").alias("__cn"),
-        )
-    )
+        if centroids is None:
+            # a stride centroid is a corpus vector: its cell row carries
+            # the vector and the same norm fold
+            cents = cells.filter(
+                (F.col("neighbor_id") % centroid_stride) == 0
+            ).select(
+                F.col("neighbor_id").alias("cid"),
+                F.col("cvec").alias("centv"),
+                F.col("__cn").alias("__cen"),
+            )
+        return IvfIndex(cells, cents)
+
+    key = ("ivf", cache_key, centroid_stride, id_col, vec_col)
+    return storage.memo(corpus.sparkSession, storage.SESSION, key, build)
+
+
+def ivf_probe(
+    index: IvfIndex,
+    queries: DataFrame,
+    nprobe: int = 2,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """IVF candidate stage: (query_id, neighbor_id, cosine) for every
+    corpus vector in the ``nprobe`` cells nearest each query — the probe
+    join is an equi-join on the cell id with the tiny query side
+    broadcast. Recall rises with ``nprobe`` exactly as in FAISS-style
+    IVF."""
     qscored = (
         queries.select(
             F.col(id_col).alias("query_id"),
             F.col(vec_col).alias("qvec"),
             norm(f"`{vec_col}`").alias("__qn"),
         )
-        .crossJoin(F.broadcast(cents))
+        .crossJoin(F.broadcast(index.cents))
         .withColumn(
             "csim",
             F.expr(f"{sql_dot('qvec', 'centv')} / (`__qn` * `__cen`)"),
@@ -467,7 +513,7 @@ def ivf_scored(
         .select("query_id", "qvec", "__qn", "cid")
     )
     return (
-        corpus_cells.join(F.broadcast(probes), "cid")
+        index.cells.join(F.broadcast(probes), "cid")
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .withColumn(
             "cosine",
@@ -478,26 +524,16 @@ def ivf_scored(
 
 
 def ivf_ann_topk(
-    corpus: DataFrame,
+    index: IvfIndex,
     queries: DataFrame,
     k: int,
-    centroid_stride: int = 100,
     nprobe: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    centroids: DataFrame | None = None,
 ) -> DataFrame:
-    """Exact top-k over the ``ivf_scored`` candidate stage (see its
-    docstring for the plan shape and scale analysis)."""
+    """Exact top-k over the ``ivf_probe`` candidate stage (see
+    ``ivf_index`` for the plan shape and scale analysis)."""
     return exact_topk_per_query(
-        ivf_scored(
-            corpus,
-            queries,
-            centroid_stride=centroid_stride,
-            nprobe=nprobe,
-            id_col=id_col,
-            vec_col=vec_col,
-            centroids=centroids,
-        ),
+        ivf_probe(index, queries, nprobe=nprobe, id_col=id_col, vec_col=vec_col),
         k,
     )

@@ -19,6 +19,15 @@ Contract:
 - ``RUN`` entries live until the next ``unpersist_all()``, which also
   unpersists every ``persist_tracked`` frame; ``SESSION`` entries live as
   long as the process, scoped by application id;
+- a ``SESSION`` entry may hold data blocks: a frame its build
+  localCheckpointed (the initial SCD2 dims of ``queries/warehouse.py``,
+  the PQ, IVF and MinHash corpus indexes of ``operators/pq.py``,
+  ``similarity.py`` and ``dedup.py``). Its key names every input the
+  data depends on — a corpus index names the corpus file's
+  ``(path, size, mtime_ns)`` — so a replaced input builds a new entry
+  and never hits the old one, whose blocks stay until the process ends.
+  A build that persists a working set of its own releases it before it
+  returns;
 - a prepared read takes no build lock: concurrent first calls each build,
   and the first pure plan stored is the one kept.
 
@@ -83,15 +92,17 @@ def prepared(
     name: str, query: Callable[[SparkSession, str], DataFrame]
 ) -> Callable[[SparkSession, str], DataFrame]:
     """``query`` as a prepared read: a build that submits no Spark job
-    outside ``SESSION`` builds (a first table load may run jobs) and uses
-    no ``RUN`` entry or tracked persist is kept as its analyzed plan,
-    a ``SESSION`` entry keyed ``("read", name, sf_dir)``. Every later call
-    returns a fresh ``DataFrame`` over that plan, bound to the caller's
-    session, so optimization, physical planning, AQE and execution still
-    run per call and no shuffle, broadcast or stage output is reused. A
-    build that breaks the rule (a pipeline, a write, a stream, a corpus op
-    that persists its intermediates) is returned as it is and built again
-    on the next call.
+    outside ``SESSION`` builds (a first table load or index build may run
+    jobs) and uses no ``RUN`` entry or tracked persist is kept as its
+    analyzed plan, a ``SESSION`` entry keyed ``("read", name, sf_dir)``.
+    Every later call returns a fresh ``DataFrame`` over that plan, bound
+    to the caller's session, so optimization, physical planning, AQE and
+    execution still run per call. The plan may read the data blocks of a
+    ``SESSION`` entry (a corpus index, an initial dim), but no shuffle,
+    broadcast or stage output of an earlier call is reused. A build that
+    breaks the rule (a pipeline, a write, a stream, a corpus op that
+    persists its intermediates) is returned as it is and built again on
+    the next call.
 
     Contract: a prepared read stays valid while the files under ``sf_dir``
     do not change within the session, the same contract as the

@@ -15,7 +15,12 @@ from pyspark.sql import functions as F
 from ..functions import text as TX
 from ..functions.parity import round_dp, sql_round_dp
 from ..operators import dedup as DD
-from ..sources.tables import load_table_spread, load_tables
+from ..sources.tables import (
+    load_table_fanned,
+    load_table_spread,
+    load_tables,
+    table_identity,
+)
 
 N_SHINGLE = 3
 JACCARD_TAU = 0.2
@@ -209,16 +214,22 @@ WHERE CAST(inter AS DOUBLE) / (s1.sz + s2.sz - inter) >= {JACCARD_TAU}
 # ---------------------------------------------------------------------------
 
 
-def doc_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return DD.minhash_lsh_pairs(
-        _docs(spark, sf_dir),
+def _minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The MinHash-LSH index of the corpus file, a ``SESSION`` entry
+    shared by the pairs and accuracy queries."""
+    return DD.minhash_index(
+        load_table_fanned(spark, sf_dir, "documents"),
+        table_identity(sf_dir, "documents"),
         "text",
         "doc_id",
         n=N_SHINGLE,
         k=MINHASH_K,
         bands=MINHASH_BANDS,
-        threshold=JACCARD_TAU,
     )
+
+
+def doc_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return DD.minhash_lsh_pairs(_minhash(spark, sf_dir), threshold=JACCARD_TAU)
 
 
 def _sql_minhash_prefix() -> str:
@@ -280,14 +291,7 @@ WHERE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
 
 
 def doc_minhash_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return DD.minhash_accuracy_pairs(
-        _docs(spark, sf_dir),
-        "text",
-        "doc_id",
-        n=N_SHINGLE,
-        k=MINHASH_K,
-        bands=MINHASH_BANDS,
-    )
+    return DD.minhash_accuracy_pairs(_minhash(spark, sf_dir))
 
 
 def _sql_minhash_accuracy_oracle() -> str:

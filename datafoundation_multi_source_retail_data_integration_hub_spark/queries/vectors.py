@@ -14,10 +14,12 @@ from pyspark.sql import functions as F
 
 from ..operators import storage
 from ..operators.similarity import (
+    IvfIndex,
     brute_force_topk,
     cosine_neardup_pairs,
     hyperplanes,
     ivf_ann_topk,
+    ivf_index,
     lsh_ann_topk,
     planes_for_corpus,
     sql_dot,
@@ -25,7 +27,12 @@ from ..operators.similarity import (
 )
 from ..functions.concurrent import overlap
 from ..functions.local import local_frame
-from ..sources.tables import load_table_spread, load_tables
+from ..sources.tables import (
+    load_table_fanned,
+    load_table_spread,
+    load_tables,
+    table_identity,
+)
 
 N_QUERIES = 10
 TOP_K = 5
@@ -70,6 +77,11 @@ def _n_planes(spark: SparkSession, sf_dir: str) -> int:
             min_planes=N_PLANES,
         ),
     )
+
+
+def _query_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The standard query set: the first ``N_QUERIES`` corpus vectors."""
+    return _emb(spark, sf_dir, spread=False).filter(F.col("vec_id") < N_QUERIES)
 
 
 def embedding_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -172,15 +184,19 @@ IVF_STRIDE = 100
 IVF_NPROBE = 2
 
 
-def embedding_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _emb(spark, sf_dir, spread=False)
-    queries = emb.filter(F.col("vec_id") < N_QUERIES)
-    return ivf_ann_topk(
-        emb,
-        queries,
-        TOP_K,
+def _ivf(spark: SparkSession, sf_dir: str) -> IvfIndex:
+    """The stride-quantizer IVF index of the corpus file, a ``SESSION``
+    entry shared by the ANN query and the quality report."""
+    return ivf_index(
+        _emb(spark, sf_dir, spread=False),
+        table_identity(sf_dir, "embeddings"),
         centroid_stride=IVF_STRIDE,
-        nprobe=IVF_NPROBE,
+    )
+
+
+def embedding_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return ivf_ann_topk(
+        _ivf(spark, sf_dir), _query_vectors(spark, sf_dir), TOP_K, nprobe=IVF_NPROBE
     )
 
 
@@ -537,23 +553,20 @@ PQ_ITER = KMEANS_ITER
 
 
 def embedding_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PQ-ADC approximate top-k (see ``operators.pq``): train ``PQ_M``
-    per-subspace codebooks with the deterministic k-means, byte-encode
-    the corpus, and answer the standard query set by asymmetric distance
-    — the ``m`` bytes/vector regime brute-force ANN runs at 100 TB."""
-    from ..operators.clustering import prepare_vectors
-    from ..operators.pq import adc_topk, encode, train_codebooks
+    """PQ-ADC approximate top-k (see ``operators.pq``): ``PQ_M``
+    per-subspace codebooks from the deterministic k-means and the
+    byte-encoded corpus form a ``SESSION`` index per corpus file; a
+    request answers the standard query set by asymmetric distance over
+    it — the ``m`` bytes/vector regime brute-force ANN runs at 100 TB."""
+    from ..operators.clustering import double_vectors
+    from ..operators.pq import adc_topk, pq_index
 
-    emb = _emb(spark, sf_dir)
-    prep = prepare_vectors(emb)
-    # the PQ_M subspace fits are memoized per corpus dir — repeat
-    # invocations (bench warm+timed, driver) skip the training jobs
-    books = train_codebooks(
-        prep, PQ_M, PQ_SUB, k=PQ_K, n_iter=PQ_ITER, cache_key=(sf_dir,),
-        train_mod=KMEANS_TRAIN_MOD,
+    books, codes = pq_index(
+        load_table_fanned(spark, sf_dir, "embeddings"),
+        table_identity(sf_dir, "embeddings"),
+        PQ_M, PQ_SUB, k=PQ_K, n_iter=PQ_ITER, train_mod=KMEANS_TRAIN_MOD,
     )
-    codes = encode(prep, books, PQ_SUB)
-    queries = prep.filter(F.col("vec_id") < N_QUERIES)
+    queries = double_vectors(_query_vectors(spark, sf_dir))
     return adc_topk(codes, queries, books, PQ_SUB, TOP_K)
 
 
@@ -855,7 +868,7 @@ def ann_quality_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     on the same corpus and query set. PQ scores every pair by design
     (the m-bytes-per-vector brute-force regime): its 'candidates' equal
     the full pair count; its win is bytes moved, not pairs skipped."""
-    from ..operators.similarity import exact_topk_per_query, ivf_scored, lsh_scored
+    from ..operators.similarity import exact_topk_per_query, ivf_probe, lsh_scored
 
     emb = _emb(spark, sf_dir)
     queries = emb.filter(F.col("vec_id") < N_QUERIES)
@@ -863,9 +876,7 @@ def ann_quality_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     lsh = lsh_scored(
         emb, queries, n_planes=_n_planes(spark, sf_dir), dim=DIM
     ).persist()
-    ivf = ivf_scored(
-        emb, queries, centroid_stride=IVF_STRIDE, nprobe=IVF_NPROBE
-    ).persist()
+    ivf = ivf_probe(_ivf(spark, sf_dir), queries, nprobe=IVF_NPROBE).persist()
     try:
         # ~12 independent counts, overlapped in two phases. Phase 1
         # materializes every shared frame (concurrent first reads of one

@@ -81,8 +81,23 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             df = _normalize_event_time(df, col)
         return df
 
-    df = storage.memo(spark, storage.SESSION, ("table", sf_dir, name), build)
+    key = ("table", *table_identity(sf_dir, name))
+    df = storage.memo(spark, storage.SESSION, key, build)
     return df.toDF(*df.columns)
+
+
+def table_identity(sf_dir: str, name: str) -> tuple:
+    """``(path, size, mtime_ns)`` of a corpus table: the key part that
+    makes a replaced file a new entry, for relations and corpus indexes.
+    A directory table reads its own stat, whose mtime moves when a file
+    is added, removed or renamed in it. Where the path cannot be stat'ed
+    (object stores, a missing table) the path alone is the identity."""
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    try:
+        st = os.stat(path)
+    except OSError:
+        return (path,)
+    return (path, st.st_size, st.st_mtime_ns)
 
 
 def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:
@@ -187,21 +202,27 @@ def load_table_spread(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     The spread frame is a ``RUN`` entry, released with its persist by
     ``unpersist_all``: composite reports that run several spread-loading
     queries in one call (ann_quality_report runs the brute-force truth
-    and the PQ probe beside its own corpus load) share one cached copy
-    and one exchange. Callers get a fresh ``toDF`` re-projection over the
+    beside its own corpus load) share one cached copy and one exchange. Callers get a fresh ``toDF`` re-projection over the
     same cached plan, so self-joins across two loads stay unambiguous.
     """
-    df = load_table(spark, sf_dir, name)
-    n = scan_fanout(spark, sf_dir, name)
-    if not n:
-        return df
+    if not scan_fanout(spark, sf_dir, name):
+        return load_table(spark, sf_dir, name)
     spread = storage.memo(
         spark,
         storage.RUN,
         ("spread", sf_dir, name),
-        lambda: storage.persist_tracked(df.repartition(n)),
+        lambda: storage.persist_tracked(load_table_fanned(spark, sf_dir, name)),
     )
     return spread.toDF(*spread.columns)
+
+
+def load_table_fanned(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """``load_table`` with ``scan_fanout``'s round-robin repartition and
+    no persist: the input of a ``SESSION`` index build, which persists
+    its own working set for as long as the build runs."""
+    df = load_table(spark, sf_dir, name)
+    n = scan_fanout(spark, sf_dir, name)
+    return df.repartition(n) if n else df
 
 
 def table_bytes(sf_dir: str, *names: str) -> int:

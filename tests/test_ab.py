@@ -5,6 +5,7 @@ over too few pairs, or one inside the parent's spread, is not claimed."""
 from __future__ import annotations
 
 import importlib.util
+import json
 from pathlib import Path
 
 import numpy as np
@@ -79,3 +80,27 @@ def test_the_claim_needs_ten_pairs_nine_won_and_a_gap_beyond_the_iqr():
     # the same rule for a latency, where lower is better
     c = ab.compare(a, [x - 0.5 for x in a], higher_is_better=False)
     assert (c["wins"], c["claim"]) == (10, True)
+
+
+def test_a_run_reads_timed_and_first_call_medians_per_kind():
+    meta = {
+        "warmup_by_kind": [["kpi_summary", 8.3], ["embedding_ann_pq", 4.6], ["kpi_summary", 1.1]],
+        "latency_by_kind": {"kpi_summary": [0.12, 0.2, 0.15], "embedding_ann_pq": [0.3]},
+        "timed_ops": 4,
+        "steal_s": 0.4,
+    }
+    result = {"failed": 0, "metrics": {"ops_per_s": {"value": 4.1, "unit": "1/s"}}}
+    out = "log line\n" + json.dumps({"meta": meta}) + "\n" + json.dumps(result) + "\n"
+    run = ab.parse_run(out)
+    assert run["kinds"] == {"kpi_summary": 0.15, "embedding_ann_pq": 0.3}
+    assert run["first"] == {"kpi_summary": pytest.approx(4.7), "embedding_ann_pq": 4.6}
+    assert (run["metrics"], run["timed_ops"], run["failed"]) == ({"ops_per_s": 4.1}, 4, 0)
+    rows = ab.report({"A": [run] * 5, "B": [run] * 5}, {"ops_per_s": True})
+    labels = [r.split(" | ")[0].lstrip("| ") for r in rows[2:]]
+    assert labels == [
+        "ops_per_s",
+        "kpi_summary (s)",
+        "embedding_ann_pq (s)",
+        "kpi_summary first call (s)",
+        "embedding_ann_pq first call (s)",
+    ]

@@ -17,6 +17,7 @@ from datafoundation_multi_source_retail_data_integration_hub_spark.operators.clu
 from datafoundation_multi_source_retail_data_integration_hub_spark.operators.similarity import (
     brute_force_topk,
     ivf_ann_topk,
+    ivf_index,
 )
 from datafoundation_multi_source_retail_data_integration_hub_spark.sources.tables import (
     load_table,
@@ -71,7 +72,8 @@ def test_ivf_with_kmeans_centroids(spark, emb):
     )
     queries = emb.filter(F.col("vec_id") < 5)
     k = 5
-    ann = ivf_ann_topk(emb, queries, k, nprobe=2, centroids=cents_df)
+    index = ivf_index(emb, ("kmeans-quantizer", SF_SMOKE, K, DIM), centroids=cents_df)
+    ann = ivf_ann_topk(index, queries, k, nprobe=2)
     exact = brute_force_topk(emb, queries, k)
     got = {(r["query_id"], r["neighbor_id"]) for r in ann.collect()}
     want = {(r["query_id"], r["neighbor_id"]) for r in exact.collect()}

@@ -93,6 +93,8 @@ def test_skipped_stages_add_no_tasks(log_dir):
 # job counts of the measured (second) call, recorded on 4 cores; a
 # pipeline may get cheaper, never dearer. The three SCD2 caps are the
 # one-exchange merge's counts (the join-chain merge ran 42, 15 and 23).
+# The three corpus searches probe their session-held index (the
+# per-request rebuild ran 7, 7 and 10 on the benchmark's corpus).
 # The count can move with timing (one full-suite run read 43 for the
 # join-chain scd2_partition_merge where quiet runs read 42; an AQE stage
 # submitted before a re-plan drops it is one way),
@@ -105,6 +107,9 @@ JOB_CAPS = {
     "stream_user_session_stats": 11,
     "fact_layout_skipping": 24,
     "warehouse_key_erasure": 17,
+    "embedding_ann_ivf": 6,
+    "embedding_ann_pq": 3,
+    "doc_minhash_lsh_pairs": 4,
 }
 
 _PROFILE = """

@@ -181,7 +181,7 @@ def test_warm_pure_read_is_not_rebuilt_and_executes_afresh(spark, monkeypatch):
 
 
 def test_builds_that_run_jobs_or_persist_are_rebuilt(spark, monkeypatch):
-    probe_calls, minhash_calls = [], []
+    probe_calls, jaccard_calls = [], []
 
     def counting_probe(spark, sf_dir):
         probe_calls.append(1)
@@ -190,15 +190,16 @@ def test_builds_that_run_jobs_or_persist_are_rebuilt(spark, monkeypatch):
         return df
 
     monkeypatch.setitem(relational.QUERIES, "zz_counting_probe", counting_probe)
-    _counting(monkeypatch, textops, "doc_minhash_lsh_pairs", minhash_calls)
+    # the postings self-join persists its shingle postings per call
+    _counting(monkeypatch, textops, "doc_ngram_jaccard_pairs", jaccard_calls)
     qs = entry.queries()
     for _ in range(3):
         qs["zz_counting_probe"](spark, SF_SMOKE).collect()
     for _ in range(2):
-        qs["doc_minhash_lsh_pairs"](spark, SF_SMOKE).collect()
+        qs["doc_ngram_jaccard_pairs"](spark, SF_SMOKE).collect()
         storage.unpersist_all()
     assert len(probe_calls) == 3
-    assert len(minhash_calls) == 2
+    assert len(jaccard_calls) == 2
 
 
 def test_cold_build_is_prepared_on_its_next_call(spark, monkeypatch, tmp_path):

@@ -7,17 +7,18 @@ side; side A runs first in even pairs and side B in odd ones, so a drift
 of the machine over the session lands on both sides alike.
 
 Per end-to-end metric of ``BENCHMARK.json``, and per op kind (the run's
-median latency of that kind), it reports each side's median and range,
-the pairs B won and lost (ties count for neither), and the one-sided
-sign-test p that B wins at least that often by chance. The keep rule
-keeps B on a metric when B's range lies wholly on the better side of A's
-or p < 0.05. The claim rule is stricter: at least 10 pairs, B better in
-at least 9 of every 10, and B's median better than A's by more than A's
-interquartile range, which is printed too. Both rules judge a metric
-named before the runs: across the dozen or so rows printed, one may
-read "keep" by chance. Each run's line gives its blocks timed, since a
-run that times a second block reads warmer ops. Every run lasts the
-benchmark's own ``run_seconds``.
+median latency of that kind in the timed window, and of its first calls
+in set-up, where a session builds what its later calls reuse), it
+reports each side's median and range, the pairs B won and lost (ties
+count for neither), and the one-sided sign-test p that B wins at least
+that often by chance. The keep rule keeps B on a metric when B's range
+lies wholly on the better side of A's or p < 0.05. The claim rule is
+stricter: at least 10 pairs, B better in at least 9 of every 10, and B's
+median better than A's by more than A's interquartile range, which is
+printed too. Both rules judge a metric named before the runs: across
+the two dozen or so rows printed, one may read "keep" by chance. Each
+run's line gives its blocks timed, since a run that times a second block
+reads warmer ops. Every run lasts the benchmark's own ``run_seconds``.
 
 Run from the repository root:
 
@@ -107,14 +108,25 @@ def run_once(tree: str, workload: str, seed: int, seconds: float) -> dict:
          "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"],
         cwd=tree, capture_output=True, text=True, timeout=1800,
     )
-    lines = proc.stdout.strip().splitlines()
-    if proc.returncode != 0 or len(lines) < 2:
+    if proc.returncode != 0 or len(proc.stdout.strip().splitlines()) < 2:
         raise RuntimeError(f"perfbench failed in {tree} (seed {seed}):\n{proc.stderr[-3000:]}")
+    return parse_run(proc.stdout)
+
+
+def parse_run(stdout: str) -> dict:
+    """A run's metrics and meta from its last two stdout lines: per op
+    kind, the median latency of its timed calls (``kinds``) and of its
+    set-up calls, which are each kind's first calls (``first``)."""
+    lines = stdout.strip().splitlines()
     meta = json.loads(lines[-2])["meta"]
     result = json.loads(lines[-1])
+    first: dict[str, list[float]] = {}
+    for kind, latency in meta["warmup_by_kind"]:
+        first.setdefault(kind, []).append(latency)
     return {
         "metrics": {k: v["value"] for k, v in result["metrics"].items()},
         "kinds": {k: statistics.median(v) for k, v in meta["latency_by_kind"].items()},
+        "first": {k: statistics.median(v) for k, v in first.items()},
         "timed_ops": meta["timed_ops"],
         "steal_s": meta["steal_s"],
         "failed": result["failed"],
@@ -144,9 +156,12 @@ def report(runs: dict[str, list[dict]], metrics: dict[str, bool]) -> list[str]:
         name: (higher, [r["metrics"][name] for r in runs["A"]], [r["metrics"][name] for r in runs["B"]])
         for name, higher in metrics.items()
     }
-    kinds = [k for k in runs["A"][0]["kinds"] if all(k in r["kinds"] for r in runs["A"] + runs["B"])]
-    for k in kinds:
-        series[f"{k} (s)"] = (False, [r["kinds"][k] for r in runs["A"]], [r["kinds"][k] for r in runs["B"]])
+    every = runs["A"] + runs["B"]
+    for label, field in (("", "kinds"), (" first call", "first")):
+        for k in [k for k in every[0][field] if all(k in r[field] for r in every)]:
+            series[f"{k}{label} (s)"] = (
+                False, [r[field][k] for r in runs["A"]], [r[field][k] for r in runs["B"]]
+            )
     for name, (higher, a, b) in series.items():
         c = compare(a, b, higher)
         lines.append(
