@@ -16,8 +16,8 @@ Spark shape:
   plan as literals, exactly like ``assign_clusters``); the corpus never
   shuffles. The encoded frame is ``m`` ints per vector.
 - **index**: ``pq_index`` trains and encodes once and localCheckpoints
-  the codes; with a ``cache_key`` the codebooks and codes are a
-  ``SESSION`` entry, so a request only runs the ADC probe below.
+  the codes; codebooks and codes are a ``SESSION`` entry per corpus, so
+  a request only runs the ADC probe below.
 - **ADC query**: the query side (tiny) precomputes its per-subspace
   distance TABLE to every codebook centroid as a map literal-keyed
   column, broadcasts, and the scored join is ``m`` map lookups + an

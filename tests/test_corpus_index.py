@@ -73,7 +73,8 @@ def test_a_rewritten_corpus_file_misses_the_index(spark, monkeypatch, tmp_path, 
     path = f"{sf_dir}/{table}.parquet"
     rows = pq.read_table(path)
     pq.write_table(rows.filter(pc.not_equal(pc.bit_wise_and(rows[id_col], 3), 1)), path)
-    looked.clear(), built.clear()
+    looked.clear()
+    built.clear()
     compare(spark, sf_dir, query, module.ORACLES[name], f"{name} after the rewrite")
     assert len(built) == 1 and built[0] != old
     assert old not in looked
